@@ -1432,10 +1432,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the SAME query as ft_match_or, served from a STREAMED index:
         # documents land as two deterministic micro-batches
         # (plans/manifest.ingest_segment_batch — the foreachBatch sink's
-        # unit), batch 0's segments are COMPACTED (replaces-row commit),
-        # and serving goes through serve_resumable_index (n_docs/avg_dl
-        # from live manifest rows + denormalized dl, terms from one
-        # postings agg). Value-checked by the same BM25 oracle: the
+        # unit), batch 0's segments are COMPACTED (one add+remove log
+        # commit), and serving goes through serve_resumable_index
+        # (n_docs/avg_dl from the live segments' log entries, terms from
+        # one postings agg). Value-checked by the same BM25 oracle: the
         # streamed+compacted lifecycle is score-identical to a batch
         # build on the driver record.
         import tempfile

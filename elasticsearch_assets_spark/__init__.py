@@ -13,7 +13,7 @@ Spark engine:
 - ``operators``            — reader semantics (date/id slicing, count, geo),
                              bulk-writer semantics (index/create/upsert/delete),
                              dedup, similarity search, text analysis
-- ``plans``                — lineage manifests + checkpoint/resume
+- ``plans``                — index commit log + checkpoint/resume
 - ``streaming``            — delayed tumbling windows (persistent reader mode)
 - ``sources``              — document-table readers / state storage
 

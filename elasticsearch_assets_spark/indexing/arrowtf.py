@@ -184,10 +184,11 @@ def encode_tf(df, text_col: str = "text", keep: list[str] | None = None):
 
     keep = list(keep or [])
     reserved = {"dl", "terms", "tfs"}
-    assert not reserved & set(keep), f"keep collides with {reserved}"
+    if reserved & set(keep):
+        raise ValueError(f"keep collides with {reserved}")
     sel = ensure_scan_parallelism(df.select(*keep, F.col(text_col)))
     schema = "".join(
-        f"{c} {sel.schema[c].dataType.simpleString()}, " for c in keep
+        f"`{c}` {sel.schema[c].dataType.simpleString()}, " for c in keep
     )
     return sel.mapInArrow(
         tf_encoder(text_col),
@@ -348,7 +349,7 @@ def encode_gram_stats(df, text_col: str, id_col: str, ns: tuple):
 
     id_type = df.schema[id_col].dataType.simpleString()
     sel = ensure_scan_parallelism(df.select(F.col(id_col), F.col(text_col)))
-    schema = f"{id_col} {id_type}" + "".join(
+    schema = f"`{id_col}` {id_type}" + "".join(
         f", _tot{n} int, _dist{n} int, _top{n} int" for n in ns
     )
     return sel.mapInArrow(fn, schema)

@@ -166,7 +166,8 @@ def minhash_lsh_candidates(
     the counts with caps.drop_stats(obs) after any action. Returns
     distinct (id_a, id_b) with id_a < id_b.
     """
-    assert k % bands == 0
+    if k % bands:
+        raise ValueError(f"k={k} must be a multiple of bands={bands}")
     rows = k // bands
     sig = minhash_signatures(df, text_col, id_col, n, k)
     # one pass: band signatures as an array column + posexplode (a
@@ -289,7 +290,8 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 16) -> DataFr
     nibble). Fingerprint bit b = majority vote weighted by tf.
     Fully expressible as SQL in both engines. Returns (<id>, simhash)
     with simhash as a bits-length bitstring."""
-    assert bits <= 32
+    if bits > 32:
+        raise ValueError(f"simhash bits={bits} exceeds 32")
     # r7: per-(id, tok) tf straight from the Arrow encoder batch —
     # identical counts, but the explode + groupBy(id, tok) shuffle and
     # the JVM analyzer pass are gone (guide §2.4/§4.2; same shape as

@@ -46,6 +46,28 @@ class CommitConflictError(RuntimeError):
     """All retry_on_conflict attempts lost the commit race."""
 
 
+def write_exclusive(target: str, obj) -> bool:
+    """Atomically create ``target`` holding ``obj`` as JSON — the one
+    commit primitive for versioned state files (StateStorage commits,
+    the index commit log in plans/manifest.py). The JSON goes to a
+    fsynced temp file beside ``target``, which is then hard-linked to
+    the target name: link(2) is atomic and fails if the name exists, so
+    exactly ONE writer creates each name and it only ever appears fully
+    written. Returns False when ``target`` already exists."""
+    tmp = os.path.join(os.path.dirname(target), f"_tmp-{uuid.uuid4().hex}.json")
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    try:
+        os.link(tmp, target)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+
+
 class StateStorage:
     # class-level default: bare instances (tests exercise the pointer
     # layer via __new__) still resolve versions by full listing
@@ -119,22 +141,7 @@ class StateStorage:
         return self._versioned_state()[0]
 
     def _try_commit(self, version: int, state: dict) -> bool:
-        """CAS: write the full state to a temp file, then hard-link it
-        to the versioned commit name — link(2) is atomic and fails if
-        the name exists, so exactly ONE writer claims each version and
-        the name only ever appears fully written."""
-        tmp = os.path.join(self.path, f"_tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, self._commit_path(version))
-            return True
-        except FileExistsError:
-            return False
-        finally:
-            os.unlink(tmp)
+        return write_exclusive(self._commit_path(version), state)
 
     def _next_dir(self, kind: str) -> str:
         import time as _t

@@ -1,14 +1,15 @@
 """Structured Streaming index ingest: file source -> foreachBatch ->
-manifest-committed segments.
+log-committed segments.
 
 The reference's persistent-mode reader turns an endless document
 stream into bounded, individually-committed slices (dateSlicer.ts:77-83
 persistent lifecycle; date-helpers.ts:267 delayedStreamSegment). The
-write-side Spark-native equivalent: each micro-batch becomes ``n_parts`` new index segments
-through plans/manifest.ingest_segment_batch, whose one-row manifest
-overwrite is the commit point — the same lineage + resume machinery
-the batch builder uses, so a streamed index is served, compacted, and
-crash-recovered identically to a batch-built one.
+write-side Spark-native equivalent: each micro-batch becomes ``n_parts``
+new index segments through plans/manifest.ingest_segment_batch, whose
+per-segment ``add`` in the index's commit log is the commit point — the
+same lineage + resume machinery the batch builder uses, so a streamed
+index is served, compacted, and crash-recovered identically to a
+batch-built one.
 
 Exactly-once story (no distributed transaction needed):
 - the file source's checkpoint re-delivers a failed batch with the
@@ -50,7 +51,7 @@ def stream_index_ingest(
     continuously on the default trigger. Restarting with the same
     ``checkpoint_dir`` processes only files not yet committed to the
     checkpoint — the streaming analogue of the batch builder's
-    manifest resume.
+    commit-log resume.
     """
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:

@@ -233,6 +233,18 @@ def test_arrow_encoder_matches_jvm_reference(spark, tmp_path):
     assert t1.exceptAll(t2).count() == 0 and t2.exceptAll(t1).count() == 0
     assert got.n_docs == ref.n_docs and got.avg_dl == ref.avg_dl
 
+    # encode_tf directly: kept columns are quoted in its output schema
+    # (a name with a space survives), reserved output names raise
+    from elasticsearch_assets_spark.indexing.arrowtf import encode_tf
+
+    odd = docs.withColumnRenamed("lang", "src lang")
+    enc = encode_tf(odd, "content", keep=["doc_id", "src lang"])
+    assert sorted(
+        (r["doc_id"], r["src lang"], r["dl"]) for r in enc.collect()
+    ) == sorted((r["doc_id"], r["lang"], r["dl"]) for r in c.collect())
+    with pytest.raises(ValueError, match="collides"):
+        encode_tf(docs, "content", keep=["doc_id", "dl"])
+
 
 def test_arrow_analyze_fuzz_parity():
     """arrow_analyze (RE2) must tokenize byte-identically to the pure-

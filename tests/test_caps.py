@@ -47,6 +47,8 @@ def test_minhash_drop_stats_clean(spark):
     s = drop_stats(obs)
     assert s == {"dropped_rows": 0, "dropped_buckets": 0,
                  "largest_dropped_bucket": 0}
+    with pytest.raises(ValueError, match="multiple of bands"):
+        dedup.minhash_lsh_candidates(docs, "text", "doc_id", k=10, bands=4)
 
 
 def test_simhash_drop_stats(degenerate_docs):
@@ -60,6 +62,8 @@ def test_simhash_drop_stats(degenerate_docs):
     # 30 identical docs × 3 bands dropped
     assert s["dropped_rows"] == 90, s
     assert s["dropped_buckets"] == 3, s
+    with pytest.raises(ValueError, match="exceeds 32"):
+        dedup.simhash(degenerate_docs, "text", "doc_id", bits=33)
 
 
 def test_near_dup_pairs_drop_stats(spark):

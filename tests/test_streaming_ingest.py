@@ -235,16 +235,6 @@ def test_serve_resumable_index_matches_batch_scoring(spark, corpus_pdf, tmp_path
         M.ingest_segment_batch(docs, idx, batch_id=9, n_parts=2, n_buckets=4,
                                keep_positions=True)
 
-    # pre-meta index (no recorded n_buckets): explicit value required
-    import json
-    mp = M._build_meta_path(idx)
-    meta = json.load(open(mp))
-    del meta["n_buckets"]
-    json.dump(meta, open(mp, "w"))
-    with pytest.raises(ValueError, match="n_buckets"):
-        M.serve_resumable_index(spark, idx)
-    assert M.serve_resumable_index(spark, idx, n_buckets=8).n_docs == 150
-
 
 def test_ingest_doc_id_col_passthrough(spark, corpus_pdf, tmp_path):
     """doc_id_col uses the caller's id verbatim (testdata documents

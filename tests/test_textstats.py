@@ -114,6 +114,17 @@ def test_repetition_known_values(spark):
     assert out[4] == (0.0, 0.0, 0.0, 0.0)
     # "zz zz zz zz": 2g 3 total 1 distinct -> dup 2/3 top 1; 3g 2/1
     assert out[5] == (round(2 / 3, 4), 1.0, 0.5, 1.0)
+    # an id column whose name needs quoting in the encoder's schema
+    odd = textstats.repetition(
+        df.withColumnRenamed("doc_id", "doc id"), "text", "doc id"
+    )
+    assert {
+        r["doc id"]: (
+            r["dup_2gram_frac"], r["top_2gram_frac"],
+            r["dup_3gram_frac"], r["top_3gram_frac"],
+        )
+        for r in odd.collect()
+    } == out
 
 
 def test_repetition_matches_duckdb_fold(spark):

@@ -209,3 +209,31 @@ def test_scope_union_takes_widest(spark, tmp_path):
         for r in M.read_deletes(spark, idx).collect()
     }
     assert got == {1: 8, 2: M._NO_BOUND}
+
+
+def test_unpurged_same_length_upsert_counts_every_copy_in_avg_dl(
+    spark, tmp_path
+):
+    """An upsert that keeps a doc's token count leaves two live copies
+    with the same (doc_id, dl) until a purging merge. n_docs counts
+    both copies, so avg_dl must sum dl over both as well — not over
+    distinct (doc_id, dl) pairs."""
+    pdf = generate_corpus_pandas(20, seed=3)
+    pdf["content"] = pdf["content"] + " zzzbefore"
+    idx = str(tmp_path / "idx")
+    M.ingest_segment_batch(
+        spark.createDataFrame(pdf), idx, batch_id=0, n_parts=N_PARTS, n_buckets=8
+    )
+    upd = pdf.iloc[:1].copy()
+    upd["content"] = upd["content"].str.replace("zzzbefore", "zzzafter")
+    M.upsert_segment_batch(
+        spark.createDataFrame(upd), idx, batch_id=1, n_parts=N_PARTS, n_buckets=8
+    )
+
+    served = M.serve_resumable_index(spark, idx)
+    raw = M.serve_resumable_index(spark, idx, apply_deletes=False).postings
+    copies = raw.select("doc_id", "part", "dl").distinct()
+    assert copies.count() == 21  # the edited doc lives in two segments
+    sum_dl = copies.agg(F.sum("dl")).collect()[0][0]
+    assert served.n_docs == 21
+    assert served.avg_dl == sum_dl / served.n_docs
