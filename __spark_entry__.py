@@ -71,23 +71,12 @@ def _docs_index(spark: SparkSession, sf_dir: str) -> IndexTables:
             source_cols=("lang", "source", "n_chars"),
         )
         # query serving reads the index many times: persist the final
-        # postings/terms/positions frames (the on-disk equivalent is
-        # read_index over the bucket-partitioned parquet layout).
-        # postings and positions are independent — warm them
-        # concurrently instead of serially.
-        import threading
-
+        # postings (positions column included) and terms frames (the
+        # on-disk equivalent is read_index over the bucket-partitioned
+        # parquet layout)
         idx.postings = idx.postings.persist()
         idx.terms = idx.terms.persist()
-        warms = [idx.postings.count]
-        if idx.positions is not None:
-            idx.positions = idx.positions.persist()
-            warms.append(idx.positions.count)
-        threads = [threading.Thread(target=w) for w in warms]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
+        idx.postings.count()
         _INDEX_CACHE[key] = idx
     return _INDEX_CACHE[key]
 

@@ -6,7 +6,8 @@ the Elasticsearch query semantics they delegate to) as an idiomatic
 Spark engine:
 
 - ``functions.analyzer``   — code-aware tokenization (identifier/camelCase/path)
-- ``indexing``             — inverted-index build: postings, term dict, doc norms,
+- ``indexing``             — inverted-index build: postings (optional positions
+                             column), term dict, doc norms,
                              varbyte-packed blocks, salted shuffle for hot terms
 - ``query``                — Lucene-syntax parser -> AST -> DataFrame plans,
                              BM25 (k1=1.2, b=0.75) scoring, block-max WAND top-k

@@ -63,22 +63,8 @@ def _encode_batch(batch: pa.RecordBatch, text_col: str) -> pa.RecordBatch:
     import numpy as np
     import pyarrow.compute as pc
 
-    n = batch.num_rows
-    content = batch.column(batch.schema.get_field_index(text_col))
-    toks = arrow_analyze(content)
-
-    # token counts per row (null text -> 0), flat token stream aligned
-    # with them (list_flatten skips null rows, matching fill_null(0))
-    counts = np.asarray(pc.fill_null(pc.list_value_length(toks), 0))
-    flat = pc.list_flatten(toks)
-    doc_idx = np.repeat(np.arange(n, dtype=np.int64), counts)
-
-    # drop empty tokens (the JVM filter(t != '') step)
-    keep = pc.not_equal(flat, "")
-    keep_np = np.asarray(keep)
-    if len(keep_np):
-        flat = flat.filter(keep)
-        doc_idx = doc_idx[keep_np]
+    n, flat, doc_idx, counts = _flat_tokens(batch, text_col)
+    dl = counts.astype(np.int32)
 
     # per-(doc, term) tf: dictionary codes + stable integer lexsort +
     # boundary run-length — all vectorized, no Python per-row work
@@ -97,12 +83,10 @@ def _encode_batch(batch: pa.RecordBatch, text_col: str) -> pa.RecordBatch:
         gdoc = ds[starts]
         terms_flat = dictionary.take(pa.array(cs[starts]))
         groups_per_doc = np.bincount(gdoc, minlength=n)
-        dl = np.bincount(doc_idx, minlength=n).astype(np.int32)
     else:
         tf = np.empty(0, dtype=np.int32)
         terms_flat = pa.array([], type=pa.string())
         groups_per_doc = np.zeros(n, dtype=np.int64)
-        dl = np.zeros(n, dtype=np.int32)
 
     offsets = np.zeros(n + 1, dtype=np.int32)
     np.cumsum(groups_per_doc, out=offsets[1:])
@@ -197,7 +181,7 @@ def encode_tf(df, text_col: str = "text", keep: list[str] | None = None):
 
 
 def _flat_tokens(batch: pa.RecordBatch, text_col: str):
-    """Analyzer prelude shared by the window-based encoders: returns
+    """Analyzer prelude shared by every encoder here: returns
     (nrows, flat, doc_idx, counts) — the filtered flat token stream,
     each token's row index, and per-row token counts."""
     import numpy as np

@@ -1,16 +1,18 @@
 """Inverted-index construction as a declarative DataFrame plan.
 
 Replaces the reference's delegated "Layer B" index (SURVEY.md §2.6): the
-Elasticsearch/Lucene inverted index is re-expressed as three Spark
-tables persisted as parquet (Iceberg-style layout):
+Elasticsearch/Lucene inverted index is re-expressed as Spark tables
+persisted as parquet (Iceberg-style layout):
 
-  postings/   (term, doc_id, tf, positions, dl)   partitioned by bucket
+  postings/   (term, doc_id, tf, dl[, positions])  partitioned by bucket;
+              positions (array<int>, tf == size(positions)) only when
+              built with keep_positions
   terms/      (term, df)                           the term dictionary
   terms_rev/  (rev, term, df)                      reversed dictionary,
               range-partitioned+sorted by rev — `*suffix` wildcards
               become a pruned prefix scan (Lucene ReverseStringFilter)
   doc_norms/  (doc_id, dl, content_sha, <source>)  doc store + norms
-  stats/      single row: (n_docs, avg_dl)
+  stats.json  {n_docs, avg_dl, n_buckets}
 
 Design notes for 10^12-file scale:
 
@@ -18,7 +20,7 @@ Design notes for 10^12-file scale:
   (never monotonically_increasing_id — SURVEY.md §7.3).
 - Document length (dl) is DENORMALIZED into each posting row, exactly as
   Lucene stores norms with postings — this removes the doc_norms join
-  from the query path; scoring needs only a broadcast idf map.
+  from the query path; scoring needs only the query terms' df.
 - postings are hash-partitioned by term bucket (pmod(xxhash64(term), B))
   and written with partitionBy(bucket): a query on T terms prunes to
   ≤ T parquet partitions (directory-level pruning + row-group predicate
@@ -28,8 +30,15 @@ Design notes for 10^12-file scale:
   which this layout avoids entirely by keeping postings as rows (blocks
   are packed separately in indexing/blockpack.py with doc_id-range
   chunking so no single task ever owns a whole hot term).
-- All expressions are JVM built-ins: tokenize/posexplode/groupBy —
-  whole-stage codegen end to end, no Python in the build path.
+- Positions are a COLUMN of postings, not a second table. Lucene keeps
+  them in a separate prox file so scoring never reads them; parquet
+  already stores every column apart, so a scoring scan that prunes the
+  column has the same property with one write, one read and one
+  tombstone anti-join.
+- Two build paths: build_index (the serving build, positions optional)
+  runs JVM built-ins only — tokenize/posexplode/groupBy, whole-stage
+  codegen; build_and_write_index (tf only) runs the analyzer and per-doc
+  tf in one pyarrow mapInArrow stage (indexing/arrowtf.py).
 
 Reference parity anchors:
 - record-with-_key model: asset/src/elasticsearch_bulk docs; metadata
@@ -54,16 +63,16 @@ DEFAULT_BUCKETS = 64
 
 @dataclass
 class IndexTables:
-    postings: DataFrame  # term, bucket, doc_id, tf, dl
+    # term, doc_id, tf, dl, bucket — plus positions (array<int>) when the
+    # index was built with keep_positions. Only phrase queries select
+    # that column; every scoring scan prunes it, so parquet never reads
+    # the arrays (Lucene's separate prox file, as one columnar table).
+    postings: DataFrame
     terms: DataFrame  # term, df
     doc_norms: DataFrame  # doc_id, dl, content_sha + source cols
     n_docs: int
     avg_dl: float
     n_buckets: int = DEFAULT_BUCKETS
-    # positions live in their own table (Lucene keeps proximity data in a
-    # separate prox stream for the same reason): only phrase queries pay
-    # for them, and the scoring path never materializes position arrays.
-    positions: DataFrame | None = None  # term, bucket, doc_id, positions
     # reversed-term dictionary (rev = reverse(term)) — Lucene's
     # ReverseStringFilter trick: `*suffix` wildcards become a PREFIX
     # range scan on rev (rows-skipped via parquet min/max) instead of a
@@ -94,6 +103,59 @@ def with_doc_id(
     )
 
 
+def _keyed(
+    docs: DataFrame, text_col: str, id_cols: tuple[str, ...], doc_id_col: str | None
+) -> DataFrame:
+    """Build prelude: the scan-parallelism guard, then doc_id (verbatim
+    from ``doc_id_col`` when given, else xxhash64(*id_cols)) and
+    content_sha.
+
+    The guard: the map stage's parallelism is capped by the input split
+    count, and small/benchmark inputs often arrive as a handful of
+    parquet files, which would serialize the whole build. At 100 TB the
+    scan has plenty of splits and this is a no-op."""
+    spark_dp = docs.sparkSession.sparkContext.defaultParallelism
+    if docs.rdd.getNumPartitions() < spark_dp:
+        docs = docs.repartition(spark_dp)
+    if doc_id_col is None:
+        return with_doc_id(docs, id_cols, text_col)
+    return docs.withColumn("doc_id", F.col(doc_id_col).cast("long")).withColumn(
+        "content_sha", F.sha2(F.col(text_col), 256)
+    )
+
+
+def posting_rows(
+    toks: DataFrame, n_buckets: int, keep_positions: bool
+) -> DataFrame:
+    """(term, doc_id, tf, dl[, positions], bucket) from per-doc rows that
+    carry ``_toks`` (the analyzed tokens) and ``dl``: ONE token-level
+    groupBy (keys are near-unique per doc → no skew; partial agg handles
+    the Zipf head). With positions, tf = size(positions) derives from
+    the same aggregation, so tokens shuffle once either way. dl rides
+    every row (Lucene norms-with-postings): scoring, phrase scoring
+    included, never joins doc_norms."""
+    tokens = toks.select("doc_id", "dl", F.posexplode("_toks").alias("pos", "term"))
+    grouped = tokens.groupBy("term", "doc_id")
+    if keep_positions:
+        rows = grouped.agg(
+            F.sort_array(F.collect_list("pos")).alias("positions"),
+            F.first("dl").alias("dl"),
+        ).select(
+            "term",
+            "doc_id",
+            F.size("positions").cast("int").alias("tf"),
+            "dl",
+            "positions",
+        )
+    else:
+        rows = grouped.agg(
+            F.count("*").cast("int").alias("tf"), F.first("dl").alias("dl")
+        )
+    return rows.withColumn(
+        "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
+    )
+
+
 def build_index(
     docs: DataFrame,
     text_col: str = "content",
@@ -109,29 +171,18 @@ def build_index(
     If ``doc_id_col`` is given, it is used verbatim (e.g. the testdata
     ``documents.doc_id``); otherwise doc_id = xxhash64(*id_cols).
 
-    With cache=True (default) the tf and dl frames are persisted
-    (MEMORY_AND_DISK): postings/terms/doc_norms/stats all derive from
-    them, so without caching every downstream action re-runs the
-    tokenize+explode+groupBy chain (~4x the work). At cluster scale,
-    where tf may exceed cluster memory, persist() spills to local disk
-    per executor — or write postings first and derive the rest from the
-    persisted parquet (write_index reads back what it wrote for exactly
-    this reason when cache=False).
-    """
-    # The tokenize+explode map stage parallelism is capped by the input
-    # split count; small/benchmark inputs often arrive as a handful of
-    # parquet files, which would serialize the whole build. At 100 TB
-    # the scan has plenty of splits and this is a no-op.
-    spark_dp = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < spark_dp:
-        docs = docs.repartition(spark_dp)
+    With keep_positions (default) every postings row also carries its
+    sorted token positions; tf == size(positions).
 
-    if doc_id_col is not None:
-        base = docs.withColumn("doc_id", F.col(doc_id_col).cast("long")).withColumn(
-            "content_sha", F.sha2(F.col(text_col), 256)
-        )
-    else:
-        base = with_doc_id(docs, id_cols, text_col)
+    With cache=True (default) the postings frame is persisted
+    (MEMORY_AND_DISK): terms/doc_norms/stats all derive from it, so
+    without caching every downstream action re-runs the
+    tokenize+explode+groupBy chain (~4x the work). At cluster scale,
+    where postings may exceed cluster memory, persist() spills to local
+    disk per executor — or write postings first and derive the rest
+    from the written parquet (the build_and_write_index shape).
+    """
+    base = _keyed(docs, text_col, id_cols, doc_id_col)
 
     # dl (doc length) computed MAP-SIDE as size(analyzed tokens): it
     # rides the tf shuffle denormalized into every posting row (Lucene
@@ -143,68 +194,22 @@ def build_index(
     toks = base.withColumn("_toks", analyze_col(text_col)).withColumn(
         "dl", F.coalesce(F.size("_toks"), F.lit(0)).cast("int")
     )
-    tokens = toks.select(
-        "doc_id", "dl", F.posexplode("_toks").alias("pos", "term")
-    )
-
-    # ONE token-level groupBy whichever streams are kept (keys are
-    # near-unique per doc → no skew; partial agg handles the Zipf head):
-    # with positions, tf = size(positions) derives map-side from the
-    # SAME aggregation — the former separate count groupBy re-shuffled
-    # every token row a second time (r5: the with-positions build now
-    # shuffles tokens once). dl denormalized into prox rows too: phrase
-    # queries score from a single positions scan without touching the
-    # postings table.
-    positions = None
-    if keep_positions:
-        positions = (
-            tokens.groupBy("term", "doc_id")
-            .agg(
-                F.sort_array(F.collect_list("pos")).alias("positions"),
-                F.first("dl").alias("dl"),
-            )
-            .withColumn(
-                "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-            )
-        )
-    else:
-        tfd = (
-            tokens.groupBy("term", "doc_id")
-            .agg(F.count("*").cast("int").alias("tf"), F.first("dl").alias("dl"))
-            .withColumn(
-                "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-            )
-        )
+    postings = posting_rows(toks, n_buckets, keep_positions)
 
     cached: tuple = ()
     if cache:
         from pyspark import StorageLevel
 
-        if keep_positions:
-            positions = positions.persist(StorageLevel.MEMORY_AND_DISK)
-            cached = (positions,)
-        else:
-            tfd = tfd.persist(StorageLevel.MEMORY_AND_DISK)
-            cached = (tfd,)
-    if keep_positions:
-        # postings project off the cached prox aggregation — column
-        # pruning drops the arrays for every counts-only consumer
-        tfd = positions.select(
-            "term",
-            "doc_id",
-            F.size("positions").cast("int").alias("tf"),
-            "dl",
-            "bucket",
-        )
+        postings = postings.persist(StorageLevel.MEMORY_AND_DISK)
+        cached = (postings,)
 
-    # doc_norms from the CACHED tf (not from toks: that would re-run the
-    # analyzer over the whole corpus on every doc_norms action)
-    dl = tfd.groupBy("doc_id").agg(F.first("dl").alias("dl"))
+    # doc_norms from the CACHED postings (not from toks: that would
+    # re-run the analyzer over the whole corpus on every doc_norms action)
+    dl = postings.groupBy("doc_id").agg(F.first("dl").alias("dl"))
     keep = ["doc_id", "dl", "content_sha", *source_cols]
     doc_norms = base.join(dl, "doc_id", "left").na.fill({"dl": 0}).select(*keep)
 
-    postings = tfd
-    terms = tfd.groupBy("term").agg(F.count("*").cast("long").alias("df"))
+    terms = postings.groupBy("term").agg(F.count("*").cast("long").alias("df"))
 
     agg = doc_norms.agg(
         F.count("*").alias("n"), F.avg("dl").alias("avg_dl")
@@ -217,7 +222,6 @@ def build_index(
         n_docs=int(agg["n"]),
         avg_dl=float(agg["avg_dl"] or 0.0),
         n_buckets=n_buckets,
-        positions=positions,
         terms_rev=terms_rev_frame(terms),
         _cached=cached,
     )
@@ -245,7 +249,7 @@ WRITE_FANOUT = int(os.environ.get("SPARK_GRAFT_WRITE_FANOUT", "8"))
 
 # Parquet row-group size for index tables. Default 128MB row groups make
 # a bucket file ONE unsplittable scan unit (parquet can't split below
-# row-group granularity) — a single-term positions/postings scan then
+# row-group granularity) — a single-term postings scan then
 # caps at #files map tasks regardless of cores. 8MB row groups restore
 # scan parallelism (measured: dense-phrase positions join 2.07s -> 1.42s
 # at 1.2M docs) AND sharpen per-row-group term min/max pruning; the
@@ -300,10 +304,11 @@ def write_terms_rev(terms: DataFrame, path: str) -> None:
 
 
 def write_index(tables: IndexTables, path: str) -> None:
-    """Persist the index. postings partitioned by term bucket so query-
-    time term lookups prune to single directories; rows sorted by
-    (term, doc_id) within files for row-group min/max pruning and for
-    sequential posting-list reads."""
+    """Persist the index. postings (positions column included, when
+    present) partitioned by term bucket so query-time term lookups prune
+    to single directories; rows sorted by (term, doc_id) within files
+    for row-group min/max pruning and for sequential posting-list
+    reads."""
     (
         _bucketed_sorted(tables.postings, tables.n_buckets)
         .write.mode("overwrite")
@@ -316,14 +321,6 @@ def write_index(tables: IndexTables, path: str) -> None:
     )
     write_terms_rev(tables.terms, path)
     tables.doc_norms.write.mode("overwrite").parquet(os.path.join(path, "doc_norms"))
-    if tables.positions is not None:
-        (
-            _bucketed_sorted(tables.positions, tables.n_buckets)
-            .write.mode("overwrite")
-            .option("parquet.block.size", ROW_GROUP_BYTES)
-            .partitionBy("bucket")
-            .parquet(os.path.join(path, "positions"))
-        )
     stats = {
         "n_docs": tables.n_docs,
         "avg_dl": tables.avg_dl,
@@ -364,16 +361,7 @@ def build_and_write_index(
     the bench path. Returns the same IndexTables as read_index(path).
     """
     spark = docs.sparkSession
-    spark_dp = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < spark_dp:
-        docs = docs.repartition(spark_dp)
-
-    if doc_id_col is not None:
-        base = docs.withColumn("doc_id", F.col(doc_id_col).cast("long")).withColumn(
-            "content_sha", F.sha2(F.col(text_col), 256)
-        )
-    else:
-        base = with_doc_id(docs, id_cols, text_col)
+    base = _keyed(docs, text_col, id_cols, doc_id_col)
 
     # ONE shuffle for the whole heavy pass (was two, r7):
     # - the analyzer AND per-doc tf run inside a single vectorized
@@ -571,10 +559,11 @@ def build_and_write_index(
 def read_index(
     spark: SparkSession, path: str, _schemas: dict | None = None
 ) -> IndexTables:
-    """Open a written index. ``_schemas`` (writer-internal) supplies
-    known table schemas so the reads skip parquet footer inference —
-    semantics are identical; an absent/partial dict falls back to
-    inference per table."""
+    """Open a written index. Positions are present when the postings
+    table has a ``positions`` column. ``_schemas`` (writer-internal)
+    supplies known table schemas so the reads skip parquet footer
+    inference — semantics are identical; an absent/partial dict falls
+    back to inference per table."""
     with open(os.path.join(path, "stats.json")) as f:
         stats = json.load(f)
     sch = _schemas or {}
@@ -585,8 +574,6 @@ def read_index(
             r = r.schema(sch[name])
         return r.parquet(os.path.join(path, name))
 
-    pos_path = os.path.join(path, "positions")
-    positions = _read("positions") if os.path.isdir(pos_path) else None
     rev_path = os.path.join(path, "terms_rev")
     terms_rev = _read("terms_rev") if os.path.isdir(rev_path) else None
     return IndexTables(
@@ -596,6 +583,5 @@ def read_index(
         n_docs=stats["n_docs"],
         avg_dl=stats["avg_dl"],
         n_buckets=stats["n_buckets"],
-        positions=positions,
         terms_rev=terms_rev,
     )

@@ -32,6 +32,12 @@ from the live adds. gc_replaced_segments deletes merged-away segment
 data and never rewrites the log. Single writer: a second writer that
 races for a version gets an error, never a lost commit.
 
+Segment data is ``<index>/postings/part=<id>``: one parquet dir per
+segment, rows (term, doc_id, tf, dl, bucket, orig_part) plus a
+``positions`` column exactly when the meta says ``keep_positions``.
+There is no second per-segment stream: writes, compaction, GC and the
+tombstone anti-join each handle this one table.
+
 Segments are input partitions: pmod(xxhash64(doc_id), n_parts) for
 batch builds (stable across runs because doc_id is content-derived,
 never monotonically_increasing_id) or ``batch_id*n_parts + i`` for
@@ -57,7 +63,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from elasticsearch_assets_spark.functions.analyzer import analyze_col
-from elasticsearch_assets_spark.indexing.build import with_doc_id
+from elasticsearch_assets_spark.indexing.build import posting_rows, with_doc_id
 from elasticsearch_assets_spark.sources.state_storage import write_exclusive
 
 MANIFEST_SCHEMA = (
@@ -66,15 +72,20 @@ MANIFEST_SCHEMA = (
     "replaces string"
 )
 
-# every segment row carries its ORIGINAL segment id as data (orig_part):
-# a merge relabels rows under the merged id, and scoped tombstones must
-# keep testing the id the row was ingested under
-_STREAM_SCHEMAS = {
-    "postings": "term string, doc_id bigint, tf int, dl int, bucket int, "
-    "orig_part int, part int",
-    "positions": "term string, doc_id bigint, positions array<int>, dl int, "
-    "bucket int, orig_part int, part int",
-}
+
+def _segment_schema(keep_positions: bool) -> str:
+    """Read schema of the segment dirs. Every row carries its ORIGINAL
+    segment id as data (orig_part): a merge relabels rows under the
+    merged id, and scoped tombstones must keep testing the id the row
+    was ingested under. ``part`` is the partition column the basePath
+    read exposes."""
+    pos = "positions array<int>, " if keep_positions else ""
+    return (
+        f"term string, doc_id bigint, tf int, dl int, {pos}bucket int, "
+        "orig_part int, part int"
+    )
+
+
 _DELETES_SCHEMA = "doc_id bigint, applies_below bigint"
 
 _FP_MOD = 1_000_003
@@ -84,10 +95,6 @@ _LOG_NAME = re.compile(r"^\d{20}\.json$")
 
 def _part_dir(path: str, part: int) -> str:
     return os.path.join(path, "postings", f"part={part}")
-
-
-def _pos_part_dir(path: str, part: int) -> str:
-    return os.path.join(path, "positions", f"part={part}")
 
 
 def _log_dir(path: str) -> str:
@@ -201,7 +208,7 @@ def _check_meta(
     snap: _Snapshot, path: str, keep_positions: bool, n_buckets: int
 ) -> None:
     """A resume that flips keep_positions would leave a MIXED index
-    (some parts with prox dirs, some without) that silently loses
+    (some segments with a positions column, some without) that loses
     phrase recall for the positions-less parts, and a segment built
     with a different n_buckets would break bucket pruning (query-side
     pmod(xxhash64(term), B) no longer matches the rows' bucket column —
@@ -271,15 +278,12 @@ def _build_part(
     base: DataFrame, path: str, snap: _Snapshot, part: int, n_buckets: int,
     text_col: str, run_id: str, keep_positions: bool = False,
 ) -> None:
-    """Build one partition's postings (+ optional prox stream), then
-    commit its ``add`` (with the index ``meta`` when it is the first
-    segment). Same single-token-groupBy shape as indexing/build: dl is
-    computed MAP-SIDE as size(analyzed tokens), and with keep_positions
-    the postings derive from the prox aggregation (tf =
-    size(positions)), so tokens shuffle once either way. The add's
-    rows/bytes/fingerprint/sum_dl ride the data write as an
-    Observation — no separate stats job."""
-    spark = base.sparkSession
+    """Build one partition's postings (with a positions column when
+    keep_positions) in ONE write, then commit its ``add`` (with the
+    index ``meta`` when it is the first segment). The same token groupBy
+    as indexing/build (posting_rows); dl is computed MAP-SIDE as
+    size(analyzed tokens). The add's rows/bytes/fingerprint/sum_dl ride
+    the data write as an Observation — no separate stats job."""
     t0 = time.time()
     obs = Observation()
     toks = (
@@ -294,44 +298,9 @@ def _build_part(
             F.sum("dl").alias("sum_dl"),
         )
     )
-    tokens = toks.select(
-        "doc_id", "dl", F.posexplode("_toks").alias("pos", "term")
-    )
-    bucket = F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-    if keep_positions:
-        prox = (
-            tokens.groupBy("term", "doc_id")
-            .agg(
-                F.sort_array(F.collect_list("pos")).alias("positions"),
-                F.first("dl").alias("dl"),
-            )
-            .withColumn("bucket", bucket)
-            .withColumn("orig_part", F.lit(part))
-        )
-        prox.write.mode("overwrite").parquet(_pos_part_dir(path, part))
-        tfd = (
-            spark.read.schema(_STREAM_SCHEMAS["positions"])
-            .parquet(_pos_part_dir(path, part))
-            .select(
-                "term",
-                "doc_id",
-                F.size("positions").cast("int").alias("tf"),
-                "dl",
-                "bucket",
-                "orig_part",
-            )
-        )
-    else:
-        tfd = (
-            tokens.groupBy("term", "doc_id")
-            .agg(F.count("*").cast("int").alias("tf"), F.first("dl").alias("dl"))
-            .withColumn("bucket", bucket)
-            .withColumn("orig_part", F.lit(part))
-        )
-        # a positions-less rebuild of a part previously built WITH
-        # positions must not leave a stale prox dir behind
-        shutil.rmtree(_pos_part_dir(path, part), ignore_errors=True)
-    tfd.write.mode("overwrite").parquet(_part_dir(path, part))
+    posting_rows(toks, n_buckets, keep_positions).withColumn(
+        "orig_part", F.lit(part)
+    ).write.mode("overwrite").parquet(_part_dir(path, part))
 
     m = _metrics(obs)
     add = {
@@ -369,11 +338,10 @@ def build_index_resumable(
     """Build (or resume) the partitioned index at `path`.
 
     fail_after_parts injects a crash after N newly-built parts — the
-    kill/resume test hook. keep_positions also writes the prox stream
-    per part (positions/part=N) so a resumable/incremental index can
-    serve phrase queries; the part's add stays the single commit point
-    for both streams. Parts merged away by a compaction count as built
-    (their docs live on in the merged segment).
+    kill/resume test hook. keep_positions adds the positions column to
+    every segment row so a resumable/incremental index can serve phrase
+    queries. Parts merged away by a compaction count as built (their
+    docs live on in the merged segment).
     """
     snap = _snapshot(path)
     _check_meta(snap, path, keep_positions, n_buckets)
@@ -406,9 +374,9 @@ def refresh_index(
 
     keep_positions defaults to the index's OWN build-time setting
     (the log's meta) — a refresh of a keep_positions index must not
-    silently rmtree committed prox dirs for the rebuilt parts (phrase
-    queries would then miss those parts' docs with no error). An
-    explicit conflicting flag raises.
+    rebuild parts without positions (phrase queries would then miss
+    those parts' docs with no error). An explicit conflicting flag
+    raises.
 
     A drifted part is rewritten IN PLACE before its new add commits, so
     a crash mid-refresh can leave that part serving its new rows under
@@ -467,41 +435,26 @@ def verify_fingerprints(
 # ---------------------------------------------------------------------------
 
 
-def _read_segments(
-    spark: SparkSession, path: str, stream: str, ids
-) -> DataFrame:
-    """Read the given segments' dirs of one stream — never a dir the log
-    does not name: a segment dir written just before a crash (data
-    landed, commit didn't) must not leak into reads. The explicit schema
-    spares a footer-inference job per read; ``part`` is the partition
-    column the basePath read exposes."""
-    base = os.path.join(path, stream)
-    parts = [
-        os.path.join(base, f"part={p}")
-        for p in sorted(ids)
-        if os.path.isdir(os.path.join(base, f"part={p}"))
-    ]
+def _read_segments(spark: SparkSession, path: str, snap: _Snapshot, ids) -> DataFrame:
+    """Read the given segments' dirs — never a dir the log does not
+    name: a segment dir written just before a crash (data landed, commit
+    didn't) must not leak into reads. The explicit schema spares a
+    footer-inference job per read."""
+    base = os.path.join(path, "postings")
+    parts = [_part_dir(path, p) for p in sorted(ids) if os.path.isdir(_part_dir(path, p))]
     if not parts:
         raise FileNotFoundError(
-            f"no committed {stream} parts under {path} — build the index "
-            "first (or it was built without this stream)"
+            f"no committed postings parts under {path} — build the index first"
         )
-    return (
-        spark.read.schema(_STREAM_SCHEMAS[stream])
-        .option("basePath", base)
-        .parquet(*parts)
-    )
+    schema = _segment_schema(bool(snap.meta.get("keep_positions")))
+    return spark.read.schema(schema).option("basePath", base).parquet(*parts)
 
 
 def read_resumable_postings(spark: SparkSession, path: str) -> DataFrame:
-    """Postings of a resumable index, restricted to live segments."""
-    return _read_segments(spark, path, "postings", _snapshot(path).live())
-
-
-def read_resumable_positions(spark: SparkSession, path: str) -> DataFrame:
-    """Prox stream of a keep_positions resumable index — read through
-    the log the same way postings are (live segments only)."""
-    return _read_segments(spark, path, "positions", _snapshot(path).live())
+    """Postings of a resumable index, restricted to live segments (with
+    the positions column when built with keep_positions)."""
+    snap = _snapshot(path)
+    return _read_segments(spark, path, snap, snap.live())
 
 
 def serve_resumable_index(
@@ -512,9 +465,9 @@ def serve_resumable_index(
     """IndexTables over a resumable/streamed index's LIVE segments — the
     serving handle for query/exec, no batch re-index needed:
 
-    - postings (and positions, when built with keep_positions) read
-      through the log: live segments only, compaction-removed ids
-      excluded
+    - postings (with the positions column, when built with
+      keep_positions) read through the log: live segments only,
+      compaction-removed ids excluded
     - terms (df) from one postings aggregation
     - n_docs = Σ rows and avg_dl = Σ sum_dl / n_docs over the live
       adds — no Spark job. Every live copy of a doc counts (an
@@ -523,8 +476,8 @@ def serve_resumable_index(
       batch builder's coalesced dl=0 semantics
     - n_buckets from the log's meta (bucket pruning needs the exact
       build-side value)
-    - tombstoned docs (delete_docs) are anti-joined out of postings and
-      positions, but ONLY after the corpus stats (df, n_docs, avg_dl)
+    - tombstoned docs (delete_docs) are anti-joined out of postings,
+      but ONLY after the corpus stats (df, n_docs, avg_dl)
       are derived — Lucene liveDocs semantics: a deleted doc stops
       matching immediately, while docFreq/maxDoc keep counting it until
       a purging merge rewrites the segments (compact_segments
@@ -537,16 +490,13 @@ def serve_resumable_index(
 
     snap = _snapshot(path)
     live = snap.live()
-    post = _read_segments(spark, path, "postings", live)
+    post = _read_segments(spark, path, snap, live)
     n_docs = sum(a["rows"] for a in live.values())
     sum_dl = sum(a["sum_dl"] for a in live.values())
     avg_dl = sum_dl / n_docs if n_docs else 0.0
     # df from the FULL committed postings (pre-tombstone), per Lucene
     terms = post.groupBy("term").agg(F.count("*").cast("long").alias("df"))
     doc_dl = post.select("doc_id", "dl").distinct()
-    positions = None
-    if snap.meta["keep_positions"]:
-        positions = _read_segments(spark, path, "positions", live)
     tomb = _tombstones(spark, path, snap) if apply_deletes else None
     if tomb is not None:
         # tombstone sets are small relative to the corpus (a large
@@ -556,10 +506,6 @@ def serve_resumable_index(
         # (orig_part < applies_below) rides the doc_id hash join as a
         # residual filter.
         post = post.join(tomb, _dead_row_cond(post, tomb), "left_anti")
-        if positions is not None:
-            positions = positions.join(
-                tomb, _dead_row_cond(positions, tomb), "left_anti"
-            )
     return IndexTables(
         postings=post,
         terms=terms,
@@ -567,7 +513,6 @@ def serve_resumable_index(
         n_docs=n_docs,
         avg_dl=avg_dl,
         n_buckets=int(snap.meta["n_buckets"]),
-        positions=positions,
     )
 
 
@@ -619,8 +564,8 @@ def ingest_segment_batch(
     distributed transaction.
 
     Returns the segment ids built by THIS call (committed ones are
-    skipped). Segments are served by read_resumable_postings/positions
-    exactly like batch parts; BM25 stats (n_docs, avg_dl) come from the
+    skipped). Segments are served by read_resumable_postings exactly
+    like batch parts; BM25 stats (n_docs, avg_dl) come from the
     live adds at serve time, so they stay correct as segments land.
     """
     snap = _snapshot(path)
@@ -691,9 +636,9 @@ def compact_segments(
     purge_deletes: bool = False,
 ) -> None:
     """Merge the live segments ``parts`` into ONE segment ``new_part``.
-    Pure data movement — postings (and positions, for a keep_positions
-    index) rows are re-written under the new part dir; no
-    re-tokenization.
+    Pure data movement — postings rows (positions included, for a
+    keep_positions index) are re-written under the new part dir in one
+    write; no re-tokenization.
 
     Commit protocol: one commit holds the merged segment's ``add`` and
     the ``remove`` of its inputs, so readers see exactly-one copy of
@@ -741,24 +686,17 @@ def _compact(
     tomb = _tombstones(spark, path, snap) if purge_deletes else None
     purged_docs = 0
     obs = Observation()
-    streams = ["postings"] + (["positions"] if snap.meta["keep_positions"] else [])
-    for stream in streams:
-        merged = _read_segments(spark, path, stream, parts)
-        if tomb is not None:
-            if stream == "postings":
-                dm = merged.select("doc_id", "orig_part").distinct()
-                purged_docs = dm.join(
-                    tomb, _dead_row_cond(dm, tomb), "left_semi"
-                ).count()
-            merged = merged.join(tomb, _dead_row_cond(merged, tomb), "left_anti")
-        if stream == "postings":
-            merged = merged.observe(obs, F.sum("tf").alias("sum_dl"))
-        # rows keep their orig_part; the `part` partition column itself
-        # must not be written into the files (it would collide with
-        # partition discovery on re-read)
-        merged.drop("part").write.mode("overwrite").parquet(
-            os.path.join(path, stream, f"part={new_part}")
-        )
+    merged = _read_segments(spark, path, snap, parts)
+    if tomb is not None:
+        dm = merged.select("doc_id", "orig_part").distinct()
+        purged_docs = dm.join(tomb, _dead_row_cond(dm, tomb), "left_semi").count()
+        merged = merged.join(tomb, _dead_row_cond(merged, tomb), "left_anti")
+    # rows keep their orig_part; the `part` partition column itself
+    # must not be written into the files (it would collide with
+    # partition discovery on re-read)
+    merged.drop("part").observe(obs, F.sum("tf").alias("sum_dl")).write.mode(
+        "overwrite"
+    ).parquet(_part_dir(path, new_part))
 
     add = {
         "id": new_part,
@@ -830,7 +768,6 @@ def gc_replaced_segments(spark: SparkSession, path: str) -> list[int]:
     replaced = sorted(_snapshot(path).removed)
     for p in replaced:
         shutil.rmtree(_part_dir(path, p), ignore_errors=True)
-        shutil.rmtree(_pos_part_dir(path, p), ignore_errors=True)
     return replaced
 
 
@@ -852,7 +789,7 @@ def gc_replaced_segments(spark: SparkSession, path: str) -> list[int]:
 #   named after the version that publishes it, so a retry after a crash
 #   overwrites its own orphan
 # - serve_resumable_index anti-joins the live tombstones out of
-#   postings and positions (stats untouched)
+#   postings (stats untouched)
 # - compact_segments(purge_deletes=True) is the purging merge; a FULL
 #   one commits a `retire` of every live tombstone dir in the same
 #   commit as the merged segment, then deletes those dirs

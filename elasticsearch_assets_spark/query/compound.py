@@ -30,7 +30,7 @@ from .bm25 import score_contrib_col
 from .exec import (
     _candidates,
     _df_map,
-    _pos_candidates,
+    _require_positions,
     dict_hits,
     phrase_empty,
     top_k,
@@ -256,10 +256,11 @@ def match_phrase_prefix(
     MultiPhrasePrefixQuery semantics — the type-ahead query).
 
     Plan: the fixed terms reuse the phrase join-chain (one bucket-pruned
-    positions column per unique fixed term, inner-joined on doc_id); the
-    expansion slot joins ONE aggregated positions frame — the union of
-    the expanded terms' positions flattened per doc (Σ df over ≤50
-    expanded terms, bucket-pruned like any term scan). The match
+    positions column per unique fixed term, read from postings and
+    inner-joined on doc_id); the expansion slot joins ONE aggregated
+    positions frame — the union of the expanded terms' positions
+    flattened per doc (Σ df over ≤50 expanded terms, bucket-pruned like
+    any term scan). The match
     predicate is the exact-chain array filter with a final
     "expansion set contains p + n_fixed" step — all JVM array exprs.
 
@@ -275,8 +276,7 @@ def match_phrase_prefix(
     terms = analyze_text(text)
     if not terms:
         return phrase_empty(index)
-    if index.positions is None:
-        raise ValueError("index was built with keep_positions=False")
+    _require_positions(index)
     fixed, pref = terms[:-1], terms[-1]
     if not fixed:
         return wildcard_query(index, pref + "*", k)
@@ -291,13 +291,12 @@ def match_phrase_prefix(
     dfs = term_dfs(index, uniq)
     if len(dfs) < len(uniq):
         return phrase_empty(index)
-    has_dl = "dl" in index.positions.columns
 
     # expansion-slot positions: one flattened array per doc over every
     # expanded term (sort_array only for a canonical layout; the
     # predicate is containment, order-insensitive)
     exp_pos = (
-        _pos_candidates(index, expanded)
+        _candidates(index, expanded)
         .groupBy("doc_id")
         .agg(F.sort_array(F.flatten(F.collect_list("positions"))).alias("_pexp"))
     )
@@ -305,11 +304,10 @@ def match_phrase_prefix(
     cols = {t: f"_p{i}" for i, t in enumerate(uniq)}
     joined = None
     for t in uniq:
-        part = _pos_candidates(index, [t])
         sel = [F.col("doc_id"), F.col("positions").alias(cols[t])]
-        if has_dl and joined is None:
+        if joined is None:
             sel.append(F.col("dl"))
-        part = part.select(*sel)
+        part = _candidates(index, [t]).select(*sel)
         joined = part if joined is None else joined.join(part, "doc_id")
     joined = joined.join(exp_pos, "doc_id")
 
@@ -322,22 +320,16 @@ def match_phrase_prefix(
     starts = F.filter(starts, _step(len(fixed), F.col("_pexp")))
     matched = joined.where(F.size(starts) > 0)
 
-    if has_dl:
-        score = F.lit(0.0)
-        for t in uniq:
-            score = score + score_contrib_col(
-                F.size(F.col(cols[t])).cast("double"),
-                F.col("dl").cast("double"),
-                F.lit(float(dfs[t])),
-                index.n_docs,
-                index.avg_dl,
-            )
-        return top_k(matched.select("doc_id", score.alias("score")), k)
-    from .exec import scored_terms
-
-    s = scored_terms(index, uniq)
-    out = matched.select("doc_id").join(s.select("doc_id", "score"), "doc_id")
-    return top_k(out, k)
+    score = F.lit(0.0)
+    for t in uniq:
+        score = score + score_contrib_col(
+            F.size(F.col(cols[t])).cast("double"),
+            F.col("dl").cast("double"),
+            F.lit(float(dfs[t])),
+            index.n_docs,
+            index.avg_dl,
+        )
+    return top_k(matched.select("doc_id", score.alias("score")), k)
 
 
 # ---------------------------------------------------------------------------

@@ -44,14 +44,10 @@ def _candidates(index: IndexTables, terms: list[str]) -> DataFrame:
     return p.where(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
 
 
-def _pos_candidates(index: IndexTables, terms: list[str]) -> DataFrame:
-    """Position rows for the given terms (bucket-pruned, like
-    _candidates but against the proximity table)."""
-    p = index.positions
-    if not terms:
-        return p.where(F.lit(False))
-    buckets = sorted({term_bucket(t, index.n_buckets) for t in terms})
-    return p.where(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
+def _require_positions(index: IndexTables) -> None:
+    """Phrase-type queries need the postings' positions column."""
+    if "positions" not in index.postings.columns:
+        raise ValueError("index was built with keep_positions=False")
 
 
 def _df_map(index: IndexTables, terms: list[str]) -> DataFrame:
@@ -831,10 +827,10 @@ def phrase_query(
 ) -> DataFrame:
     """Match_phrase: all terms present with consecutive positions.
 
-    Positions were kept in postings; consecutive-ness is checked with
-    array ops (arrays_overlap on shifted positions) — JVM-side, no UDF.
-    Plan: join the n term posting sets on doc_id (smallest df first via
-    Catalyst join reordering), then fold position arrays.
+    Positions are the postings' ``positions`` column (keep_positions);
+    consecutive-ness is checked with array ops on shifted positions —
+    JVM-side, no UDF. Plan: join the n terms' posting rows on doc_id,
+    then fold position arrays.
 
     slop > 0 (`"a b"~N`, match_phrase slop): Lucene's sloppy-phrase
     semantics — a doc matches iff some choice of one position per
@@ -857,16 +853,14 @@ def phrase_query(
     terms = analyze_text(phrase)
     if not terms:
         return phrase_empty(index)
-    if index.positions is None:
-        raise ValueError("index was built with keep_positions=False")
+    _require_positions(index)
     uniq = sorted(set(terms))
     dfs = term_dfs(index, uniq)
     if len(dfs) < len(uniq):
         # a dictionary-missing term can never form the phrase
         return phrase_empty(index)
-    has_dl = "dl" in index.positions.columns
 
-    # ADAPTIVE candidate restriction: the postings conjunction has at
+    # ADAPTIVE candidate restriction: the tf-only conjunction has at
     # most min(df) docs, so when some term is selective the fat
     # position-array scans are left_semi-trimmed BEFORE any shuffle;
     # when every term is near-ubiquitous (min(df) ~ Σdf/n — the
@@ -888,11 +882,10 @@ def phrase_query(
     cols = {t: f"_p{i}" for i, t in enumerate(uniq)}
     joined = None
     for t in uniq:
-        part = _pos_candidates(index, [t])
         sel = [F.col("doc_id"), F.col("positions").alias(cols[t])]
-        if has_dl and joined is None:
+        if joined is None:
             sel.append(F.col("dl"))
-        part = part.select(*sel)
+        part = _candidates(index, [t]).select(*sel)
         if docset is not None:
             part = part.join(docset, "doc_id", "left_semi")
         joined = part if joined is None else joined.join(part, "doc_id")
@@ -931,27 +924,21 @@ def phrase_query(
     matched = joined.where(match_pred)
 
     # Score: BM25 over the phrase's unique terms (ES scores the phrase
-    # clause with term statistics of its members).
-    if has_dl:
-        # zero-shuffle scoring: tf = |positions| per column, dl carried
-        # in prox rows, df as driver-side literals; contributions chain
-        # left-to-right in term-sorted order from 0.0 — the exact float
-        # association of the oracle's sorted fold (no explode, no
-        # groupBy, pure whole-stage codegen)
-        score = F.lit(0.0)
-        for t in uniq:
-            score = score + score_contrib_col(
-                F.size(_pos_col(t)).cast("double"),
-                F.col("dl").cast("double"),
-                F.lit(float(dfs[t])),
-                index.n_docs,
-                index.avg_dl,
-            )
-        out = matched.select("doc_id", score.alias("score"))
-        return top_k(out, k)
-    s = scored_terms(index, uniq)
-    out = matched.select("doc_id").join(s.select("doc_id", "score"), "doc_id")
-    return top_k(out, k)
+    # clause with term statistics of its members). Zero-shuffle: tf =
+    # |positions| per column, dl carried in the rows, df as driver-side
+    # literals; contributions chain left-to-right in term-sorted order
+    # from 0.0 — the exact float association of the oracle's sorted
+    # fold (no explode, no groupBy, pure whole-stage codegen)
+    score = F.lit(0.0)
+    for t in uniq:
+        score = score + score_contrib_col(
+            F.size(_pos_col(t)).cast("double"),
+            F.col("dl").cast("double"),
+            F.lit(float(dfs[t])),
+            index.n_docs,
+            index.avg_dl,
+        )
+    return top_k(matched.select("doc_id", score.alias("score")), k)
 
 
 def phrase_empty(index: IndexTables) -> DataFrame:

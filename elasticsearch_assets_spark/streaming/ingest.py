@@ -9,7 +9,8 @@ new index segments through plans/manifest.ingest_segment_batch, whose
 per-segment ``add`` in the index's commit log is the commit point — the
 same lineage + resume machinery the batch builder uses, so a streamed
 index is served, compacted, and crash-recovered identically to a
-batch-built one.
+batch-built one. Each segment is one postings dir; with keep_positions
+its rows also carry the token positions that phrase queries read.
 
 Exactly-once story (no distributed transaction needed):
 - the file source's checkpoint re-delivers a failed batch with the

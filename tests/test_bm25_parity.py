@@ -7,7 +7,10 @@ scores equal to 1e-6.
 
 from __future__ import annotations
 
+import os
+
 import pytest
+from pyspark.sql import functions as F
 
 from elasticsearch_assets_spark.corpus import generate_corpus_pandas
 from elasticsearch_assets_spark.indexing.build import with_doc_id
@@ -265,11 +268,16 @@ def test_phrase_slop_distinct_terms_merge_pred_parity(spark):
     idx.unpersist()
 
 
-def test_phrase_slop_repeated_terms_engine_oracle_parity(spark):
+def test_phrase_slop_repeated_terms_engine_oracle_parity(spark, tmp_path):
     """Engine vs oracle on adversarial repeated-term sloppy phrases
     (the exact staircase-assignment semantics must agree doc-for-doc;
-    the oracle itself is brute-force-pinned in test_property_fuzz)."""
-    from elasticsearch_assets_spark.indexing.build import build_index
+    the oracle itself is brute-force-pinned in test_property_fuzz),
+    over the in-memory build and its written copy."""
+    from elasticsearch_assets_spark.indexing.build import (
+        build_index,
+        read_index,
+        write_index,
+    )
     from elasticsearch_assets_spark.query.oracle import OracleIndex
 
     texts = [
@@ -279,36 +287,20 @@ def test_phrase_slop_repeated_terms_engine_oracle_parity(spark):
     rows = [(i + 1, t) for i, t in enumerate(texts)]
     docs = spark.createDataFrame(rows, "doc_id long, content string")
     idx = build_index(docs, doc_id_col="doc_id", n_buckets=4)
+    p = str(tmp_path / "idx")
+    write_index(idx, p)
+    # positions are a postings column: no second table on disk
+    assert not os.path.isdir(os.path.join(p, "positions"))
+    written = read_index(spark, p)
+    assert written.postings.where(F.size("positions") != F.col("tf")).count() == 0
     oracle = OracleIndex(dict(rows))
-    for phrase in ["a a a", "a b a", "a a b a"]:
-        for slop in (0, 1, 2, 3):
-            got = {
-                r["doc_id"]
-                for r in qx.phrase_query(idx, phrase, k=100, slop=slop).collect()
-            }
-            want = {d for d, _ in oracle.phrase(phrase, k=100, slop=slop)}
-            assert got == want, (phrase, slop, got, want)
-    idx.unpersist()
-
-
-def test_phrase_query_legacy_positions_without_dl(spark):
-    """Indexes written before dl was denormalized into prox rows hit the
-    has_dl=False branch (scoring falls back to a scored_terms join) —
-    match set AND scores must equal the modern single-scan path."""
-    from dataclasses import replace
-
-    from elasticsearch_assets_spark.indexing.build import build_index
-
-    rows = [(i, t) for i, t in enumerate(
-        ["alpha beta gamma", "alpha x beta", "beta alpha", "alpha beta beta",
-         "gamma delta", "alpha beta gamma alpha beta"])]
-    docs = spark.createDataFrame(rows, "doc_id long, content string")
-    idx = build_index(docs, doc_id_col="doc_id", n_buckets=4)
-    legacy = replace(idx, positions=idx.positions.drop("dl"), _cached=())
-    for slop in (0, 1, 2):
-        new = {(r["doc_id"], round(r["score"], 9))
-               for r in qx.phrase_query(idx, "alpha beta", k=50, slop=slop).collect()}
-        old = {(r["doc_id"], round(r["score"], 9))
-               for r in qx.phrase_query(legacy, "alpha beta", k=50, slop=slop).collect()}
-        assert new == old, (slop, new, old)
+    for index in (idx, written):
+        for phrase in ["a a a", "a b a", "a a b a"]:
+            for slop in (0, 1, 2, 3):
+                got = {
+                    r["doc_id"]
+                    for r in qx.phrase_query(index, phrase, k=100, slop=slop).collect()
+                }
+                want = {d for d, _ in oracle.phrase(phrase, k=100, slop=slop)}
+                assert got == want, (phrase, slop, got, want)
     idx.unpersist()

@@ -48,7 +48,7 @@ def _view(spark, path):
         "deletes": None if tomb is None else sorted(map(tuple, tomb.collect())),
         "stats": (ix.n_docs, ix.avg_dl),
         "postings": _fp(ix.postings),
-        "positions": _fp(ix.positions),
+        "positions": _fp(ix.postings.where(F.size("positions") == F.col("tf"))),
     }
 
 

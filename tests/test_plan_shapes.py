@@ -51,14 +51,29 @@ def test_term_pushdown_and_bucket_pruning(disk_index):
     assert "PartitionFilters" in s and "bucket" in s.split("PartitionFilters")[1].split("]")[0], s
 
 
-def test_projection_pruning(disk_index):
-    # scoring never reads the positions or content columns
-    plan = _plan(qx.match_query(disk_index, "merge batch", k=5))
-    scans = [l for l in plan.splitlines() if "FileScan" in l and "postings" in l]
-    assert scans
-    read_schema = scans[0].split("ReadSchema:")[1]
-    assert "positions" not in read_schema
-    assert "content" not in read_schema
+def test_projection_pruning(disk_index, spark):
+    # scoring never reads the positions or content columns — also not
+    # over a keep_positions segment index behind a tombstone anti-join
+    import tempfile
+
+    from elasticsearch_assets_spark.corpus import generate_corpus
+    from elasticsearch_assets_spark.plans import manifest as M
+
+    # a short path: the plan string truncates long scan locations
+    with tempfile.TemporaryDirectory() as seg:
+        M.build_index_resumable(
+            generate_corpus(spark, 60, seed=3), seg, n_parts=2, keep_positions=True
+        )
+        M.delete_docs(spark, seg, [0])
+        for index in (disk_index, M.serve_resumable_index(spark, seg)):
+            plan = _plan(qx.match_query(index, "merge batch", k=5))
+            scans = [
+                l for l in plan.splitlines() if "FileScan" in l and "postings" in l
+            ]
+            assert scans
+            read_schema = scans[0].split("ReadSchema:")[1]
+            assert "positions" not in read_schema
+            assert "content" not in read_schema
 
 
 def test_df_literal_scoring_no_join(disk_index):

@@ -124,12 +124,11 @@ def test_resume_noop_when_complete(spark, docs, tmp_path):
 
 def test_resumable_build_with_positions_kill_resume(spark, tmp_path):
     """keep_positions resumable build: kill mid-run, resume, and the
-    prox stream must be complete and phrase-consistent — identical
+    positions must be complete and phrase-consistent — identical
     (term, doc_id, positions) multiset to an uninterrupted build."""
     from elasticsearch_assets_spark.corpus import generate_corpus
     from elasticsearch_assets_spark.plans.manifest import (
         build_index_resumable,
-        read_resumable_positions,
         read_resumable_postings,
     )
 
@@ -149,11 +148,13 @@ def test_resumable_build_with_positions_kill_resume(spark, tmp_path):
     def snap_pos(path):
         return sorted(
             (r["term"], r["doc_id"], tuple(r["positions"]), r["dl"])
-            for r in read_resumable_positions(spark, path).collect()
+            for r in read_resumable_postings(spark, path).collect()
         )
 
     assert snap_pos(p1) == snap_pos(p2)
-    # tf = size(positions) invariant between the two streams
+    # positions are a postings column: no second table on disk
+    assert not os.path.isdir(os.path.join(p1, "positions"))
+    # tf = size(positions) on every row
     post = {
         (r["term"], r["doc_id"]): r["tf"]
         for r in read_resumable_postings(spark, p1).collect()
@@ -185,14 +186,15 @@ def test_refresh_preserves_positions_by_default(spark, tmp_path):
     )
     stale = M.refresh_index(docs2, p, n_parts=4, run_id="r1")
     assert stale  # something drifted
-    # prox stream complete and consistent with a clean keep_positions build
+    # positions complete and consistent with a clean keep_positions build
     clean = str(tmp_path / "clean")
     M.build_index_resumable(docs2, clean, n_parts=4, keep_positions=True)
     snap = lambda path: sorted(
         (r["term"], r["doc_id"], tuple(r["positions"]))
-        for r in M.read_resumable_positions(spark, path).collect()
+        for r in M.read_resumable_postings(spark, path).collect()
     )
     assert snap(p) == snap(clean)
+    assert not os.path.isdir(os.path.join(p, "positions"))
 
     # explicit conflicting flag raises instead of deleting prox dirs
     with pytest.raises(ValueError, match="keep_positions"):
@@ -203,22 +205,19 @@ def test_refresh_preserves_positions_by_default(spark, tmp_path):
 
 def test_readers_skip_uncommitted_part_dirs(spark, docs, tmp_path):
     """ADVICE r5: a part dir written just before a crash (no manifest
-    row) must not leak into read_resumable_postings/positions."""
+    row) must not leak into read_resumable_postings."""
     import shutil
 
     p = str(tmp_path / "uncommitted")
     M.build_index_resumable(docs, p, n_parts=4, keep_positions=True)
     committed_rows = M.read_resumable_postings(spark, p).count()
-    committed_pos = M.read_resumable_positions(spark, p).count()
 
     # simulate a crash: data dir for a phantom part lands, manifest doesn't
-    for stream in ("postings", "positions"):
-        src = os.path.join(p, stream, "part=0")
-        dst = os.path.join(p, stream, "part=9")
-        shutil.copytree(src, dst)
+    shutil.copytree(
+        os.path.join(p, "postings", "part=0"), os.path.join(p, "postings", "part=9")
+    )
 
     assert M.read_resumable_postings(spark, p).count() == committed_rows
-    assert M.read_resumable_positions(spark, p).count() == committed_pos
     parts = {
         r["_part"]
         for r in M.read_resumable_postings(spark, p)

@@ -76,11 +76,15 @@ def test_stream_ingest_compact_gc_lifecycle(spark, corpus_pdf, tmp_path):
     fp300 = _fingerprint(spark, batch_idx_300)
     assert _fingerprint(spark, idx) == fp300
 
-    # prox stream streamed in too: tf == len(positions) per posting
-    pos = M.read_resumable_positions(spark, idx)
-    bad = pos.where(F.size("positions") <= 0).count()
+    # positions streamed in too, as a postings column with
+    # tf == len(positions) per posting, and no second table on disk
+    pos = M.read_resumable_postings(spark, idx)
+    bad = pos.where(
+        (F.size("positions") <= 0) | (F.size("positions") != F.col("tf"))
+    ).count()
     assert bad == 0
     assert pos.count() == fp300[0]
+    assert not os.path.isdir(os.path.join(idx, "positions"))
 
     # an uncommitted data dir (crash between data write and manifest
     # commit) is invisible to readers
@@ -110,7 +114,7 @@ def test_stream_ingest_compact_gc_lifecycle(spark, corpus_pdf, tmp_path):
     # GC removes replaced dirs + rows; readers and live set unchanged
     assert M.gc_replaced_segments(spark, idx) == list(range(8))
     assert not os.path.isdir(os.path.join(idx, "postings", "part=0"))
-    assert not os.path.isdir(os.path.join(idx, "positions", "part=3"))
+    assert not os.path.isdir(os.path.join(idx, "positions"))
     assert M.done_parts(spark, idx) == {1000, 8, 9, 10, 11}
     assert _fingerprint(spark, idx) == fp300
     assert M.gc_replaced_segments(spark, idx) == list(range(8))  # idempotent
@@ -131,6 +135,13 @@ def test_ingest_batch_replay_is_idempotent(spark, corpus_pdf, tmp_path):
     assert M.ingest_segment_batch(docs, idx, batch_id=0, n_parts=N_PARTS) == []
     assert _fingerprint(spark, idx) == fp
     assert M.read_manifest(spark, idx).count() == n_rows
+    # built without positions: phrase queries refuse instead of missing
+    from elasticsearch_assets_spark.query import exec as qx
+
+    served = M.serve_resumable_index(spark, idx)
+    assert "positions" not in served.postings.columns
+    with pytest.raises(ValueError, match="keep_positions"):
+        qx.phrase_query(served, "merge batch")
 
 
 def test_batch_resume_skips_compacted_parts(spark, corpus_pdf, tmp_path):
@@ -216,7 +227,7 @@ def test_serve_resumable_index_matches_batch_scoring(spark, corpus_pdf, tmp_path
     assert served.n_docs == ref.n_docs == 150
     assert served.avg_dl == pytest.approx(ref.avg_dl, rel=1e-12)
     assert served.n_buckets == 8
-    assert served.positions is not None
+    assert "positions" in served.postings.columns
 
     terms = ["merge", "stream", "batch"]
     got = {

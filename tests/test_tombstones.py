@@ -80,7 +80,11 @@ def test_serving_excludes_deleted_but_stats_stay(spark, deleted_index):
     }
     assert live_ids.isdisjoint(set(dead))
     pos_ids = {
-        r["doc_id"] for r in after.positions.select("doc_id").distinct().collect()
+        r["doc_id"]
+        for r in after.postings.where(F.size("positions") > 0)
+        .select("doc_id")
+        .distinct()
+        .collect()
     }
     assert pos_ids.isdisjoint(set(dead))
 

@@ -20,6 +20,8 @@ for the reference's bulk ``update``/``upsert`` actions
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -108,15 +110,16 @@ def test_upsert_serves_new_content_exactly_once(spark, upserted_index):
     assert mine.exceptAll(theirs).count() == 0
     assert theirs.exceptAll(mine).count() == 0
 
-    # prox stream follows the same liveDocs
+    # positions follow the same liveDocs
     pos_terms = {
         r["term"]
-        for r in served.positions.where(F.col("doc_id").isin(upd_ids))
+        for r in served.postings.where(F.col("doc_id").isin(upd_ids))
         .select("term")
         .distinct()
         .collect()
     }
     assert "zzzupdated" in pos_terms
+    assert not os.path.isdir(os.path.join(idx, "positions"))
 
     # Lucene stats: old + new copies both count until a purging merge
     assert served.n_docs == 110
