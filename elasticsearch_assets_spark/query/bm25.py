@@ -7,17 +7,15 @@ therefore what the reference's queries score with — SURVEY.md §2.6):
     tf_norm(t,d)= tf / (tf + k1 * (1 - b + b * dl/avgdl))
     score(q,d)  = Σ_t idf(t) * tf_norm(t,d) * (k1 + 1)
 
-Implemented twice, identically: as Spark Column expressions (JVM
-codegen) and as plain floats (the pytest oracle). Ties break
-(score desc, doc_id asc) — the ES tie-break.
+Implemented twice, identically: as SQL text evaluated by Spark
+(query/sql.py — same operations in the same order, so the doubles
+match bit for bit) and as plain floats here (the pytest oracle). Ties
+break (score desc, doc_id asc) — the ES tie-break.
 """
 
 from __future__ import annotations
 
 import math
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 K1 = 1.2
 B = 0.75
@@ -27,38 +25,8 @@ def idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
-def idf_col(n_docs: int, df_col: Column) -> Column:
-    n = F.lit(float(n_docs))
-    return F.log(F.lit(1.0) + (n - df_col + F.lit(0.5)) / (df_col + F.lit(0.5)))
-
-
 def tf_norm(tf: int, dl: int, avg_dl: float, k1: float = K1, b: float = B) -> float:
     return tf / (tf + k1 * (1.0 - b + b * dl / avg_dl))
-
-
-def tf_norm_col(
-    tf_col: Column, dl_col: Column, avg_dl: float, k1: float = K1, b: float = B
-) -> Column:
-    return tf_col / (
-        tf_col + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl_col / F.lit(avg_dl))
-    )
-
-
-def score_contrib_col(
-    tf_col: Column,
-    dl_col: Column,
-    df_col: Column,
-    n_docs: int,
-    avg_dl: float,
-    k1: float = K1,
-    b: float = B,
-) -> Column:
-    """Per-(term, doc) BM25 contribution; final score = sum over terms."""
-    return (
-        idf_col(n_docs, df_col)
-        * tf_norm_col(tf_col, dl_col, avg_dl, k1, b)
-        * F.lit(k1 + 1.0)
-    )
 
 
 def score(

@@ -10,7 +10,7 @@ the trailing prefix), and `function_score` decay functions
 numeric field — the reference's users run all three against live ES.
 
 Scale + determinism notes follow the repo protocol:
-- every per-doc score is a pure column expression folded in a PINNED
+- every per-doc score is a pure SQL expression folded in a PINNED
   order (term-sorted / subquery-listed), so the DuckDB oracles replay
   the identical IEEE op sequence;
 - candidate sets stay bucket-pruned posting scans; the only driver-side
@@ -26,13 +26,15 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.analyzer import analyze_text
 from ..indexing.build import IndexTables
-from .bm25 import score_contrib_col
+from . import sql as Q
 from .exec import (
     _candidates,
     _df_map,
     _require_positions,
     dict_hits,
     phrase_empty,
+    scored_terms,
+    term_dfs,
     top_k,
     wildcard_query,
 )
@@ -54,9 +56,10 @@ def dis_max_query(
     max + tie * Σ(other scores)).
 
     Plan shape: ONE bucket-pruned posting scan over the union of all
-    subquery terms → broadcast df join → per-term conditional sums in a
+    subquery terms → per-row contribution (idfs from the query's map
+    literal) → per-subquery folds of per-term conditional sums in a
     single groupBy (the scored_terms fold, partial-aggregatable) → the
-    dis-max combination as a pure column expression. No per-subquery
+    dis-max combination as a pure SQL expression. No per-subquery
     jobs, no extra shuffle beyond the per-doc combine.
 
     Float determinism: per-subquery scores fold left-to-right over the
@@ -69,90 +72,53 @@ def dis_max_query(
     subs = [sorted(set(s)) for s in subqueries]
     all_terms = sorted({t for s in subs for t in s})
     if not all_terms:
-        return phrase_empty(index).select("doc_id", "score")
+        return phrase_empty(index).selectExpr("doc_id", "score")
     cand = _candidates(index, all_terms)
     if len(all_terms) <= 32:
-        # dfs as driver-side literals (r7, the scored_terms shape): no
-        # per-query broadcast build; idf constant-folds per term.
-        # Dictionary-absent terms have no postings rows — their sum is
-        # NULL either way, the coalesce below keeps the fold exact.
-        from elasticsearch_assets_spark.query.exec import term_dfs
-
+        # idfs in one map literal (the scored_terms shape): no per-query
+        # broadcast build, no per-query double in the generated code.
+        # Dictionary-absent terms have no postings rows — they get no
+        # conditional sum, and skipping their +coalesce(NULL, 0.0)
+        # keeps the fold exact.
         dfs = term_dfs(index, all_terms)
-
-        def _contrib(t):
-            return score_contrib_col(
-                F.col("tf").cast("double"),
-                F.col("dl").cast("double"),
-                F.lit(float(dfs[t])),
-                index.n_docs,
-                index.avg_dl,
-            )
-
-        aggs = [
-            F.sum(
-                F.when(F.col("term") == t, _contrib(t))
-                if t in dfs
-                else F.lit(None).cast("double")
-            ).alias(f"_c{i}")
-            for i, t in enumerate(all_terms)
+        if not dfs:
+            return phrase_empty(index)
+        contrib = Q.contrib(
+            f"element_at({Q.idf_map(index.n_docs, dfs)}, term)", "tf", "dl", index.avg_dl
+        )
+        g = cand.selectExpr("doc_id", "term", f"{contrib} AS _contrib").groupBy("doc_id")
+        sub_sums = [
+            Q.term_fold([t for t in s if t in dfs], "_contrib") for s in subs
         ]
-        g = cand.groupBy("doc_id").agg(*aggs)
-        col_of = {t: F.col(f"_c{all_terms.index(t)}") for t in all_terms}
-        sub_scores: list[Column] = []
-        for s in subs:
-            sc = F.lit(0.0)
-            for t in s:  # already sorted — the pinned fold order
-                sc = sc + F.coalesce(col_of[t], F.lit(0.0))
-            sub_scores.append(sc)
     else:
         # >32 union terms: share scored_terms' wide-expansion shape
         # (VERDICT r6 item 4) — ONE sorted (term, contrib) array per doc
         # and one fold per SUBQUERY, instead of one conditional-sum
-        # aggregate per term (a >32-branch sum chain stalls
-        # codegen/Column conversion; see query/exec.py:96-118).
+        # aggregate per term (a >32-branch sum chain stalls codegen).
         # Each subquery folds ONLY its own terms, in term-sorted array
-        # order from 0.0 — bit-identical to the literal chain above
-        # (absent terms simply don't appear; x + 0.0 == x is IEEE-exact
-        # for present ones, and (term, doc_id) rows are unique so each
-        # term contributes once).
-        dfm = _df_map(index, all_terms)
-        contrib = cand.join(F.broadcast(dfm), "term").withColumn(
-            "contrib",
-            score_contrib_col(
-                F.col("tf").cast("double"),
-                F.col("dl").cast("double"),
-                F.col("df").cast("double"),
-                index.n_docs,
-                index.avg_dl,
-            ),
+        # order from 0.0 — bit-identical to the conditional-sum chain
+        # above (absent terms simply don't appear; x + 0.0 == x is
+        # IEEE-exact for present ones, and (term, doc_id) rows are
+        # unique so each term contributes once).
+        contrib = Q.contrib(
+            Q.idf(index.n_docs, "CAST(df AS DOUBLE)"), "tf", "dl", index.avg_dl
         )
-        g = contrib.groupBy("doc_id").agg(
-            F.sort_array(F.collect_list(F.struct("term", "contrib"))).alias(
-                "_cs"
-            )
+        g = (
+            cand.join(F.broadcast(_df_map(index, all_terms)), "term")
+            .selectExpr("doc_id", f"struct(term, {contrib} AS contrib) AS _tc")
+            .groupBy("doc_id")
         )
-
-        def _sub_fold(terms: list[str]):
-            tset = F.array(*[F.lit(t) for t in terms])
-
-            def _pred(x):
-                return F.array_contains(tset, x["term"])
-
-            return F.aggregate(
-                F.filter(F.col("_cs"), _pred),
-                F.lit(0.0),
-                lambda acc, x: acc + x["contrib"],
-            )
-
-        sub_scores = [_sub_fold(s) for s in subs]
-    best = sub_scores[0] if len(sub_scores) == 1 else F.greatest(*sub_scores)
-    total = sub_scores[0]
-    for sc in sub_scores[1:]:
-        total = total + sc
-    score = best + F.lit(float(tie_breaker)) * (total - best)
-    out = g.select("doc_id", score.alias("score"))
-    return top_k(out, k)
+        sub_sums = [
+            f"aggregate(filter(sort_array(collect_list(_tc)), x -> {Q.in_list('x.term', s)}),"
+            " 0.0D, (acc, x) -> acc + x.contrib)"
+            for s in subs
+        ]
+    sub_scores = [f"_s{i}" for i in range(len(subs))]
+    best = sub_scores[0] if len(subs) == 1 else f"greatest({', '.join(sub_scores)})"
+    total = " + ".join(sub_scores)
+    score = f"{best} + {Q.lit(float(tie_breaker))} * (({total}) - {best})"
+    out = g.agg(*[F.expr(f"{e} AS _s{i}") for i, e in enumerate(sub_sums)])
+    return top_k(out.selectExpr("doc_id", f"{score} AS score"), k)
 
 
 # ---------------------------------------------------------------------------
@@ -179,25 +145,14 @@ def boosting_query(
     one extra bounded scan + join over bool_query's shape, no new
     shuffle kind. Float determinism: score * literal is a single IEEE
     multiply; the oracle replays it."""
-    from .exec import scored_terms
-
-    pos = scored_terms(index, sorted(set(positive))).select("doc_id", "score")
+    pos = scored_terms(index, sorted(set(positive))).selectExpr("doc_id", "score")
     neg_terms = sorted(set(negative))
     if not neg_terms:
         return top_k(pos, k)
-    neg = (
-        _candidates(index, neg_terms)
-        .select("doc_id")
-        .distinct()
-        .withColumn("_neg", F.lit(True))
-    )
-    out = pos.join(neg, "doc_id", "left").select(
+    neg = _candidates(index, neg_terms).selectExpr("doc_id", "TRUE AS _neg").distinct()
+    out = pos.join(neg, "doc_id", "left").selectExpr(
         "doc_id",
-        F.when(
-            F.col("_neg"), F.col("score") * F.lit(float(negative_boost))
-        )
-        .otherwise(F.col("score"))
-        .alias("score"),
+        f"CASE WHEN _neg THEN score * {Q.lit(float(negative_boost))} ELSE score END AS score",
     )
     return top_k(out, k)
 
@@ -212,12 +167,11 @@ def constant_score_query(
     smallest matching doc_ids at equal score."""
     uniq = sorted(set(terms))
     if not uniq:
-        return phrase_empty(index).select("doc_id", "score")
+        return phrase_empty(index).selectExpr("doc_id", "score")
     out = (
         _candidates(index, uniq)
-        .select("doc_id")
+        .selectExpr("doc_id", f"{Q.lit(float(boost))} AS score")
         .distinct()
-        .withColumn("score", F.lit(float(boost)))
     )
     return top_k(out, k)
 
@@ -237,7 +191,7 @@ def prefix_expansions(
     the collect is bounded by max_expansions BEFORE it runs."""
     rows = (
         dict_hits(index, prefix + "*")
-        .orderBy(F.asc("term"))
+        .orderBy("term")
         .limit(max_expansions)
         .collect()
     )
@@ -286,8 +240,6 @@ def match_phrase_prefix(
         return phrase_empty(index)
 
     uniq = sorted(set(fixed))
-    from elasticsearch_assets_spark.query.exec import term_dfs
-
     dfs = term_dfs(index, uniq)
     if len(dfs) < len(uniq):
         return phrase_empty(index)
@@ -298,38 +250,23 @@ def match_phrase_prefix(
     exp_pos = (
         _candidates(index, expanded)
         .groupBy("doc_id")
-        .agg(F.sort_array(F.flatten(F.collect_list("positions"))).alias("_pexp"))
+        .agg(F.expr("sort_array(flatten(collect_list(positions))) AS _pexp"))
     )
 
     cols = {t: f"_p{i}" for i, t in enumerate(uniq)}
     joined = None
     for t in uniq:
-        sel = [F.col("doc_id"), F.col("positions").alias(cols[t])]
-        if joined is None:
-            sel.append(F.col("dl"))
-        part = _candidates(index, [t]).select(*sel)
+        sel = ["doc_id", f"positions AS {cols[t]}"] + (["dl"] if joined is None else [])
+        part = _candidates(index, [t]).selectExpr(*sel)
         joined = part if joined is None else joined.join(part, "doc_id")
     joined = joined.join(exp_pos, "doc_id")
 
-    def _step(i, nxt):
-        return lambda p: F.array_contains(nxt, p + F.lit(i))
-
-    starts = F.col(cols[fixed[0]])
-    for i, t in enumerate(fixed[1:], start=1):
-        starts = F.filter(starts, _step(i, F.col(cols[t])))
-    starts = F.filter(starts, _step(len(fixed), F.col("_pexp")))
-    matched = joined.where(F.size(starts) > 0)
-
-    score = F.lit(0.0)
-    for t in uniq:
-        score = score + score_contrib_col(
-            F.size(F.col(cols[t])).cast("double"),
-            F.col("dl").cast("double"),
-            F.lit(float(dfs[t])),
-            index.n_docs,
-            index.avg_dl,
-        )
-    return top_k(matched.select("doc_id", score.alias("score")), k)
+    starts = cols[fixed[0]]
+    for i, nxt in enumerate([cols[t] for t in fixed[1:]] + ["_pexp"], start=1):
+        starts = f"filter({starts}, p -> array_contains({nxt}, p + {i}))"
+    matched = joined.where(f"size({starts}) > 0")
+    score = Q.positions_score(cols, dfs, index.n_docs, index.avg_dl)
+    return top_k(matched.selectExpr("doc_id", f"{score} AS score"), k)
 
 
 # ---------------------------------------------------------------------------

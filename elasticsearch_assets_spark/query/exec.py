@@ -7,15 +7,17 @@ ES tie-break (score desc, doc_id asc).
 
 Plan shape for `match`, the flagship path:
 
-    postings(bucket pruned, term pushed down)
-      -> join broadcast(term df map)          [tiny: |query terms| rows]
-      -> per-row BM25 contribution            [JVM codegen, no shuffle]
-      -> groupBy(doc_id).sum                  [one shuffle, partial agg]
-      -> TakeOrderedAndProject(k)             [no global sort]
+    postings(bucket pruned, term pushed down)   WHERE bucket IN (..) AND term IN (..)
+      -> per-row BM25 contribution               element_at(idf_map, term) * tf_norm * (k1+1)
+      -> groupBy(doc_id): conditional sums       [one shuffle, partial agg]
+         folded in term order                    0.0 + coalesce(sum(CASE WHEN term = 'a' ..), 0.0) + ..
+      -> TakeOrderedAndProject(k)                [no global sort]
 
-The only shuffle is the per-doc score combine; candidate set size is
-bounded by Σ df(term), and the bucket partition filter means a 10^12-doc
-index touches only the directories owning the query's terms.
+Each step is SQL text rendered by query/sql.py; the query's idfs ride
+one `map(...)` literal, so queries of one shape reuse one compiled
+class. The only shuffle is the per-doc score combine; candidate set
+size is bounded by Σ df(term), and the bucket partition filter means a
+10^12-doc index touches only the directories owning the query's terms.
 """
 
 from __future__ import annotations
@@ -28,7 +30,8 @@ from pyspark.sql import functions as F
 from elasticsearch_assets_spark.functions.analyzer import analyze_text
 from elasticsearch_assets_spark.functions.xxhash import term_bucket
 from elasticsearch_assets_spark.indexing.build import IndexTables
-from elasticsearch_assets_spark.query.bm25 import K1, B, score_contrib_col
+from elasticsearch_assets_spark.query import sql as Q
+from elasticsearch_assets_spark.query.bm25 import K1, B
 
 
 def _candidates(index: IndexTables, terms: list[str]) -> DataFrame:
@@ -36,12 +39,12 @@ def _candidates(index: IndexTables, terms: list[str]) -> DataFrame:
     partition pruning + term predicate pushdown."""
     p = index.postings
     if not terms:
-        return p.where(F.lit(False))
+        return p.where("FALSE")
     # bucket(term) must match the build-side pmod(xxhash64(term), B);
     # the pure-Python XXH64 is parity-pinned to Spark's, so partition
     # filters cost zero Spark jobs.
     buckets = sorted({term_bucket(t, index.n_buckets) for t in terms})
-    return p.where(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
+    return p.where(Q.candidates(buckets, terms))
 
 
 def _require_positions(index: IndexTables) -> None:
@@ -52,7 +55,7 @@ def _require_positions(index: IndexTables) -> None:
 
 def _df_map(index: IndexTables, terms: list[str]) -> DataFrame:
     """Tiny (term, df) frame for the query's terms — broadcast side."""
-    return index.terms.where(F.col("term").isin(terms))
+    return index.terms.where(Q.in_list("term", terms))
 
 
 # bound on the driver-side (term -> df) dictionary cache: at ~50 B/entry
@@ -83,16 +86,31 @@ def term_dfs(index: IndexTables, terms: list[str]) -> dict[str, int]:
 def scored_terms(
     index: IndexTables, terms: list[str], k1: float = K1, b: float = B
 ) -> DataFrame:
-    """Per-doc summed BM25 over the given terms → (doc_id, score,
-    n_matched). Basis for match/should (OR) and must (AND)."""
+    """Per-doc summed BM25 over the given terms → (doc_id, n_matched,
+    dl, score). Basis for match/should (OR) and must (AND)."""
+    return _scored_terms(index, terms, k1, b)
+
+
+def _scored_terms(
+    index: IndexTables,
+    terms: list[str],
+    k1: float = K1,
+    b: float = B,
+    counts: dict[str, list[str]] | None = None,
+) -> DataFrame:
+    """scored_terms plus one column per `counts` entry (name -> a
+    subset of `terms`): how many of those terms each doc matched. The
+    counts ride the scoring aggregation, so match gates on term subsets
+    (bool's must / minimum_should_match) cost no second scan."""
     cand = _candidates(index, terms)
+    counts = counts or {}
     # Deterministic float association: contributions are summed in
     # term-sorted order (matches the oracle bit-for-bit; a plain
     # groupBy().sum() sums in shuffle-arrival order and near-ties then
     # rank-swap — SURVEY.md §7 "genuinely hard" #1). For the normal
     # short term list the fold is a chain of per-term conditional sums
-    # — (term, doc_id) is unique post-tf-aggregation, so sum(when(term
-    # = t_i)) is exactly that term's single contribution and the
+    # — (term, doc_id) is unique post-tf-aggregation, so sum(CASE WHEN
+    # term = t_i) is exactly that term's single contribution and the
     # left-to-right chain reproduces the sorted fold bit-for-bit while
     # staying in whole-stage codegen: measured ~2x faster than the
     # collect_list + sort_array + aggregate() shape on a 1.2M-doc
@@ -103,88 +121,72 @@ def scored_terms(
     # row once — both paths must agree for ANY input list)
     terms_sorted = sorted(set(terms))
     if len(terms_sorted) <= 32:
-        # dfs as driver-side literals (r7, same trick phrase_query has
-        # used since r5): the per-query BroadcastExchange of the tiny
-        # (term, df) frame — a broadcast-BUILD job on every invocation —
-        # is gone; the idf factor constant-folds per term. The ln() and
-        # every float op stay JVM-side, so contributions are
-        # bit-identical to the joined-df form.
+        # dfs from the driver-side dictionary cache, idfs in one map
+        # literal (query/sql.py): no per-query broadcast-build job and
+        # no per-query double in the generated code. The ln() and every
+        # float op stay JVM-side, bit-identical to the joined-df form.
         dfs = term_dfs(index, terms_sorted)
-
-        def _contrib(t):
-            return score_contrib_col(
-                F.col("tf").cast("double"),
-                F.col("dl").cast("double"),
-                F.lit(float(dfs[t])),
-                index.n_docs,
-                index.avg_dl,
-                k1,
-                b,
-            )
-
-        # dictionary-absent terms have no postings rows (the former
-        # dfm join dropped nothing: every postings term has a
-        # dictionary row by construction) — they get no conditional
-        # sum, and skipping their +coalesce(NULL, 0.0) leaves the
-        # running score bit-identical (x + 0.0 == x, IEEE-exact for
-        # the non-negative contributions).
+        # dictionary-absent terms have no postings rows (every postings
+        # term has a dictionary row by construction) — they get no
+        # conditional sum, and skipping their +coalesce(NULL, 0.0)
+        # leaves the running score bit-identical (x + 0.0 == x,
+        # IEEE-exact for the non-negative contributions).
         present = [t for t in terms_sorted if t in dfs]
         if not present:
-            return (
-                cand.select("doc_id")
-                .withColumn("n_matched", F.lit(0).cast("bigint"))
-                .withColumn("dl", F.lit(0).cast("int"))
-                .withColumn("score", F.lit(0.0))
-                .limit(0)
-            )
-        aggs = [
-            F.sum(F.when(F.col("term") == t, _contrib(t))).alias(f"_c{i}")
-            for i, t in enumerate(present)
-        ]
-        g = cand.groupBy("doc_id").agg(
-            *aggs, F.count("*").alias("n_matched"), F.first("dl").alias("dl")
+            return cand.selectExpr(
+                "doc_id", "CAST(0 AS BIGINT) AS n_matched", "0 AS dl", "0.0D AS score",
+                *[f"CAST(0 AS BIGINT) AS {name}" for name in counts],
+            ).limit(0)
+        contrib = Q.contrib(
+            f"element_at({Q.idf_map(index.n_docs, dfs)}, term)",
+            "tf", "dl", index.avg_dl, k1, b,
         )
-        # Per-doc-absent terms contribute coalesce(NULL, 0.0): x + 0.0
-        # == x is IEEE-exact, so the running value is bit-identical to
-        # a fold that skips absent terms outright — while keeping the
-        # expression tree LINEAR in the term count. (A when(c.isNotNull
-        # (), score + c).otherwise(score) chain references `score`
-        # twice per level: a 2^n-node tree that stalled
-        # Column->Expression conversion beyond ~20 terms.)
-        score = F.lit(0.0)
-        for i in range(len(present)):
-            score = score + F.coalesce(F.col(f"_c{i}"), F.lit(0.0))
-        return g.withColumn("score", score).drop(
-            *[f"_c{i}" for i in range(len(present))]
+        return (
+            cand.selectExpr("doc_id", "term", "dl", f"{contrib} AS _contrib")
+            .groupBy("doc_id")
+            .agg(
+                F.expr("count(1) AS n_matched"),
+                F.expr("first(dl) AS dl"),
+                F.expr(f"{Q.term_fold(present, '_contrib')} AS score"),
+                *_term_counts(counts, "term"),
+            )
         )
     # >32 terms (wide expansions): broadcast the (term, df) frame and
     # fold an array of per-term contributions — codegen can't absorb a
     # 100-branch conditional-sum chain (see r5 notes).
-    dfm = _df_map(index, terms_sorted)
-    contrib = cand.join(F.broadcast(dfm), "term").withColumn(
-        "contrib",
-        score_contrib_col(
-            F.col("tf").cast("double"),
-            F.col("dl").cast("double"),
-            F.col("df").cast("double"),
-            index.n_docs,
-            index.avg_dl,
-            k1,
-            b,
-        ),
+    return _array_fold(
+        cand.join(F.broadcast(_df_map(index, terms_sorted)), "term"), index, k1, b, counts
     )
+
+
+def _term_counts(counts: dict[str, list[str]], key: str) -> list:
+    return [
+        F.expr(f"count(CASE WHEN {Q.in_list(key, ts)} THEN 1 END) AS {name}")
+        for name, ts in counts.items()
+    ]
+
+
+def _array_fold(
+    joined: DataFrame,
+    index: IndexTables,
+    k1: float = K1,
+    b: float = B,
+    counts: dict[str, list[str]] | None = None,
+) -> DataFrame:
+    """(doc_id, n_matched, dl, score, *counts) from postings rows
+    joined with their term's df: contributions sorted by term per doc,
+    folded from 0.0 — the conditional-sum chain's association for any
+    term count."""
+    contrib = Q.contrib(Q.idf(index.n_docs, "CAST(df AS DOUBLE)"), "tf", "dl", index.avg_dl, k1, b)
     return (
-        contrib.groupBy("doc_id")
+        joined.selectExpr("doc_id", "dl", f"struct(term, {contrib} AS contrib) AS _tc")
+        .groupBy("doc_id")
         .agg(
-            F.sort_array(F.collect_list(F.struct("term", "contrib"))).alias("_cs"),
-            F.count("*").alias("n_matched"),
-            F.first("dl").alias("dl"),
+            F.expr("count(1) AS n_matched"),
+            F.expr("first(dl) AS dl"),
+            F.expr("aggregate(sort_array(collect_list(_tc)), 0.0D, (acc, x) -> acc + x.contrib) AS score"),
+            *_term_counts(counts or {}, "_tc.term"),
         )
-        .withColumn(
-            "score",
-            F.aggregate("_cs", F.lit(0.0), lambda acc, x: acc + x["contrib"]),
-        )
-        .drop("_cs")
     )
 
 
@@ -222,14 +224,14 @@ def match_query(
     terms = sorted(set(analyze_text(text)))
     s = scored_terms(index, terms)
     if operator == "and":
-        s = s.where(F.col("n_matched") == len(terms))
-    return top_k(s.select("doc_id", "score"), k)
+        s = s.where(f"n_matched = {len(terms)}")
+    return top_k(s.selectExpr("doc_id", "score"), k)
 
 
 def terms_query(index: IndexTables, terms: list[str], k: int = 10) -> DataFrame:
     """ES `terms` query: un-analyzed exact terms, OR semantics."""
     s = scored_terms(index, sorted(set(terms)))
-    return top_k(s.select("doc_id", "score"), k)
+    return top_k(s.selectExpr("doc_id", "score"), k)
 
 
 def resolve_msm(minimum_should_match: int | str, n_optional: int) -> int:
@@ -273,49 +275,52 @@ def bool_query(
     minimum_should_match (int or "N%"): at least that many DISTINCT
     should terms must match. ES default: 1 when there are only should
     clauses (any candidate matches ≥1 term, so that holds for free),
-    0 when a must clause exists. When both must and extra should terms
-    are present, the should-count gate is a second conditional-sum
-    aggregation over the should terms semi-joined in — the same shape
-    as the must gate, one extra bounded scan, no new shuffle kind."""
+    0 when a must clause exists. The must and should gates are per-doc
+    counts of matched must / should terms computed in the scoring
+    aggregation itself — one scan and one shuffle for must + should,
+    whatever the gates."""
     must = sorted(set(must or []))
     should = sorted(set(should or []))
     must_not = sorted(set(must_not or []))
 
     all_scoring = sorted(set(must) | set(should))
-    s = scored_terms(index, all_scoring)
+    counts, gates = {}, []
     if must:
         if must == all_scoring:
             # no extra should-terms: n_matched over the scoring set IS
-            # the must-conjunction — skip the second aggregation + join
-            s = s.where(F.col("n_matched") == len(must))
+            # the must-conjunction
+            gates.append(f"n_matched = {len(must)}")
         else:
-            m = scored_terms(index, must).where(F.col("n_matched") == len(must))
-            s = s.join(m.select("doc_id"), "doc_id", "left_semi")
+            counts["_n_must"] = must
+            gates.append(f"_n_must = {len(must)}")
     if minimum_should_match is not None and should:
         msm = resolve_msm(minimum_should_match, len(should))
         if msm > 1 or (msm == 1 and must):
             if not must and should == all_scoring:
                 # pure-should bool: n_matched counts exactly the
-                # should terms — a plain filter, zero extra work
-                s = s.where(F.col("n_matched") >= msm)
+                # should terms
+                gates.append(f"n_matched >= {msm}")
             else:
-                sm = scored_terms(index, should).where(
-                    F.col("n_matched") >= msm
-                )
-                s = s.join(sm.select("doc_id"), "doc_id", "left_semi")
+                counts["_n_should"] = should
+                gates.append(f"_n_should >= {msm}")
+    s = _scored_terms(index, all_scoring, counts=counts)
+    if gates:
+        s = s.where(" AND ".join(gates))
     if must_not:
         # no .distinct(): an anti-join is insensitive to right-side
         # duplicates, so deduping the exclusion set is a pure extra
-        # exchange+aggregate (the join shuffles the same rows either way)
-        ex = _candidates(index, must_not).select("doc_id")
-        s = s.join(ex, "doc_id", "left_anti")
-    return top_k(s.select("doc_id", "score"), k)
+        # exchange+aggregate (the join shuffles the same rows either
+        # way); its right side is pruned to doc_id by the optimizer
+        s = s.join(_candidates(index, must_not), "doc_id", "left_anti")
+    return top_k(s.selectExpr("doc_id", "score"), k)
 
 
 # below this many dictionary hits, expansion collects the terms and
 # keeps STATIC bucket partition pruning (zero-job driver-side bucket
 # math); above it, hits stay distributed and postings are semi-joined
 WILDCARD_COLLECT_THRESHOLD = 128
+# upper bound of a prefix range scan: term >= p AND term < p + _MAX_CHAR
+_MAX_CHAR = "\uffff"
 
 
 def dict_hits(index: IndexTables, pattern: str) -> DataFrame:
@@ -350,31 +355,29 @@ def dict_hits(index: IndexTables, pattern: str) -> DataFrame:
         if len(parts) == 2:
             pre, suf = parts
             if pre and not suf:
-                return t.where((F.col("term") >= pre) & (F.col("term") < pre + "￿"))
+                return t.where(f"term >= {Q.lit(pre)} AND term < {Q.lit(pre + _MAX_CHAR)}")
             if suf and not pre:
                 rev = getattr(index, "terms_rev", None)
                 if rev is not None:
                     rs = suf[::-1]
                     return rev.where(
-                        (F.col("rev") >= rs) & (F.col("rev") < rs + "￿")
-                    ).select("term", "df")
-                return t.where(F.col("term").endswith(suf))
+                        f"rev >= {Q.lit(rs)} AND rev < {Q.lit(rs + _MAX_CHAR)}"
+                    ).selectExpr("term", "df")
+                return t.where(f"endswith(term, {Q.lit(suf)})")
             if pre and suf:
                 return t.where(
-                    F.col("term").startswith(pre)
-                    & F.col("term").endswith(suf)
-                    & (F.length("term") >= len(pre) + len(suf))
+                    f"startswith(term, {Q.lit(pre)}) AND endswith(term, {Q.lit(suf)})"
+                    f" AND length(term) >= {len(pre) + len(suf)}"
                 )
             return t  # bare "*": every term
         if len(parts) == 3 and parts[0] == "" and parts[2] == "" and parts[1]:
-            return t.where(F.col("term").contains(parts[1]))
-    regex = "^" + _glob_to_regex(p) + "$"
-    return t.where(F.col("term").rlike(regex))
+            return t.where(f"contains(term, {Q.lit(parts[1])})")
+    return t.where(f"term RLIKE {Q.lit('^' + _glob_to_regex(p) + '$')}")
 
 
 def dict_hits_regexp(index: IndexTables, pattern: str) -> DataFrame:
     """Dictionary rows matching an anchored ES regexp."""
-    return index.terms.where(F.col("term").rlike(f"^{pattern}$"))
+    return index.terms.where(f"term RLIKE {Q.lit(f'^{pattern}$')}")
 
 
 def dict_hits_fuzzy(index: IndexTables, term: str, max_edits: int = 2) -> DataFrame:
@@ -384,13 +387,14 @@ def dict_hits_fuzzy(index: IndexTables, term: str, max_edits: int = 2) -> DataFr
     at 10^9 dictionary terms it prunes the scan to a narrow length band
     before the O(nm) distance runs. Spark's levenshtein() also takes a
     threshold arg, which short-circuits rows beyond the bound."""
-    q = term.lower()
+    return index.terms.where(_fuzzy_pred(term.lower(), max_edits))
+
+
+def _fuzzy_pred(q: str, max_edits: int) -> str:
     n = len(q)
-    lt = F.length("term")
-    return index.terms.where(
-        (lt >= n - max_edits)
-        & (lt <= n + max_edits)
-        & (F.levenshtein(F.col("term"), F.lit(q), max_edits) >= 0)
+    return (
+        f"length(term) >= {n - max_edits} AND length(term) <= {n + max_edits}"
+        f" AND levenshtein(term, {Q.lit(q)}, {max_edits}) >= 0"
     )
 
 
@@ -551,22 +555,13 @@ def dict_hits_fuzzy_indexed(
             n_buckets = meta.get("n_buckets")
     q = term.lower()
     qvars = deletion_variants_py(q, max_edits, prefix_len)
-    pred = F.col("variant").isin(qvars)
+    pred = Q.in_list("variant", qvars)
     if n_buckets is not None and "vbucket" in fuzzy.columns:
         # persisted layout: driver-side bucket math prunes directories
         buckets = sorted({term_bucket(v, n_buckets) for v in qvars})
-        pred = F.col("vbucket").isin(buckets) & pred
-    cand = fuzzy.where(pred).select("term").distinct()
-    n = len(q)
-    lt = F.length("term")
-    return (
-        index.terms.join(cand, "term", "left_semi")
-        .where(
-            (lt >= n - max_edits)
-            & (lt <= n + max_edits)
-            & (F.levenshtein(F.col("term"), F.lit(q), max_edits) >= 0)
-        )
-    )
+        pred = f"{Q.in_list('vbucket', buckets)} AND {pred}"
+    cand = fuzzy.where(pred).selectExpr("term").distinct()
+    return index.terms.join(cand, "term", "left_semi").where(_fuzzy_pred(q, max_edits))
 
 
 def scored_expansion(index: IndexTables, hits: DataFrame) -> DataFrame:
@@ -580,41 +575,15 @@ def scored_expansion(index: IndexTables, hits: DataFrame) -> DataFrame:
     # ONE dictionary job (r7): the threshold probe is the collect
     # itself, bounded to threshold+1 short terms (see
     # expanded_candidates)
-    rows = hits.select("term").limit(WILDCARD_COLLECT_THRESHOLD + 1).collect()
+    rows = hits.selectExpr("term").limit(WILDCARD_COLLECT_THRESHOLD + 1).collect()
     if not rows:
-        return (
-            index.postings.select("doc_id")
-            .limit(0)
-            .withColumn("score", F.lit(0.0))
-            .withColumn("n_matched", F.lit(0).cast("long"))
-        )
+        return index.postings.selectExpr(
+            "doc_id", "0.0D AS score", "CAST(0 AS BIGINT) AS n_matched"
+        ).limit(0)
     if len(rows) <= WILDCARD_COLLECT_THRESHOLD:
         return scored_terms(index, sorted(r["term"] for r in rows))
     cand = _candidates_semi(index, hits)
-    contrib = cand.join(hits.select("term", "df"), "term").withColumn(
-        "contrib",
-        score_contrib_col(
-            F.col("tf").cast("double"),
-            F.col("dl").cast("double"),
-            F.col("df").cast("double"),
-            index.n_docs,
-            index.avg_dl,
-            K1,
-            B,
-        ),
-    )
-    return (
-        contrib.groupBy("doc_id")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("term", "contrib"))).alias("_cs"),
-            F.count("*").alias("n_matched"),
-        )
-        .withColumn(
-            "score",
-            F.aggregate("_cs", F.lit(0.0), lambda acc, x: acc + x["contrib"]),
-        )
-        .drop("_cs")
-    )
+    return _array_fold(cand.join(hits.selectExpr("term", "df"), "term"), index)
 
 
 def fuzzy_query(
@@ -629,7 +598,7 @@ def fuzzy_query(
     distance; this engine scores each expansion with its exact BM25
     contribution (deterministic, oracle-reproducible)."""
     hits = dict_hits_fuzzy(index, value, max_edits)
-    return top_k(scored_expansion(index, hits).select("doc_id", "score"), k)
+    return top_k(scored_expansion(index, hits).selectExpr("doc_id", "score"), k)
 
 
 def _candidates_semi(index: IndexTables, hits: DataFrame) -> DataFrame:
@@ -642,11 +611,8 @@ def _candidates_semi(index: IndexTables, hits: DataFrame) -> DataFrame:
     forcing a broadcast would materialize it on the driver. AQE picks
     broadcast on its own when runtime stats show the set is small; a
     genuinely huge expansion stays a shuffle semi-join."""
-    hb = hits.select(
-        "term",
-        F.pmod(F.xxhash64("term"), F.lit(index.n_buckets))
-        .cast("int")
-        .alias("bucket"),
+    hb = hits.selectExpr(
+        "term", f"CAST(pmod(xxhash64(term), {index.n_buckets}) AS INT) AS bucket"
     )
     return index.postings.join(hb, ["bucket", "term"], "left_semi")
 
@@ -660,9 +626,9 @@ def expanded_candidates(index: IndexTables, hits: DataFrame) -> DataFrame:
     limit(threshold+1) bounds the driver transfer to ≤129 short terms,
     and only the > branch leaves the hit set distributed (the former
     separate count job then re-collect doubled the dictionary scans)."""
-    rows = hits.select("term").limit(WILDCARD_COLLECT_THRESHOLD + 1).collect()
+    rows = hits.selectExpr("term").limit(WILDCARD_COLLECT_THRESHOLD + 1).collect()
     if not rows:
-        return index.postings.where(F.lit(False))
+        return index.postings.where("FALSE")
     if len(rows) <= WILDCARD_COLLECT_THRESHOLD:
         return _candidates(index, [r["term"] for r in rows])
     return _candidates_semi(index, hits)
@@ -671,7 +637,7 @@ def expanded_candidates(index: IndexTables, hits: DataFrame) -> DataFrame:
 def expand_wildcard(index: IndexTables, pattern: str) -> list[str]:
     """Driver-side expansion (small patterns / tests): the scale path is
     expanded_candidates(dict_hits(...))."""
-    return [r["term"] for r in dict_hits(index, pattern).select("term").collect()]
+    return [r["term"] for r in dict_hits(index, pattern).selectExpr("term").collect()]
 
 
 def _glob_to_regex(glob: str) -> str:
@@ -692,7 +658,7 @@ def wildcard_query(index: IndexTables, pattern: str, k: int = 10) -> DataFrame:
     """ES `wildcard`: constant-score filter (score = 1.0 per doc, the ES
     constant_score semantics for multi-term queries), tie-break doc_id."""
     cand = expanded_candidates(index, dict_hits(index, pattern))
-    out = cand.select("doc_id").distinct().withColumn("score", F.lit(1.0))
+    out = cand.selectExpr("doc_id", "1.0D AS score").distinct()
     if k >= ALL_MATCHES:
         # "every match" (the planner's docset composition): the
         # ordering is destroyed downstream and the huge-k limit is a
@@ -703,30 +669,22 @@ def wildcard_query(index: IndexTables, pattern: str, k: int = 10) -> DataFrame:
 
 def term_filter_count(index: IndexTables, terms: list[str]) -> int:
     """Q13 `count`: exact hit count for an OR-of-terms query."""
-    return _candidates(index, sorted(set(terms))).select("doc_id").distinct().count()
+    return _candidates(index, sorted(set(terms))).selectExpr("doc_id").distinct().count()
 
 
-def _conjunction_docset(
-    index: IndexTables, terms: list[str], dfs: dict[str, int] | None = None
-) -> DataFrame:
-    """Doc ids containing ALL of `terms` — a rarest-term-first left_semi
-    chain over the POSTINGS table (the same candidate-restriction trick
-    MaxScore uses in query/wand.py): the rarest term's doc set is small,
-    so every later step is a semi-join of a hot posting scan against a
-    small (AQE-broadcastable) doc set — position arrays never enter the
-    plan. The df lookup is an O(#query-terms) dictionary probe."""
-    uniq = sorted(set(terms))
-    if dfs is None:
-        dfs = term_dfs(index, uniq)
-    if len(dfs) < len(uniq):
-        # dictionary-missing term: the conjunction is provably empty
-        return index.postings.select("doc_id").where(F.lit(False))
-    order = sorted(uniq, key=lambda t: (dfs[t], t))
-    docset = _candidates(index, [order[0]]).select("doc_id")
+def _conjunction_docset(index: IndexTables, dfs: dict[str, int]) -> DataFrame:
+    """Docs containing ALL of the (dictionary-present) terms keyed in
+    `dfs` — a rarest-term-first left_semi chain over the POSTINGS table
+    (the same candidate-restriction trick MaxScore uses in
+    query/wand.py): the rarest term's doc set is small, so every later
+    step is a semi-join of a hot posting scan against a small
+    (AQE-broadcastable) doc set. Returns the rarest term's posting
+    rows; callers use it as a semi-join's right side, which the
+    optimizer prunes to doc_id — position arrays never enter the plan."""
+    order = sorted(dfs, key=lambda t: (dfs[t], t))
+    docset = _candidates(index, [order[0]])
     for t in order[1:]:
-        docset = docset.join(
-            _candidates(index, [t]).select("doc_id"), "doc_id", "left_semi"
-        )
+        docset = docset.join(_candidates(index, [t]), "doc_id", "left_semi")
     return docset
 
 
@@ -871,7 +829,7 @@ def phrase_query(
         sum_df = sum(dfs.values())
         min_df = min(dfs.values())
         if sum_df > 1.5 * len(dfs) * min_df:
-            docset = _conjunction_docset(index, uniq, dfs)
+            docset = _conjunction_docset(index, dfs)
 
     # One positions column per unique term, INNER-joined on doc_id —
     # the join chain IS the all-terms-present check, and measured 3.3x
@@ -882,66 +840,41 @@ def phrase_query(
     cols = {t: f"_p{i}" for i, t in enumerate(uniq)}
     joined = None
     for t in uniq:
-        sel = [F.col("doc_id"), F.col("positions").alias(cols[t])]
-        if joined is None:
-            sel.append(F.col("dl"))
-        part = _candidates(index, [t]).select(*sel)
+        sel = ["doc_id", f"positions AS {cols[t]}"] + (["dl"] if joined is None else [])
+        part = _candidates(index, [t]).selectExpr(*sel)
         if docset is not None:
             part = part.join(docset, "doc_id", "left_semi")
         joined = part if joined is None else joined.join(part, "doc_id")
 
-    def _pos_col(t):
-        return F.col(cols[t])
-
-    # phrase = exists start p with term_i at position p+i for all i:
-    # narrow the start set with array filter/contains — all JVM-side
-    # array expressions, no UDF. Factory functions, not defaulted-arg
-    # closures: higher-order fns introspect lambda arity.
-    def _step(i, nxt):
-        return lambda p: F.array_contains(nxt, p + F.lit(i))
-
-    def _step_slop(i, nxt, s):
-        def pred(p):
-            def near(q):
-                return (F.abs(q - (p + F.lit(i))) <= F.lit(s)) & (q != p)
-
-            return F.exists(nxt, near)
-
-        return pred
-
     if slop == 0 or len(terms) == 2:
-        # exact chain (slop 0) and the 2-term direct form (already
+        # phrase = exists start p with term_i at position p+i for all i:
+        # narrow the start set with array filter/contains — all JVM-side
+        # array expressions, no UDF. The 2-term slop form is already
         # exactly Lucene's move count for distinct terms; q != p keeps
-        # "a a"-style repeats on distinct tokens)
-        starts = _pos_col(terms[0])
+        # "a a"-style repeats on distinct tokens.
+        starts = cols[terms[0]]
         for i, t in enumerate(terms[1:], start=1):
-            nxt = _pos_col(t)
-            step = _step(i, nxt) if slop == 0 else _step_slop(i, nxt, slop)
-            starts = F.filter(starts, step)
-        match_pred = F.size(starts) > 0
+            nxt = cols[t]
+            if slop == 0:
+                step = f"p -> array_contains({nxt}, p + {i})"
+            else:
+                step = f"p -> exists({nxt}, q -> abs(q - (p + {i})) <= {slop} AND q != p)"
+            starts = f"filter({starts}, {step})"
+        matched = joined.where(f"size({starts}) > 0")
     else:
-        match_pred = _spread_slop_pred(terms, slop, _pos_col)
-    matched = joined.where(match_pred)
+        matched = joined.where(
+            _spread_slop_pred(terms, slop, lambda t: F.col(cols[t]))
+        )
 
     # Score: BM25 over the phrase's unique terms (ES scores the phrase
     # clause with term statistics of its members). Zero-shuffle: tf =
-    # |positions| per column, dl carried in the rows, df as driver-side
-    # literals; contributions chain left-to-right in term-sorted order
-    # from 0.0 — the exact float association of the oracle's sorted
-    # fold (no explode, no groupBy, pure whole-stage codegen)
-    score = F.lit(0.0)
-    for t in uniq:
-        score = score + score_contrib_col(
-            F.size(_pos_col(t)).cast("double"),
-            F.col("dl").cast("double"),
-            F.lit(float(dfs[t])),
-            index.n_docs,
-            index.avg_dl,
-        )
-    return top_k(matched.select("doc_id", score.alias("score")), k)
+    # |positions| per column, dl carried in the rows, idfs from the
+    # driver-side dfs; contributions chain left-to-right in term-sorted
+    # order from 0.0 — the exact float association of the oracle's
+    # sorted fold (no explode, no groupBy)
+    score = Q.positions_score(cols, dfs, index.n_docs, index.avg_dl)
+    return top_k(matched.selectExpr("doc_id", f"{score} AS score"), k)
 
 
 def phrase_empty(index: IndexTables) -> DataFrame:
-    return index.postings.select(
-        "doc_id", F.lit(0.0).alias("score")
-    ).limit(0)
+    return index.postings.selectExpr("doc_id", "0.0D AS score").limit(0)

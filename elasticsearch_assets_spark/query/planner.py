@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from elasticsearch_assets_spark.functions.analyzer import analyze_text
 from elasticsearch_assets_spark.indexing.build import IndexTables
 from elasticsearch_assets_spark.query import exec as qx
+from elasticsearch_assets_spark.query import sql as Q
 from elasticsearch_assets_spark.query.parser import (
     And,
     Boost,
@@ -100,25 +101,16 @@ class QueryPlanner:
         """Evaluate to (doc_id double score)."""
         if isinstance(node, Term):
             return self._term(node)
-        if isinstance(node, Phrase):
-            return self._phrase(node)
-        if isinstance(node, Wildcard):
-            return self._wildcard(node)
-        if isinstance(node, Regexp):
-            return self._regexp(node)
-        if isinstance(node, Range):
-            return self._range(node)
-        if isinstance(node, Fuzzy):
-            return self._fuzzy(node)
+        if isinstance(node, (Phrase, Wildcard, Regexp, Fuzzy)) and self._is_text(node.field):
+            return self._text_leaf(node)
+        if isinstance(node, (Phrase, Wildcard, Regexp, Range, Fuzzy, Exists)):
+            return self._attr_filter(self._leaf_sql(node))
         if isinstance(node, Boost):
             # multiply the child's score; filter-context children keep
             # their constant 1.0 * factor (Lucene boost semantics)
-            child = self.plan(node.child)
-            return child.select(
-                "doc_id", (F.col("score") * F.lit(node.factor)).alias("score")
+            return self.plan(node.child).selectExpr(
+                "doc_id", f"score * {Q.lit(float(node.factor))} AS score"
             )
-        if isinstance(node, Exists):
-            return self._attr_filter(F.col(node.field).isNotNull())
         if isinstance(node, Or):
             return self._combine(list(node.children), require_all=False)
         if isinstance(node, And):
@@ -139,103 +131,73 @@ class QueryPlanner:
         return self._field(f) in self.config.text_fields
 
     def _term(self, node: Term) -> DataFrame:
-        f = self._field(node.field)
-        if self._is_text(f):
-            terms = sorted(set(analyze_text(node.value)))
-            s = qx.scored_terms(self.index, terms)
-            if len(terms) > 1:
-                # analyzer split the value (e.g. parseDate) — all parts
-                # must be present, like ES match with the analyzed chain
-                s = s.where(F.col("n_matched") == len(terms))
-            return s.select("doc_id", "score")
-        return self._attr_filter(F.col(f).cast("string") == node.value)
+        if not self._is_text(node.field):
+            return self._attr_filter(self._leaf_sql(node))
+        terms = sorted(set(analyze_text(node.value)))
+        s = qx.scored_terms(self.index, terms)
+        if len(terms) > 1:
+            # analyzer split the value (e.g. parseDate) — all parts
+            # must be present, like ES match with the analyzed chain
+            s = s.where(f"n_matched = {len(terms)}")
+        return s.selectExpr("doc_id", "score")
 
-    def _phrase(self, node: Phrase) -> DataFrame:
-        f = self._field(node.field)
-        if self._is_text(f):
-            return qx.phrase_query(
-                self.index, node.text, k=2**31 - 1, slop=node.slop
-            ).select("doc_id", "score")
-        # keyword phrase: exact value match; slop is meaningless on an
-        # unanalyzed field (ES ignores it there too)
-        return self._attr_filter(F.col(f).cast("string") == node.text)
+    def _text_leaf(self, node: Node) -> DataFrame:
+        """Phrase / wildcard / regexp / fuzzy on a scored text field."""
+        if isinstance(node, Phrase):
+            return qx.phrase_query(self.index, node.text, k=qx.ALL_MATCHES, slop=node.slop)
+        if isinstance(node, Wildcard):
+            return qx.wildcard_query(self.index, node.pattern, k=qx.ALL_MATCHES)
+        if isinstance(node, Fuzzy):
+            # dictionary expansion within max_edits, BM25 OR over the
+            # expansions (scale-safe: large expansions stay distributed
+            # — exec.scored_expansion)
+            return qx.fuzzy_query(self.index, node.value, node.max_edits, k=qx.ALL_MATCHES)
+        # regexp: small hit sets collect (static bucket pruning); large
+        # ones semi-join postings on (bucket, term)
+        hits = qx.dict_hits_regexp(self.index, node.pattern)
+        cand = qx.expanded_candidates(self.index, hits)
+        return cand.selectExpr("doc_id", "1.0D AS score").distinct()
 
-    def _wildcard(self, node: Wildcard) -> DataFrame:
-        f = self._field(node.field)
-        if self._is_text(f):
-            return qx.wildcard_query(self.index, node.pattern, k=2**31 - 1).select(
-                "doc_id", "score"
-            )
-        pat = qx._glob_to_regex(node.pattern)
-        return self._attr_filter(F.col(f).cast("string").rlike(f"^{pat}$"))
+    def _leaf_sql(self, node: Node) -> str:
+        """A filter-context leaf (keyword/numeric field) as a SQL
+        predicate over the attrs table. Keyword values compare as
+        strings, unanalyzed and case-sensitive; a phrase on a keyword
+        field is an exact value match (ES ignores slop there too)."""
+        if isinstance(node, Exists):
+            return f"{Q.ident(node.field)} IS NOT NULL"
+        col = Q.ident(self._field(node.field))
+        s = f"CAST({col} AS STRING)"
+        if isinstance(node, Term):
+            return f"{s} = {Q.lit(node.value)}"
+        if isinstance(node, Phrase):
+            return f"{s} = {Q.lit(node.text)}"
+        if isinstance(node, Wildcard):
+            return f"{s} RLIKE {Q.lit('^' + qx._glob_to_regex(node.pattern) + '$')}"
+        if isinstance(node, Regexp):
+            return f"{s} RLIKE {Q.lit('^' + node.pattern + '$')}"
+        if isinstance(node, Fuzzy):
+            # case-sensitive levenshtein filter, no analysis
+            return f"levenshtein({s}, {Q.lit(node.value)}, {node.max_edits}) >= 0"
+        if isinstance(node, Range):
+            # numeric if the bound parses as a number, else a
+            # string/timestamp compare (ISO dates compare correctly as
+            # strings; timestamp columns get the bound cast by Spark)
+            def bound(v):
+                try:
+                    return Q.lit(float(v))
+                except (TypeError, ValueError):
+                    return Q.lit(v)
 
-    def _fuzzy(self, node: Fuzzy) -> DataFrame:
-        f = self._field(node.field)
-        if self._is_text(f):
-            # text path: dictionary expansion within max_edits, BM25 OR
-            # over the expansions (scale-safe: large expansions stay
-            # distributed — exec.scored_expansion)
-            return qx.fuzzy_query(
-                self.index, node.value, node.max_edits, k=2**31 - 1
-            ).select("doc_id", "score")
-        # keyword path: no analysis, case-sensitive levenshtein filter
-        return self._attr_filter(
-            F.levenshtein(
-                F.col(f).cast("string"), F.lit(node.value), node.max_edits
-            )
-            >= 0
-        )
+            conds = []
+            if node.lo is not None:
+                conds.append(f"{col} {'>=' if node.incl_lo else '>'} {bound(node.lo)}")
+            if node.hi is not None:
+                conds.append(f"{col} {'<=' if node.incl_hi else '<'} {bound(node.hi)}")
+            return " AND ".join(conds) or "TRUE"
+        raise TypeError(f"not a filter leaf: {node!r}")
 
-    def _regexp(self, node: Regexp) -> DataFrame:
-        f = self._field(node.field)
-        anchored = f"^{node.pattern}$"
-        if self._is_text(f):
-            # scale-safe expansion: small hit sets collect (static bucket
-            # pruning); large ones semi-join postings on (bucket, term)
-            hits = qx.dict_hits_regexp(self.index, node.pattern)
-            cand = qx.expanded_candidates(self.index, hits)
-            return (
-                cand.select("doc_id").distinct().withColumn("score", F.lit(1.0))
-            )
-        return self._attr_filter(F.col(f).cast("string").rlike(anchored))
-
-    def _range(self, node: Range) -> DataFrame:
-        f = self._field(node.field)
-        col = F.col(f)
-        # numeric if both bounds parse as numbers, else string/timestamp
-        # compare (ISO dates compare correctly as strings; timestamp
-        # columns get the bound cast by Spark)
-        def bound(v):
-            try:
-                float(v)
-                return F.lit(float(v))
-            except (TypeError, ValueError):
-                return F.lit(v)
-
-        conds = []
-        if node.lo is not None:
-            b = bound(node.lo)
-            conds.append(col >= b if node.incl_lo else col > b)
-        if node.hi is not None:
-            b = bound(node.hi)
-            conds.append(col <= b if node.incl_hi else col < b)
-        if not conds:
-            cond = F.lit(True)
-        else:
-            cond = conds[0]
-            for c in conds[1:]:
-                cond = cond & c
-        return self._attr_filter(cond)
-
-    def _attr_filter(self, cond) -> DataFrame:
-        return self.attrs.where(cond).select("doc_id").withColumn(
-            "score", F.lit(1.0)
-        )
-
-    def _empty(self) -> DataFrame:
-        return (
-            self.attrs.select("doc_id").limit(0).withColumn("score", F.lit(1.0))
-        )
+    def _attr_filter(self, cond: str) -> DataFrame:
+        return self.attrs.where(cond).selectExpr("doc_id", "1.0D AS score")
 
     # -- combinators --------------------------------------------------------
     def _combine(self, children: list, require_all: bool) -> DataFrame:
@@ -249,7 +211,7 @@ class QueryPlanner:
                 # matches docs matching a and excluding b (Lucene parses
                 # the NOT as a top-level exclusion, not a complement
                 # union operand)
-                negatives.append(self.plan(child.child).select("doc_id"))
+                negatives.append(self.plan(child.child).selectExpr("doc_id"))
             elif isinstance(child, Must):
                 # Lucene `+clause`: gates matching; the sibling should
                 # clauses become optional score-adders (classic
@@ -262,54 +224,40 @@ class QueryPlanner:
 
         if not positives:
             # pure-negative query: all docs minus exclusions, score 0
-            base = self.attrs.select("doc_id").withColumn("score", F.lit(0.0))
+            base = self.attrs.selectExpr("doc_id", "0.0D AS score")
             for n in negatives:
                 base = base.join(n, "doc_id", "left_anti")
             return base
 
         n_must = sum(must_flags)
-        tagged = [
-            p.select("doc_id", "score")
-            .withColumn("_c", F.lit(i))
-            .withColumn("_m", F.lit(1 if must_flags[i] else 0))
-            for i, p in enumerate(positives)
-        ]
-        u = tagged[0]
-        for t in tagged[1:]:
-            u = u.unionByName(t)
+        u = None
+        for i, p in enumerate(positives):
+            t = p.selectExpr("doc_id", "score", f"{i} AS _c", f"{int(must_flags[i])} AS _m")
+            u = t if u is None else u.unionByName(t)
         # deterministic clause-order fold as a chain of conditional
         # sums — each (doc, clause) contributes exactly one row, so
-        # sum(when(_c = i)) is that clause's score and the chain
+        # sum(CASE WHEN _c = i) is that clause's score and the chain
         # reproduces the sorted fold bit-for-bit in whole-stage codegen
         # (same rewrite as exec.scored_terms, ~2x on big unions)
-        aggs = [
-            F.sum(F.when(F.col("_c") == i, F.col("score"))).alias(f"_s{i}")
-            for i in range(len(positives))
-        ]
         agg = u.groupBy("doc_id").agg(
-            *aggs,
-            F.count(F.lit(1)).alias("_n"),
-            F.sum("_m").alias("_nm"),
+            F.expr(f"{Q.term_fold(list(range(len(positives))), 'score', key='_c')} AS score"),
+            F.expr("count(1) AS _n"),
+            F.expr("sum(_m) AS _nm"),
         )
-        score = F.lit(0.0)
-        for i in range(len(positives)):
-            c = F.col(f"_s{i}")
-            score = F.when(c.isNotNull(), score + c).otherwise(score)
-        agg = agg.withColumn("score", score)
         if require_all:
-            agg = agg.where(F.col("_n") == len(positives))
+            agg = agg.where(f"_n = {len(positives)}")
         elif n_must:
             # every required clause must match; non-must siblings only
             # add score
-            agg = agg.where(F.col("_nm") == n_must)
-        out = agg.select("doc_id", "score")
+            agg = agg.where(f"_nm = {n_must}")
+        out = agg.selectExpr("doc_id", "score")
         for n in negatives:
             out = out.join(n, "doc_id", "left_anti")
         return out
 
-    def _not(self, node: Not) -> DataFrame:
-        base = self.attrs.select("doc_id").withColumn("score", F.lit(0.0))
-        ex = self.plan(node.child).select("doc_id")
+    def _not(self, node: Node) -> DataFrame:
+        base = self.attrs.selectExpr("doc_id", "0.0D AS score")
+        ex = self.plan(node.child).selectExpr("doc_id")
         return base.join(ex, "doc_id", "left_anti")
 
     # -- filter-context compilation (the spaces fast path) -----------------
@@ -322,90 +270,47 @@ class QueryPlanner:
         Match-set parity with plan(): combinator semantics mirror
         _combine exactly (Must gates an OR; NOT inside either
         combinator is a bool-level exclusion), and every negation is
-        null-safe (`~coalesce(cond, false)`) because the join path's
+        null-safe (`NOT coalesce(cond, false)`) because the join path's
         anti-join keeps null-attribute docs that a raw three-valued
         `NOT col = x` would drop. Raises on text-field clauses — those
         need the scored index plan."""
+        return F.expr(self._filter_sql(node))
+
+    def _filter_sql(self, node: Node) -> str:
         if isinstance(node, (Term, Phrase, Wildcard, Regexp, Range, Fuzzy)):
-            f = self._field(getattr(node, "field", None))
+            f = self._field(node.field)
             if self._is_text(f):
                 raise ValueError(
                     f"compile_filter: {f!r} is a scored text field; "
                     "use plan() for scoring clauses"
                 )
-        if isinstance(node, Term):
-            return F.col(self._field(node.field)).cast("string") == node.value
-        if isinstance(node, Phrase):
-            return F.col(self._field(node.field)).cast("string") == node.text
-        if isinstance(node, Wildcard):
-            pat = qx._glob_to_regex(node.pattern)
-            return F.col(self._field(node.field)).cast("string").rlike(f"^{pat}$")
-        if isinstance(node, Regexp):
-            return (
-                F.col(self._field(node.field))
-                .cast("string")
-                .rlike(f"^{node.pattern}$")
-            )
-        if isinstance(node, Fuzzy):
-            return (
-                F.levenshtein(
-                    F.col(self._field(node.field)).cast("string"),
-                    F.lit(node.value),
-                    node.max_edits,
-                )
-                >= 0
-            )
-        if isinstance(node, Range):
-            # same bound typing as _range
-            col = F.col(self._field(node.field))
-
-            def bound(v):
-                try:
-                    float(v)
-                    return F.lit(float(v))
-                except (TypeError, ValueError):
-                    return F.lit(v)
-
-            cond = F.lit(True)
-            if node.lo is not None:
-                b = bound(node.lo)
-                cond = cond & (col >= b if node.incl_lo else col > b)
-            if node.hi is not None:
-                b = bound(node.hi)
-                cond = cond & (col <= b if node.incl_hi else col < b)
-            return cond
+            return f"({self._leaf_sql(node)})"
         if isinstance(node, Exists):
-            return F.col(node.field).isNotNull()
-        if isinstance(node, Boost):
-            return self.compile_filter(node.child)  # boost is score-only
-        if isinstance(node, Must):
-            return self.compile_filter(node.child)
+            return f"({self._leaf_sql(node)})"
+        if isinstance(node, (Boost, Must)):
+            return self._filter_sql(node.child)  # boost is score-only
         if isinstance(node, Not):
-            return ~F.coalesce(self.compile_filter(node.child), F.lit(False))
+            return f"(NOT coalesce({self._filter_sql(node.child)}, FALSE))"
         if isinstance(node, (And, Or)):
             positives, musts, negatives = [], [], []
             for child in node.children:
                 if isinstance(child, Not):
-                    negatives.append(self.compile_filter(child.child))
+                    negatives.append(self._filter_sql(child.child))
                 elif isinstance(child, Must):
-                    musts.append(self.compile_filter(child.child))
+                    musts.append(self._filter_sql(child.child))
                 else:
-                    positives.append(self.compile_filter(child))
+                    positives.append(self._filter_sql(child))
             if isinstance(node, And):
                 musts = musts + positives
                 positives = []
             if musts:
                 # required clauses gate; bare siblings only add score
-                cond = musts[0]
-                for c in musts[1:]:
-                    cond = cond & c
+                cond = " AND ".join(musts)
             elif positives:
-                cond = positives[0]
-                for c in positives[1:]:
-                    cond = cond | c
+                cond = " OR ".join(positives)
             else:
-                cond = F.lit(True)  # pure-negative: all docs minus exclusions
+                cond = "TRUE"  # pure-negative: all docs minus exclusions
             for n in negatives:
-                cond = cond & ~F.coalesce(n, F.lit(False))
-            return cond
+                cond = f"{cond} AND NOT coalesce({n}, FALSE)"
+            return f"({cond})"
         raise TypeError(f"unknown AST node {node!r}")

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.analyzer import analyze_col
 from ..indexing.build import IndexTables
-from .bm25 import idf_col
+from . import sql as Q
 from .exec import dict_hits_fuzzy, scored_terms, top_k
 
 # ---------------------------------------------------------------------------
@@ -142,12 +142,9 @@ def interesting_terms(
     j = index.terms.join(F.broadcast(seed_tf), "term").where(
         (F.col("tf") >= F.lit(min_term_freq)) & (F.col("df") >= F.lit(min_doc_freq))
     )
-    weight = F.round(
-        F.col("tf").cast("double") * idf_col(index.n_docs, F.col("df").cast("double")),
-        4,
-    )
+    weight = f"ROUND(CAST(tf AS DOUBLE) * {Q.idf(index.n_docs, 'CAST(df AS DOUBLE)')}, 4)"
     return (
-        j.withColumn("weight", weight)
+        j.withColumn("weight", F.expr(weight))
         .orderBy(F.desc("weight"), F.asc("term"))
         .limit(max_query_terms)
         .select("term", "tf", "df", "weight")

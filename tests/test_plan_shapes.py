@@ -40,10 +40,35 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _postings_scans(df) -> list[str]:
+    """One-line strings of the parquet scans of a `postings` table in
+    df's physical plan. The scan is found by its relation's root paths:
+    the printed plan truncates a scan's Location, so a long index path
+    would not show "postings" there."""
+    from pathlib import PurePath
+
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    leaves = plan.collectLeaves()
+    out = []
+    for i in range(leaves.size()):
+        node = leaves.apply(i)
+        if node.getClass().getSimpleName() != "FileSourceScanExec":
+            continue
+        roots = node.relation().location().rootPaths()
+        if any(
+            "postings" in PurePath(roots.apply(j).toUri().getPath()).parts
+            for j in range(roots.size())
+        ):
+            out.append(node.simpleString(100))
+    return out
+
+
 def test_term_pushdown_and_bucket_pruning(disk_index):
-    plan = _plan(qx.match_query(disk_index, "parseDate", k=5))
-    scans = [l for l in plan.splitlines() if "FileScan" in l and "postings" in l]
-    assert scans, plan
+    q = qx.match_query(disk_index, "parseDate", k=5)
+    scans = _postings_scans(q)
+    assert scans, _plan(q)
     s = scans[0]
     # the term predicate reaches the parquet reader
     assert "PushedFilters" in s and "In(term" in s, s
@@ -51,27 +76,22 @@ def test_term_pushdown_and_bucket_pruning(disk_index):
     assert "PartitionFilters" in s and "bucket" in s.split("PartitionFilters")[1].split("]")[0], s
 
 
-def test_projection_pruning(disk_index, spark):
+def test_projection_pruning(disk_index, spark, tmp_path):
     # scoring never reads the positions or content columns — also not
     # over a keep_positions segment index behind a tombstone anti-join
-    import tempfile
-
     from elasticsearch_assets_spark.corpus import generate_corpus
     from elasticsearch_assets_spark.plans import manifest as M
 
-    # a short path: the plan string truncates long scan locations
-    with tempfile.TemporaryDirectory() as seg:
-        M.build_index_resumable(
-            generate_corpus(spark, 60, seed=3), seg, n_parts=2, keep_positions=True
-        )
-        M.delete_docs(spark, seg, [0])
-        for index in (disk_index, M.serve_resumable_index(spark, seg)):
-            plan = _plan(qx.match_query(index, "merge batch", k=5))
-            scans = [
-                l for l in plan.splitlines() if "FileScan" in l and "postings" in l
-            ]
-            assert scans
-            read_schema = scans[0].split("ReadSchema:")[1]
+    seg = str(tmp_path / "seg")
+    M.build_index_resumable(
+        generate_corpus(spark, 60, seed=3), seg, n_parts=2, keep_positions=True
+    )
+    M.delete_docs(spark, seg, [0])
+    for index in (disk_index, M.serve_resumable_index(spark, seg)):
+        scans = _postings_scans(qx.match_query(index, "merge batch", k=5))
+        assert scans
+        for s in scans:
+            read_schema = s.split("ReadSchema:")[1]
             assert "positions" not in read_schema
             assert "content" not in read_schema
 
@@ -489,13 +509,9 @@ def test_dis_max_single_posting_scan(disk_index):
     # (per-term conditional sums), never a scan per subquery
     from elasticsearch_assets_spark.query import compound as qc
 
-    plan = _plan(
-        qc.dis_max_query(
-            disk_index, [["merge", "batch"], ["parse", "date"]], 0.3, k=5
-        )
-    )
-    scans = [l for l in plan.splitlines() if "FileScan" in l and "postings" in l]
-    assert len(scans) == 1, plan
+    q = qc.dis_max_query(disk_index, [["merge", "batch"], ["parse", "date"]], 0.3, k=5)
+    scans = _postings_scans(q)
+    assert len(scans) == 1, _plan(q)
     s = scans[0]
     assert "PushedFilters" in s and "In(term" in s, s
     assert "bucket" in s.split("PartitionFilters")[1].split("]")[0], s
@@ -504,9 +520,9 @@ def test_dis_max_single_posting_scan(disk_index):
 def test_constant_score_pushdown(disk_index):
     from elasticsearch_assets_spark.query import compound as qc
 
-    plan = _plan(qc.constant_score_query(disk_index, ["merge", "batch"], k=5))
-    scans = [l for l in plan.splitlines() if "FileScan" in l and "postings" in l]
-    assert len(scans) == 1, plan
+    q = qc.constant_score_query(disk_index, ["merge", "batch"], k=5)
+    scans = _postings_scans(q)
+    assert len(scans) == 1, _plan(q)
     assert "In(term" in scans[0], scans[0]
     # score column is never read from disk
     assert "tf" not in scans[0].split("ReadSchema:")[1], scans[0]
@@ -547,3 +563,47 @@ def test_chunk_tokens_no_shuffle(spark, sf_dir):
     plan2 = _plan(chunking.chunk_tokens(wide, 32))
     exchanges = re.findall(r"Exchange \w+", plan2)
     assert len(exchanges) == 1 and "oundrobin" in exchanges[0].lower(), plan2
+
+
+def test_same_shape_queries_reuse_compiled_code(spark, disk_index):
+    # per-query doubles (the idfs) must not be inlined into generated
+    # code: each inlined double makes new Java source, hence a fresh
+    # Janino compile (~25 ms) on nearly every query. The idfs ride a
+    # map literal that codegen references, so after one warm-up query
+    # further queries of the same shape (term count, operator) compile
+    # nothing.
+    from elasticsearch_assets_spark.functions.analyzer import analyze_text
+
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    dfs = {r["term"]: r["df"] for r in disk_index.terms.collect()}
+    # single-token words with pairwise different dfs, so every query
+    # carries different idfs
+    words, seen = [], set()
+    for t in sorted(dfs, key=lambda t: (-dfs[t], t)):
+        if analyze_text(t) == [t] and dfs[t] not in seen:
+            words.append(t)
+            seen.add(dfs[t])
+    assert len(words) >= 9
+    # load the words' dfs into the driver-side cache first: a term's
+    # first sighting runs a dictionary lookup job of its own, which is
+    # not the query code this test is about
+    qx.term_dfs(disk_index, words)
+    shapes = {
+        "match or": lambda a, b, c: qx.match_query(disk_index, f"{a} {b}", k=5),
+        "match and": lambda a, b, c: qx.match_query(
+            disk_index, f"{a} {b}", k=5, operator="and"
+        ),
+        # the must term's place among the sorted scoring terms is part
+        # of bool's shape (its `term = ...` test is shared between its
+        # score sum and its must count): keep it first in every query
+        "bool": lambda a, b, c: qx.bool_query(
+            disk_index, must=[min(a, b)], should=[max(a, b)], must_not=[c], k=5
+        ),
+    }
+    for name, shape in shapes.items():
+        shape(*words[0:3]).collect()
+        before = compiles.getCount()
+        shape(*words[3:6]).collect()
+        shape(*words[6:9]).collect()
+        assert compiles.getCount() == before, name

@@ -5,6 +5,7 @@ arbitrary unicode-ish input."""
 from __future__ import annotations
 
 import duckdb
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -302,3 +303,108 @@ def test_oracle_sloppy_phrase_matches_brute_force(doc, phrase, slop):
     got = bool(oracle.phrase(" ".join(phrase), k=10, slop=slop))
     want = _brute_phrase_match(doc, phrase, slop)
     assert got == want, (doc, phrase, slop, got, want)
+
+
+# ---- hostile literals through the SQL-text query surface --------------------
+# Values that reach query SQL text unanalyzed (terms_query terms, keyword
+# values, wildcard patterns). Spark's parser unescapes string literals
+# (\uXXXX, \n, octal), so a quoting slip turns a value into another one
+# or into a parse error.
+HOSTILE = [
+    "it's", 'say "hi"', "back\\slash", "tick`tock", "\\u0041", "\\n",
+    "100%", "snake_case", "naïve", "日本", "a'); --",
+]
+# what a wrong quoting would turn some of them into: present in the
+# index, so a slip shows up as a wrong result, not only as a parse error
+DECOYS = ["A", "\n", "100x", "snakexcase", "backslash", "it"]
+
+
+@pytest.fixture(scope="module")
+def hostile_index(spark):
+    """An index whose RAW terms and keyword values are the hostile
+    strings (built directly, past the analyzer), plus its oracle."""
+    import random
+
+    from elasticsearch_assets_spark.functions.xxhash import term_bucket
+    from elasticsearch_assets_spark.indexing.build import IndexTables
+    from elasticsearch_assets_spark.query.oracle import OracleIndex
+
+    rng = random.Random(11)
+    vocab = HOSTILE + DECOYS + ["alpha", "beta"]
+    n_buckets = 4
+    oracle = OracleIndex({})
+    postings, tags = [], {}
+    for d in range(40):
+        doc_terms = rng.sample(vocab, 5) + (["alpha"] if d % 2 else [])
+        tf = {t: rng.randint(1, 3) for t in doc_terms}
+        dl = sum(tf.values())
+        oracle.dl[d] = dl
+        for t, n in tf.items():
+            oracle.tf[t][d] = n
+            postings.append((t, d, n, dl, term_bucket(t, n_buckets)))
+        tags[d] = (HOSTILE + DECOYS)[d % (len(HOSTILE) + len(DECOYS))]
+    oracle.n_docs = len(oracle.dl)
+    oracle.avg_dl = sum(oracle.dl.values()) / oracle.n_docs
+    dfs = [(t, len(per)) for t, per in oracle.tf.items()]
+    index = IndexTables(
+        postings=spark.createDataFrame(
+            postings, "term string, doc_id long, tf int, dl int, bucket int"
+        ),
+        terms=spark.createDataFrame(dfs, "term string, df long"),
+        doc_norms=spark.createDataFrame(
+            [(d, oracle.dl[d], tags[d]) for d in tags],
+            "doc_id long, dl int, tag string",
+        ),
+        n_docs=oracle.n_docs,
+        avg_dl=oracle.avg_dl,
+        n_buckets=n_buckets,
+        terms_rev=spark.createDataFrame(
+            [(t[::-1], t, n) for t, n in dfs], "rev string, term string, df long"
+        ),
+    )
+    return index, oracle, tags
+
+
+@pytest.mark.parametrize("value", HOSTILE)
+def test_hostile_literals_match_oracle(hostile_index, value):
+    """Each hostile value through terms_query, bool_query, a quoted
+    keyword value in query_string and wildcard patterns: results equal
+    the oracle / a plain-Python filter, and nothing fails to parse."""
+    import fnmatch
+
+    from elasticsearch_assets_spark.query import exec as qx
+    from elasticsearch_assets_spark.query.planner import (
+        PlannerConfig,
+        QueryPlanner,
+    )
+
+    index, oracle, tags = hostile_index
+    k = qx.ALL_MATCHES
+
+    def rows(df):
+        return sorted((r["doc_id"], r["score"]) for r in df.collect())
+
+    want = sorted((d, s) for d, (s, _n) in oracle.score_terms([value, "alpha"]).items())
+    assert want and rows(qx.terms_query(index, [value, "alpha"], k=k)) == want
+
+    other = HOSTILE[(HOSTILE.index(value) + 1) % len(HOSTILE)]
+    got = rows(qx.bool_query(index, must=[value], should=["alpha"], must_not=[other], k=k))
+    assert got == sorted(
+        oracle.bool_query(must=[value], should=["alpha"], must_not=[other], k=len(tags))
+    )
+
+    qp = QueryPlanner(
+        index,
+        attrs=index.doc_norms,
+        config=PlannerConfig(default_field="content", text_fields=("content",)),
+    )
+    quoted = '"' + value.replace("\\", "\\\\").replace('"', '\\"') + '"'
+    got = {r["doc_id"] for r in qp.query_string(f"tag:{quoted}", k=k).collect()}
+    assert got and got == {d for d, t in tags.items() if t == value}
+
+    dictionary = list(oracle.tf)
+    for pattern in (value + "*", "*" + value, "*" + value + "*", value[0] + "*" + value[-1], value + "?"):
+        hit = {t for t in dictionary if fnmatch.fnmatchcase(t, pattern.lower())}
+        want_docs = sorted({d for t in hit for d in oracle.tf[t]})
+        got_docs = [r["doc_id"] for r in qx.wildcard_query(index, pattern, k=len(tags)).collect()]
+        assert got_docs == want_docs, pattern
