@@ -259,7 +259,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def ft_phrase_slop3(s, d):
         # `"key agg row"~2`: 3-term sloppy phrase under Lucene's SHARED
         # slop budget (spread of adjusted positions ≤ 2 —
-        # exec._spread_slop_pred; r5 closed the per-term-window
+        # sql.spread_slop; r5 closed the per-term-window
         # deviation documented in r≤4)
         index = _docs_index(s, d)
         out = qx.phrase_query(index, "key agg row", k=2**31 - 1, slop=2)

@@ -121,7 +121,8 @@ def tf_encoder(text_col: str):
 def ensure_scan_parallelism(df, min_bytes: int = 2 << 20):
     """Few-file parquet inputs cap the map stage at the file/row-group
     count (a 58 MB single-row-group file = ONE task no matter the
-    cluster) — the same trap build_index guards against. Repartition to
+    cluster); every build and text operator passes its input through
+    this one guard. Repartition to
     defaultParallelism when the scan is coarser; at real corpus scale
     the scan has plenty of splits and this is a no-op (guide §2.5
     "input skew: one huge unsplittable file — repartition immediately
@@ -134,18 +135,19 @@ def ensure_scan_parallelism(df, min_bytes: int = 2 << 20):
     needs. 2 MB floor: a 5.8 MB single-file text table measured 6.5 s
     single-core through the shingle encoder vs ~1 s repartitioned,
     while at 0.6 MB the guard's exchange only added overhead. Unknown
-    sizes (non-file sources) guard conservatively."""
-    spark_dp = df.sparkSession.sparkContext.defaultParallelism
+    sizes (a failed probe) guard conservatively; frames with no input
+    files are left alone. File lengths come from the Hadoop FileSystem
+    API, so remote inputs (s3a://, hdfs://) follow the same rule."""
+    sc = df.sparkSession.sparkContext
+    spark_dp = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= spark_dp:
         return df
     try:
-        import os
-
-        files = df.inputFiles()
-        size = sum(
-            os.path.getsize(f[len("file:"):] if f.startswith("file:") else f)
-            for f in files
-        )
+        conf, Path = sc._jsc.hadoopConfiguration(), sc._jvm.org.apache.hadoop.fs.Path
+        size = 0
+        for f in df.inputFiles():
+            p = Path(f)
+            size += p.getFileSystem(conf).getFileStatus(p).getLen()
     except Exception:
         size = None
     if size is not None and size < min_bytes:

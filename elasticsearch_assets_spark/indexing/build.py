@@ -106,17 +106,13 @@ def with_doc_id(
 def _keyed(
     docs: DataFrame, text_col: str, id_cols: tuple[str, ...], doc_id_col: str | None
 ) -> DataFrame:
-    """Build prelude: the scan-parallelism guard, then doc_id (verbatim
-    from ``doc_id_col`` when given, else xxhash64(*id_cols)) and
-    content_sha.
+    """Build prelude: the scan-parallelism guard
+    (arrowtf.ensure_scan_parallelism), then doc_id (verbatim from
+    ``doc_id_col`` when given, else xxhash64(*id_cols)) and
+    content_sha."""
+    from elasticsearch_assets_spark.indexing.arrowtf import ensure_scan_parallelism
 
-    The guard: the map stage's parallelism is capped by the input split
-    count, and small/benchmark inputs often arrive as a handful of
-    parquet files, which would serialize the whole build. At 100 TB the
-    scan has plenty of splits and this is a no-op."""
-    spark_dp = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < spark_dp:
-        docs = docs.repartition(spark_dp)
+    docs = ensure_scan_parallelism(docs)
     if doc_id_col is None:
         return with_doc_id(docs, id_cols, text_col)
     return docs.withColumn("doc_id", F.col(doc_id_col).cast("long")).withColumn(

@@ -29,8 +29,9 @@ from ..indexing.build import IndexTables
 from . import sql as Q
 from .exec import (
     _candidates,
-    _df_map,
+    _positions_join,
     _require_positions,
+    _scored_terms,
     dict_hits,
     phrase_empty,
     scored_terms,
@@ -56,11 +57,10 @@ def dis_max_query(
     max + tie * Σ(other scores)).
 
     Plan shape: ONE bucket-pruned posting scan over the union of all
-    subquery terms → per-row contribution (idfs from the query's map
-    literal) → per-subquery folds of per-term conditional sums in a
-    single groupBy (the scored_terms fold, partial-aggregatable) → the
-    dis-max combination as a pure SQL expression. No per-subquery
-    jobs, no extra shuffle beyond the per-doc combine.
+    subquery terms → one per-doc aggregation with a fold per subquery
+    (exec._score_agg: conditional sums, or the sorted-array fold for
+    wide unions) → the dis-max combination as a pure SQL expression. No
+    per-subquery jobs, no extra shuffle beyond the per-doc combine.
 
     Float determinism: per-subquery scores fold left-to-right over the
     subquery's sorted terms from 0.0 (absent terms contribute an
@@ -70,55 +70,14 @@ def dis_max_query(
     CASE sums and the same association.
     """
     subs = [sorted(set(s)) for s in subqueries]
-    all_terms = sorted({t for s in subs for t in s})
-    if not all_terms:
-        return phrase_empty(index).selectExpr("doc_id", "score")
-    cand = _candidates(index, all_terms)
-    if len(all_terms) <= 32:
-        # idfs in one map literal (the scored_terms shape): no per-query
-        # broadcast build, no per-query double in the generated code.
-        # Dictionary-absent terms have no postings rows — they get no
-        # conditional sum, and skipping their +coalesce(NULL, 0.0)
-        # keeps the fold exact.
-        dfs = term_dfs(index, all_terms)
-        if not dfs:
-            return phrase_empty(index)
-        contrib = Q.contrib(
-            f"element_at({Q.idf_map(index.n_docs, dfs)}, term)", "tf", "dl", index.avg_dl
-        )
-        g = cand.selectExpr("doc_id", "term", f"{contrib} AS _contrib").groupBy("doc_id")
-        sub_sums = [
-            Q.term_fold([t for t in s if t in dfs], "_contrib") for s in subs
-        ]
-    else:
-        # >32 union terms: share scored_terms' wide-expansion shape
-        # (VERDICT r6 item 4) — ONE sorted (term, contrib) array per doc
-        # and one fold per SUBQUERY, instead of one conditional-sum
-        # aggregate per term (a >32-branch sum chain stalls codegen).
-        # Each subquery folds ONLY its own terms, in term-sorted array
-        # order from 0.0 — bit-identical to the conditional-sum chain
-        # above (absent terms simply don't appear; x + 0.0 == x is
-        # IEEE-exact for present ones, and (term, doc_id) rows are
-        # unique so each term contributes once).
-        contrib = Q.contrib(
-            Q.idf(index.n_docs, "CAST(df AS DOUBLE)"), "tf", "dl", index.avg_dl
-        )
-        g = (
-            cand.join(F.broadcast(_df_map(index, all_terms)), "term")
-            .selectExpr("doc_id", f"struct(term, {contrib} AS contrib) AS _tc")
-            .groupBy("doc_id")
-        )
-        sub_sums = [
-            f"aggregate(filter(sort_array(collect_list(_tc)), x -> {Q.in_list('x.term', s)}),"
-            " 0.0D, (acc, x) -> acc + x.contrib)"
-            for s in subs
-        ]
-    sub_scores = [f"_s{i}" for i in range(len(subs))]
-    best = sub_scores[0] if len(subs) == 1 else f"greatest({', '.join(sub_scores)})"
-    total = " + ".join(sub_scores)
+    if not any(subs):
+        return phrase_empty(index)
+    folds = {f"_s{i}": s for i, s in enumerate(subs)}
+    best = "_s0" if len(subs) == 1 else f"greatest({', '.join(folds)})"
+    total = " + ".join(folds)
     score = f"{best} + {Q.lit(float(tie_breaker))} * (({total}) - {best})"
-    out = g.agg(*[F.expr(f"{e} AS _s{i}") for i, e in enumerate(sub_sums)])
-    return top_k(out.selectExpr("doc_id", f"{score} AS score"), k)
+    out = _scored_terms(index, folds).selectExpr("doc_id", f"{score} AS score")
+    return top_k(out, k)
 
 
 # ---------------------------------------------------------------------------
@@ -138,21 +97,23 @@ def boosting_query(
     multiplied by ``negative_boost`` (Lucene BoostingQuery — demotion
     without exclusion, the soft version of must_not).
 
-    Plan: positive = the standard scored_terms OR; negative = a
-    DISTINCT doc_id set from one bucket-pruned posting scan, left-
-    joined as a flag. The negative set is candidate-bounded (Σ df of
-    the negative terms), and the multiply is a pure column expression —
-    one extra bounded scan + join over bool_query's shape, no new
-    shuffle kind. Float determinism: score * literal is a single IEEE
-    multiply; the oracle replays it."""
-    pos = scored_terms(index, sorted(set(positive))).selectExpr("doc_id", "score")
-    neg_terms = sorted(set(negative))
-    if not neg_terms:
-        return top_k(pos, k)
-    neg = _candidates(index, neg_terms).selectExpr("doc_id", "TRUE AS _neg").distinct()
-    out = pos.join(neg, "doc_id", "left").selectExpr(
-        "doc_id",
-        f"CASE WHEN _neg THEN score * {Q.lit(float(negative_boost))} ELSE score END AS score",
+    Plan: ONE bucket-pruned scan of the positive and negative terms
+    and one per-doc aggregation (exec._score_agg): the score folds the
+    positive terms only, and two per-doc counts keep the docs that
+    matched a positive term and flag those that matched a negative one.
+    The multiply is a pure column expression. Float determinism:
+    score * literal is a single IEEE multiply; the oracle replays it."""
+    pos = sorted(set(positive))
+    neg = sorted(set(negative))
+    if not neg:
+        return top_k(scored_terms(index, pos).selectExpr("doc_id", "score"), k)
+    out = (
+        _scored_terms(index, {"score": pos}, {"_n_pos": pos, "_n_neg": neg})
+        .where("_n_pos > 0")
+        .selectExpr(
+            "doc_id",
+            f"CASE WHEN _n_neg > 0 THEN score * {Q.lit(float(negative_boost))} ELSE score END AS score",
+        )
     )
     return top_k(out, k)
 
@@ -253,12 +214,7 @@ def match_phrase_prefix(
         .agg(F.expr("sort_array(flatten(collect_list(positions))) AS _pexp"))
     )
 
-    cols = {t: f"_p{i}" for i, t in enumerate(uniq)}
-    joined = None
-    for t in uniq:
-        sel = ["doc_id", f"positions AS {cols[t]}"] + (["dl"] if joined is None else [])
-        part = _candidates(index, [t]).selectExpr(*sel)
-        joined = part if joined is None else joined.join(part, "doc_id")
+    joined, cols = _positions_join(index, uniq)
     joined = joined.join(exp_pos, "doc_id")
 
     starts = cols[fixed[0]]

@@ -18,6 +18,19 @@ one `map(...)` literal, so queries of one shape reuse one compiled
 class. The only shuffle is the per-doc score combine; candidate set
 size is bounded by Σ df(term), and the bucket partition filter means a
 10^12-doc index touches only the directories owning the query's terms.
+
+`bool` is the same one scan with count gates: its must_not terms join
+the scoring terms' scan, read no idf (NULL from the map, so they add
+nothing to the score), and each clause becomes a per-doc conditional
+count in the same groupBy, gated in one filter:
+
+    groupBy(doc_id): score fold, count(CASE WHEN term IN (must_not) ..) AS _n_not, ..
+      -> WHERE _n_not = 0 AND _n_must = |must| ..
+
+_score_agg is the one builder of that aggregation for every scorer
+(match, terms, bool, boosting, dis_max, wildcard/fuzzy expansions and
+the packed-block decode in query/wand.py); it alone picks the fold
+form.
 """
 
 from __future__ import annotations
@@ -88,105 +101,116 @@ def scored_terms(
 ) -> DataFrame:
     """Per-doc summed BM25 over the given terms → (doc_id, n_matched,
     dl, score). Basis for match/should (OR) and must (AND)."""
-    return _scored_terms(index, terms, k1, b)
+    # set(): a duplicate list entry must not add its term twice
+    return _scored_terms(index, {"score": sorted(set(terms))}, k1=k1, b=b)
 
 
 def _scored_terms(
     index: IndexTables,
-    terms: list[str],
+    folds: dict[str, list[str]],
+    counts: dict[str, list[str]] | None = None,
     k1: float = K1,
     b: float = B,
-    counts: dict[str, list[str]] | None = None,
 ) -> DataFrame:
-    """scored_terms plus one column per `counts` entry (name -> a
-    subset of `terms`): how many of those terms each doc matched. The
-    counts ride the scoring aggregation, so match gates on term subsets
-    (bool's must / minimum_should_match) cost no second scan."""
-    cand = _candidates(index, terms)
+    """_score_agg over ONE bucket-pruned scan of every fold and count
+    term → (doc_id, n_matched, dl, *folds, *counts). Terms that are only
+    counted (bool's must_not, boosting's negatives) are scanned with the
+    scoring terms but read no idf, so they add nothing to any fold.
+
+    Idfs: the conditional-sum form reads dfs from the driver-side
+    dictionary cache as one map literal (query/sql.py): no per-query
+    broadcast-build job and no per-query double in the generated code;
+    the ln() and every float op stay JVM-side. The sorted-array form
+    broadcasts the (term, df) frame instead."""
     counts = counts or {}
-    # Deterministic float association: contributions are summed in
-    # term-sorted order (matches the oracle bit-for-bit; a plain
-    # groupBy().sum() sums in shuffle-arrival order and near-ties then
-    # rank-swap — SURVEY.md §7 "genuinely hard" #1). For the normal
-    # short term list the fold is a chain of per-term conditional sums
-    # — (term, doc_id) is unique post-tf-aggregation, so sum(CASE WHEN
-    # term = t_i) is exactly that term's single contribution and the
-    # left-to-right chain reproduces the sorted fold bit-for-bit while
-    # staying in whole-stage codegen: measured ~2x faster than the
-    # collect_list + sort_array + aggregate() shape on a 1.2M-doc
-    # index (bit-identical over a full-corpus compare). Wide
-    # expansions fall back to the array fold (codegen width).
-    # set(): a duplicate list entry must not add its term's conditional
-    # sum twice (the >32-term array-fold fallback counts each contrib
-    # row once — both paths must agree for ANY input list)
-    terms_sorted = sorted(set(terms))
-    if len(terms_sorted) <= 32:
-        # dfs from the driver-side dictionary cache, idfs in one map
-        # literal (query/sql.py): no per-query broadcast-build job and
-        # no per-query double in the generated code. The ln() and every
-        # float op stay JVM-side, bit-identical to the joined-df form.
-        dfs = term_dfs(index, terms_sorted)
-        # dictionary-absent terms have no postings rows (every postings
-        # term has a dictionary row by construction) — they get no
-        # conditional sum, and skipping their +coalesce(NULL, 0.0)
-        # leaves the running score bit-identical (x + 0.0 == x,
-        # IEEE-exact for the non-negative contributions).
-        present = [t for t in terms_sorted if t in dfs]
-        if not present:
-            return cand.selectExpr(
-                "doc_id", "CAST(0 AS BIGINT) AS n_matched", "0 AS dl", "0.0D AS score",
-                *[f"CAST(0 AS BIGINT) AS {name}" for name in counts],
-            ).limit(0)
-        contrib = Q.contrib(
-            f"element_at({Q.idf_map(index.n_docs, dfs)}, term)",
-            "tf", "dl", index.avg_dl, k1, b,
-        )
-        return (
-            cand.selectExpr("doc_id", "term", "dl", f"{contrib} AS _contrib")
-            .groupBy("doc_id")
-            .agg(
-                F.expr("count(1) AS n_matched"),
-                F.expr("first(dl) AS dl"),
-                F.expr(f"{Q.term_fold(present, '_contrib')} AS score"),
-                *_term_counts(counts, "term"),
-            )
-        )
-    # >32 terms (wide expansions): broadcast the (term, df) frame and
-    # fold an array of per-term contributions — codegen can't absorb a
-    # 100-branch conditional-sum chain (see r5 notes).
-    return _array_fold(
-        cand.join(F.broadcast(_df_map(index, terms_sorted)), "term"), index, k1, b, counts
+    terms = sorted({t for ts in [*folds.values(), *counts.values()] for t in ts})
+    cand = _candidates(index, terms)
+    if _array_form(folds):
+        rows = cand.join(F.broadcast(_df_map(index, terms)), "term")
+        contrib = Q.contrib(Q.idf(index.n_docs, "CAST(df AS DOUBLE)"), "tf", "dl", index.avg_dl, k1, b)
+        return _score_agg(rows, contrib, folds, counts)
+    dfs = term_dfs(index, sorted({t for ts in folds.values() for t in ts}))
+    # dictionary-absent terms have no postings rows (every postings
+    # term has a dictionary row by construction) — they get no
+    # conditional sum, and skipping their +coalesce(NULL, 0.0) leaves
+    # the running score bit-identical (x + 0.0 == x, IEEE-exact for the
+    # non-negative contributions)
+    folds = {name: [t for t in ts if t in dfs] for name, ts in folds.items()}
+    if not dfs:
+        return cand.selectExpr(
+            "doc_id", "CAST(0 AS BIGINT) AS n_matched", "0 AS dl",
+            *[f"0.0D AS {name}" for name in folds],
+            *[f"CAST(0 AS BIGINT) AS {name}" for name in counts],
+        ).limit(0)
+    contrib = Q.contrib(
+        f"element_at({Q.idf_map(index.n_docs, dfs)}, term)", "tf", "dl", index.avg_dl, k1, b
     )
+    return _score_agg(cand, contrib, folds, counts)
 
 
-def _term_counts(counts: dict[str, list[str]], key: str) -> list:
-    return [
-        F.expr(f"count(CASE WHEN {Q.in_list(key, ts)} THEN 1 END) AS {name}")
-        for name, ts in counts.items()
-    ]
+# up to this many distinct fold terms, folds are per-term conditional
+# sums; wider ones sort an array of per-term contributions
+_CASE_FOLD_MAX = 32
 
 
-def _array_fold(
-    joined: DataFrame,
-    index: IndexTables,
-    k1: float = K1,
-    b: float = B,
+def _array_form(folds: dict[str, list[str] | None]) -> bool:
+    """The fold-form decision of _score_agg: the sorted-array fold for
+    wide or driver-unknown (None) term sets — codegen can't absorb a
+    100-branch conditional-sum chain (see r5 notes)."""
+    if any(ts is None for ts in folds.values()):
+        return True
+    return len({t for ts in folds.values() for t in ts}) > _CASE_FOLD_MAX
+
+
+def _score_agg(
+    rows: DataFrame,
+    contrib: str,
+    folds: dict[str, list[str] | None],
     counts: dict[str, list[str]] | None = None,
 ) -> DataFrame:
-    """(doc_id, n_matched, dl, score, *counts) from postings rows
-    joined with their term's df: contributions sorted by term per doc,
-    folded from 0.0 — the conditional-sum chain's association for any
-    term count."""
-    contrib = Q.contrib(Q.idf(index.n_docs, "CAST(df AS DOUBLE)"), "tf", "dl", index.avg_dl, k1, b)
-    return (
-        joined.selectExpr("doc_id", "dl", f"struct(term, {contrib} AS contrib) AS _tc")
-        .groupBy("doc_id")
-        .agg(
-            F.expr("count(1) AS n_matched"),
-            F.expr("first(dl) AS dl"),
-            F.expr("aggregate(sort_array(collect_list(_tc)), 0.0D, (acc, x) -> acc + x.contrib) AS score"),
-            *_term_counts(counts or {}, "_tc.term"),
-        )
+    """THE per-doc BM25 aggregation → (doc_id, n_matched, dl, *folds,
+    *counts), from candidate rows (doc_id, term, dl, ...) unique per
+    (term, doc_id) and the SQL of each row's contribution.
+
+    folds: name -> the terms whose contributions it sums (None: every
+    row; its terms are not known on the driver). counts: name -> terms;
+    the per-doc number of rows with one of them, so match gates on term
+    subsets (bool's must / should / must_not, boosting's negatives)
+    cost no second scan. n_matched counts every row. A row whose term
+    is in no fold adds nothing to any fold, so its contribution may
+    read NULL.
+
+    Deterministic float association: each fold sums its contributions
+    in term-sorted order from 0.0 (matches the oracle bit-for-bit; a
+    plain groupBy().sum() sums in shuffle-arrival order and near-ties
+    then rank-swap — SURVEY.md §7 "genuinely hard" #1). For short term
+    lists a fold is a chain of per-term conditional sums — each
+    sum(CASE WHEN term = t_i) is exactly that term's single
+    contribution, and the left-to-right chain reproduces the sorted
+    fold bit-for-bit while staying in whole-stage codegen: measured ~2x
+    faster than the collect_list + sort_array + aggregate() shape on a
+    1.2M-doc index (bit-identical over a full-corpus compare). Wide
+    folds (_array_form) share one sorted (term, contrib) array per doc
+    and fold their own terms of it."""
+    counts = counts or {}
+    if not _array_form(folds):
+        rows = rows.selectExpr("doc_id", "term", "dl", f"{contrib} AS _contrib")
+        sums = {name: Q.term_fold(sorted(ts), "_contrib") for name, ts in folds.items()}
+        key = "term"
+    else:
+        rows = rows.selectExpr("doc_id", "dl", f"struct(term, {contrib} AS contrib) AS _tc")
+        # a fold of every listed term reads the whole array unfiltered
+        listed = {t for ts in [*folds.values(), *counts.values()] for t in ts or ()}
+        sums = {
+            name: Q.array_fold("sort_array(collect_list(_tc))", None if ts is None or listed <= set(ts) else ts)
+            for name, ts in folds.items()
+        }
+        key = "_tc.term"
+    return rows.groupBy("doc_id").agg(
+        F.expr("count(1) AS n_matched"),
+        F.expr("first(dl) AS dl"),
+        *[F.expr(f"{e} AS {name}") for name, e in sums.items()],
+        *[F.expr(f"count(CASE WHEN {Q.in_list(key, ts)} THEN 1 END) AS {name}") for name, ts in counts.items()],
     )
 
 
@@ -270,21 +294,27 @@ def bool_query(
     minimum_should_match: int | str | None = None,
 ) -> DataFrame:
     """ES `bool`: must = intersection (scores sum), should = union
-    (adds score), must_not = anti-join (no score).
+    (adds score), must_not = exclusion (no score).
 
     minimum_should_match (int or "N%"): at least that many DISTINCT
     should terms must match. ES default: 1 when there are only should
     clauses (any candidate matches ≥1 term, so that holds for free),
-    0 when a must clause exists. The must and should gates are per-doc
-    counts of matched must / should terms computed in the scoring
-    aggregation itself — one scan and one shuffle for must + should,
-    whatever the gates."""
+    0 when a must clause exists. Every gate is a per-doc count of
+    matched must / should / must_not terms computed in the scoring
+    aggregation itself: must_not terms ride the one bucket-pruned scan
+    and a doc is kept only when it matched none of them — one scan and
+    one shuffle, whatever the clauses."""
     must = sorted(set(must or []))
     should = sorted(set(should or []))
     must_not = sorted(set(must_not or []))
 
     all_scoring = sorted(set(must) | set(should))
     counts, gates = {}, []
+    if must_not:
+        # must_not rows are counted in n_matched too: the n_matched
+        # gates below are exact only ANDed with this one
+        counts["_n_not"] = must_not
+        gates.append("_n_not = 0")
     if must:
         if must == all_scoring:
             # no extra should-terms: n_matched over the scoring set IS
@@ -303,15 +333,9 @@ def bool_query(
             else:
                 counts["_n_should"] = should
                 gates.append(f"_n_should >= {msm}")
-    s = _scored_terms(index, all_scoring, counts=counts)
+    s = _scored_terms(index, {"score": all_scoring}, counts)
     if gates:
         s = s.where(" AND ".join(gates))
-    if must_not:
-        # no .distinct(): an anti-join is insensitive to right-side
-        # duplicates, so deduping the exclusion set is a pure extra
-        # exchange+aggregate (the join shuffles the same rows either
-        # way); its right side is pruned to doc_id by the optimizer
-        s = s.join(_candidates(index, must_not), "doc_id", "left_anti")
     return top_k(s.selectExpr("doc_id", "score"), k)
 
 
@@ -582,8 +606,9 @@ def scored_expansion(index: IndexTables, hits: DataFrame) -> DataFrame:
         ).limit(0)
     if len(rows) <= WILDCARD_COLLECT_THRESHOLD:
         return scored_terms(index, sorted(r["term"] for r in rows))
-    cand = _candidates_semi(index, hits)
-    return _array_fold(cand.join(hits.selectExpr("term", "df"), "term"), index)
+    rows = _candidates_semi(index, hits).join(hits.selectExpr("term", "df"), "term")
+    contrib = Q.contrib(Q.idf(index.n_docs, "CAST(df AS DOUBLE)"), "tf", "dl", index.avg_dl)
+    return _score_agg(rows, contrib, {"score": None})
 
 
 def fuzzy_query(
@@ -688,96 +713,25 @@ def _conjunction_docset(index: IndexTables, dfs: dict[str, int]) -> DataFrame:
     return docset
 
 
-def _spread_slop_pred(terms: list[str], slop: int, pos_col):
-    """Boolean Column over per-term positions columns (`pos_col(t)`
-    resolves term → array Column): Lucene sloppy-phrase match for
-    3+-term phrases — EXISTS an anchor w (in adjusted-position space)
-    whose window [w, w+slop] intersects every slot's adjusted
-    positions (adjusted = raw - slot offset). Anchor candidates are
-    exactly the union of adjusted positions: the optimal window starts
-    at some slot's element. All JVM array expressions (nested
-    higher-order functions) — no UDF. Factory functions throughout:
-    PySpark introspects lambda arity, so no defaulted-arg closures."""
-
-    # r6 measurement note (VERDICT r5 #5 / the CLAUDE.md anchor-dedup
-    # rough edge): three alternatives were interleave-A/B'd at 1.2M on
-    # the dense 'load config value'~2 probe — (a) let-binding the
-    # adjusted arrays in a lambda scope (anchors were ALREADY
-    # per-doc-distinct via array_distinct): 3.2-3.6s vs 3.2-3.3s, no
-    # change; (b) sort-merge sliding-window pass over (value, slot)
-    # structs: 7.0-8.4s, 2x WORSE (struct sort + per-step array allocs);
-    # (c) int-encoded merge with a flat primitive accumulator:
-    # 5.1-5.5s, still worse. The positions arrays are short (~2-4 per
-    # term per doc) so the anchor scan's nominal quadratic never
-    # materializes, while every merge variant pays real per-element
-    # allocation constants; the probe's wall time is the 3-column
-    # positions join pipeline, not this predicate. The r5 anchor form
-    # stands.
-    def _shift(i):
-        return lambda x: x - F.lit(i)
-
-    adj = [
-        F.transform(pos_col(t), _shift(i)) for i, t in enumerate(terms)
-    ]
-    anchors = F.array_distinct(F.flatten(F.array(*adj)))
-
-    # slots of each distinct term (repeated-term phrases share one
-    # positions array across several slots)
-    slots: dict[str, list[int]] = {}
-    for i, t in enumerate(terms):
-        slots.setdefault(t, []).append(i)
-
-    def _in_window(w):
-        def pred(q):
-            return (q >= w) & (q <= w + F.lit(slop))
-
-        return pred
-
-    def _raw_in_any_slot_window(w, term_slots):
-        def pred(p):
-            c = None
-            for i in term_slots:
-                this = (p >= w + F.lit(i)) & (p <= w + F.lit(slop + i))
-                c = this if c is None else (c | this)
-            return c
-
-        return pred
-
-    def _anchor_pred(w):
-        cond = None
-        for a in adj:
-            c = F.exists(a, _in_window(w))
-            cond = c if cond is None else (cond & c)
-        for t, term_slots in slots.items():
-            if len(term_slots) >= 2:
-                # EXACT distinct-token requirement for repeated terms:
-                # slot i's usable tokens form the interval
-                # [w+i, w+slop+i] of the sorted position list, and both
-                # endpoints are nondecreasing in i (a staircase interval
-                # bipartite graph) — for those, Hall's condition
-                # restricted to CONTIGUOUS slot ranges is necessary and
-                # sufficient for a distinct assignment (greedy
-                # smallest-feasible-position argument), and each range's
-                # neighborhood union is counted exactly by the
-                # OR-of-windows filter. O(c^2) range checks for c slots
-                # of the same term (c is tiny).
-                raw = pos_col(t)
-                ss = sorted(term_slots)
-                for a_i in range(len(ss)):
-                    for b_i in range(a_i + 1, len(ss)):
-                        rng = ss[a_i : b_i + 1]
-                        enough = (
-                            F.size(
-                                F.filter(
-                                    raw, _raw_in_any_slot_window(w, rng)
-                                )
-                            )
-                            >= len(rng)
-                        )
-                        cond = cond & enough
-        return cond
-
-    return F.exists(anchors, _anchor_pred)
+def _positions_join(
+    index: IndexTables, terms: list[str], docset: DataFrame | None = None
+) -> tuple[DataFrame, dict[str, str]]:
+    """One positions column per term (term -> its column name),
+    INNER-joined on doc_id: the join chain IS the all-terms-present
+    check, and measured 3.3x faster at 1.2M docs than the former
+    groupBy + map_from_entries(collect_list) pivot (ObjectHashAggregate's
+    per-row map building lost to plain shuffle joins; 'load config'
+    dense-phrase warm 3.5s -> 1.1s). dl rides the first frame. A
+    `docset` left_semi-trims every term's scan before the joins."""
+    cols = {t: f"_p{i}" for i, t in enumerate(terms)}
+    joined = None
+    for t in terms:
+        sel = ["doc_id", f"positions AS {cols[t]}"] + (["dl"] if joined is None else [])
+        part = _candidates(index, [t]).selectExpr(*sel)
+        if docset is not None:
+            part = part.join(docset, "doc_id", "left_semi")
+        joined = part if joined is None else joined.join(part, "doc_id")
+    return joined, cols
 
 
 def phrase_query(
@@ -804,7 +758,7 @@ def phrase_query(
     distinct slots of the same term must use distinct tokens, enforced
     EXACTLY — slot windows are staircase intervals over the sorted
     position list, so Hall's condition over contiguous slot ranges is
-    necessary and sufficient (_spread_slop_pred; oracle mirrors with
+    necessary and sufficient (sql.spread_slop; oracle mirrors with
     the equivalent greedy assignment, brute-force-pinned in
     tests/test_property_fuzz.py).
     """
@@ -831,20 +785,7 @@ def phrase_query(
         if sum_df > 1.5 * len(dfs) * min_df:
             docset = _conjunction_docset(index, dfs)
 
-    # One positions column per unique term, INNER-joined on doc_id —
-    # the join chain IS the all-terms-present check, and measured 3.3x
-    # faster at 1.2M docs than the former groupBy +
-    # map_from_entries(collect_list) pivot (ObjectHashAggregate's
-    # per-row map building lost to plain shuffle joins; 'load config'
-    # dense-phrase warm 3.5s -> 1.1s). dl rides the first frame.
-    cols = {t: f"_p{i}" for i, t in enumerate(uniq)}
-    joined = None
-    for t in uniq:
-        sel = ["doc_id", f"positions AS {cols[t]}"] + (["dl"] if joined is None else [])
-        part = _candidates(index, [t]).selectExpr(*sel)
-        if docset is not None:
-            part = part.join(docset, "doc_id", "left_semi")
-        joined = part if joined is None else joined.join(part, "doc_id")
+    joined, cols = _positions_join(index, uniq, docset)
 
     if slop == 0 or len(terms) == 2:
         # phrase = exists start p with term_i at position p+i for all i:
@@ -862,9 +803,7 @@ def phrase_query(
             starts = f"filter({starts}, {step})"
         matched = joined.where(f"size({starts}) > 0")
     else:
-        matched = joined.where(
-            _spread_slop_pred(terms, slop, lambda t: F.col(cols[t]))
-        )
+        matched = joined.where(Q.spread_slop([cols[t] for t in terms], slop))
 
     # Score: BM25 over the phrase's unique terms (ES scores the phrase
     # clause with term statistics of its members). Zero-shuffle: tf =

@@ -118,7 +118,7 @@ class OracleIndex:
                 if starts:
                     matched.append(doc_id)
                 continue
-            # 3+ terms: Lucene spread semantics (exec._spread_slop_pred)
+            # 3+ terms: Lucene spread semantics (sql.spread_slop)
             adj = [
                 {p - i for p in self.positions.get(t, {}).get(doc_id, [])}
                 for i, t in enumerate(terms)
@@ -140,7 +140,7 @@ class OracleIndex:
                         # exact distinct assignment: slot windows are
                         # staircase intervals, so greedy
                         # smallest-feasible-unused-position is exact
-                        # (mirrors exec._spread_slop_pred's contiguous-
+                        # (mirrors sql.spread_slop's contiguous-
                         # range Hall checks)
                         raw = sorted(
                             self.positions.get(t, {}).get(doc_id, [])

@@ -45,7 +45,9 @@ from pyspark.sql import types as T
 
 from elasticsearch_assets_spark.functions.analyzer import analyze_text
 from elasticsearch_assets_spark.indexing import codec
-from elasticsearch_assets_spark.query.bm25 import K1, B, idf
+from elasticsearch_assets_spark.query import sql as Q
+from elasticsearch_assets_spark.query.bm25 import K1, idf
+from elasticsearch_assets_spark.query.exec import _score_agg
 
 DECODED_SCHEMA = T.StructType(
     [
@@ -195,56 +197,12 @@ def decode_blocks(blocks: DataFrame) -> DataFrame:
 def _score_decoded(
     decoded: DataFrame, stats: dict[str, tuple[int, float]], n_docs: int, avg_dl: float
 ) -> DataFrame:
-    """Exact BM25 over decoded posting rows → (doc_id, score, n_matched).
-    Same deterministic term-sorted fold as query.exec.scored_terms."""
-    spark = decoded.sparkSession
-    idf_rows = [(t, idf(n_docs, df_)) for t, (df_, _) in stats.items()]
-    idf_df = spark.createDataFrame(idf_rows, ["term", "idf"])
-    contrib = decoded.join(F.broadcast(idf_df), "term").withColumn(
-        "contrib",
-        F.col("idf")
-        * (
-            F.col("tf")
-            / (
-                F.col("tf")
-                + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(avg_dl))
-            )
-        )
-        * F.lit(K1 + 1.0),
-    )
-    # Same deterministic-fold implementations as exec.scored_terms: for
-    # the normal short term list, per-term conditional sums keep the
-    # whole aggregation in codegen (measured ~2x over the
-    # collect_list + sort_array + aggregate shape there); the
-    # left-to-right chain over term-sorted columns reproduces the
-    # sorted fold bit-for-bit. Wide expansions keep the array fold.
-    terms_sorted = sorted(stats)
-    if len(terms_sorted) <= 32:
-        aggs = [
-            F.sum(F.when(F.col("term") == t, F.col("contrib"))).alias(f"_c{i}")
-            for i, t in enumerate(terms_sorted)
-        ]
-        g = contrib.groupBy("doc_id").agg(
-            *aggs, F.count("*").alias("n_matched")
-        )
-        score = F.lit(0.0)
-        for i in range(len(terms_sorted)):
-            c = F.col(f"_c{i}")
-            score = F.when(c.isNotNull(), score + c).otherwise(score)
-        return g.withColumn("score", score).drop(
-            *[f"_c{i}" for i in range(len(terms_sorted))]
-        )
-    return (
-        contrib.groupBy("doc_id")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("term", "contrib"))).alias("_cs"),
-            F.count("*").alias("n_matched"),
-        )
-        .withColumn(
-            "score", F.aggregate("_cs", F.lit(0.0), lambda a, x: a + x["contrib"])
-        )
-        .drop("_cs")
-    )
+    """Exact BM25 over decoded posting rows → (doc_id, n_matched, dl,
+    score): the idfs ride one map literal built from `stats`, folded by
+    exec._score_agg — the row-postings path's aggregation."""
+    dfs = {t: df_ for t, (df_, _) in stats.items()}
+    contrib = Q.contrib(f"element_at({Q.idf_map(n_docs, dfs)}, term)", "tf", "dl", avg_dl)
+    return _score_agg(decoded, contrib, {"score": sorted(stats)})
 
 
 def scored_terms_packed(index: PackedIndex, text: str) -> DataFrame | None:
@@ -404,7 +362,6 @@ def _single_term_blockmax(
     index: PackedIndex, qblocks: DataFrame, term: str, stats, k: int
 ) -> DataFrame:
     df_, _mt = stats[term]
-    t_idf = idf(index.n_docs, df_)
 
     # phase 1: highest-bound blocks until ≥ k docs seen → θ
     top_blocks, _got = _phase1_blocks(qblocks, k)
@@ -419,11 +376,13 @@ def _single_term_blockmax(
     )
     theta = p1_rows[-1]["score"] if len(p1_rows) >= k else -1.0
 
-    # phase 2: decode only blocks whose upper bound can reach θ
-    keep = qblocks.where(
-        (F.lit(t_idf) * F.col("max_tfn") * F.lit(K1 + 1.0) >= F.lit(theta))
-        & (~F.col("block").isin(top_blocks))
-    )
+    # phase 2: decode only blocks whose upper bound can reach θ. The
+    # bound reads the idf the scores use (the JVM-side ln() of the idf
+    # map), so a block holding a doc tied at θ is never skipped
+    bound = f"{Q.idf(index.n_docs, Q.lit(float(df_)))} * max_tfn * {Q.lit(K1 + 1.0)}"
+    keep = qblocks.where(f"{bound} >= {Q.lit(float(theta))}")
+    if top_blocks:
+        keep = keep.where(f"NOT {Q.in_list('block', top_blocks)}")
     p2 = _score_decoded(
         decode_blocks(keep), {term: stats[term]}, index.n_docs, index.avg_dl
     )

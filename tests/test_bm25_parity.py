@@ -45,14 +45,22 @@ def test_match_parity(corpus, text, k, op):
     _assert_parity(qx.match_query(index, text, k=k, operator=op), oracle.match(text, k=k, operator=op))
 
 
-def test_bool_parity(corpus):
+@pytest.mark.parametrize(
+    "must,should,must_not,k",
+    [
+        (["return", "self"], ["parse"], ["uniq_3"], 20),
+        (["return"], ["parse", "merge"], ["parse"], 50),  # must_not also a should term
+        (["return"], ["parse"], ["no_such_token_xyz"], 50),  # must_not not in the dictionary
+        ([], ["parse", "merge"], ["batch"], 50),  # must_not with no must
+        ([], ["parse"], ["load"], 50),  # must_not removes every candidate
+        (["merge"], ["parse"], ["return"], 50),  # head-term must_not
+    ],
+    ids=["base", "not_in_should", "not_absent", "no_must", "not_all", "not_head"],
+)
+def test_bool_parity(corpus, must, should, must_not, k):
     index, oracle = corpus
-    got = qx.bool_query(
-        index, must=["return", "self"], should=["parse"], must_not=["uniq_3"], k=20
-    )
-    exp = oracle.bool_query(
-        must=["return", "self"], should=["parse"], must_not=["uniq_3"], k=20
-    )
+    got = qx.bool_query(index, must=must, should=should, must_not=must_not, k=k)
+    exp = oracle.bool_query(must=must, should=should, must_not=must_not, k=k)
     _assert_parity(got, exp)
 
 

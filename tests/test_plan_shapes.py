@@ -506,15 +506,37 @@ def test_topk_huge_k_avoids_takeordered(disk_index):
 
 def test_dis_max_single_posting_scan(disk_index):
     # dis_max over N subqueries = ONE posting scan of the term union
-    # (per-term conditional sums), never a scan per subquery
+    # (per-term conditional sums), never a scan per subquery; bool's
+    # must_not and boosting's negatives ride that same scan as per-doc
+    # counts, so no query of the three plans a join
     from elasticsearch_assets_spark.query import compound as qc
 
-    q = qc.dis_max_query(disk_index, [["merge", "batch"], ["parse", "date"]], 0.3, k=5)
-    scans = _postings_scans(q)
-    assert len(scans) == 1, _plan(q)
-    s = scans[0]
-    assert "PushedFilters" in s and "In(term" in s, s
-    assert "bucket" in s.split("PartitionFilters")[1].split("]")[0], s
+    queries = {
+        "dis_max": qc.dis_max_query(disk_index, [["merge", "batch"], ["parse", "date"]], 0.3, k=5),
+        "bool": qx.bool_query(disk_index, must=["merge"], should=["batch"], must_not=["parse"], k=5),
+        "boosting": qc.boosting_query(disk_index, ["merge", "batch"], ["parse"], k=5),
+    }
+    for name, q in queries.items():
+        scans = _postings_scans(q)
+        assert len(scans) == 1, (name, _plan(q))
+        s = scans[0]
+        assert "PushedFilters" in s and "In(term" in s, (name, s)
+        assert "bucket" in s.split("PartitionFilters")[1].split("]")[0], (name, s)
+        assert "Join" not in _plan(q), (name, _plan(q))
+
+
+def test_small_single_file_build_plans_no_round_robin(spark, tmp_path):
+    # a one-file input under the 2 MB floor of
+    # arrowtf.ensure_scan_parallelism is not repartitioned by the build:
+    # there the exchange costs more than the serial compute it spreads
+    from elasticsearch_assets_spark.corpus import generate_corpus_pandas
+
+    p = str(tmp_path / "docs.parquet")
+    generate_corpus_pandas(50, seed=5).to_parquet(p)
+    docs = spark.read.parquet(p)
+    assert docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    plan = _plan(build_index(docs, n_buckets=4, cache=False).postings)
+    assert "RoundRobinPartitioning" not in plan, plan
 
 
 def test_constant_score_pushdown(disk_index):
