@@ -112,8 +112,3 @@ def duckdb_analyze_sql(expr: str) -> str:
         f" '{CAMEL_RE}', '\\1 \\2', 'g'),"
         f" '{ACRONYM_RE}', '\\1 \\2', 'g')), '{SPLIT_RE}'), t -> t <> '')"
     )
-
-
-def tokens_with_positions(col: Column | str):
-    """(token, position) pairs for phrase queries: posexplode-ready."""
-    return F.posexplode(analyze_col(col))

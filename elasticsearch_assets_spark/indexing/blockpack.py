@@ -41,7 +41,6 @@ from elasticsearch_assets_spark.indexing import codec
 from elasticsearch_assets_spark.indexing.build import (
     IndexTables,
     ROW_GROUP_BYTES,
-    WRITE_FANOUT,
     _bucketed_sorted,
 )
 from elasticsearch_assets_spark.query.bm25 import K1, B
@@ -195,22 +194,17 @@ def pack_blocks(
 
     write_layout=False (default): shuffle keyed (term, block) at the
     session's shuffle parallelism — the in-memory serving shape.
-    write_layout=True: shuffle keyed (bucket, reseeded-hash(term)) into
-    n_buckets*WRITE_FANOUT partitions — the SAME keying write_blocks
-    needs, so pack→write is ONE shuffle of posting rows total (the
-    blocks themselves never reshuffle; see pack_and_write_blocks).
+    write_layout=True: shuffle into the postings write layout of
+    build._bucketed_sorted — the SAME keying write_blocks needs, so
+    pack→write is ONE shuffle of posting rows total (the blocks
+    themselves never reshuffle; see pack_and_write_blocks).
     Either way each (term, block) group lands in exactly one partition,
     sorted contiguous with doc_id ascending, which is the encoder's
     input contract.
     """
     wb = _assign_blocks(index, block_size)
     if write_layout:
-        sub = F.pmod(
-            F.xxhash64(F.lit("fanout"), F.col("term")), F.lit(WRITE_FANOUT)
-        ).cast("int")
-        part = wb.repartition(
-            index.n_buckets * WRITE_FANOUT, F.col("bucket"), sub
-        ).sortWithinPartitions("bucket", "term", "block", "doc_id")
+        part = _bucketed_sorted(wb, index.n_buckets, sort_cols=("term", "block", "doc_id"))
     else:
         part = wb.repartition("term", "block").sortWithinPartitions(
             "term", "block", "doc_id"

@@ -70,7 +70,8 @@ def varbyte_decode(buf: bytes, n: int) -> np.ndarray:
     raw = np.frombuffer(buf, dtype=np.uint8)
     is_end = (raw & 0x80) == 0
     ends = np.flatnonzero(is_end)
-    assert len(ends) >= n, "corrupt varbyte stream"
+    if len(ends) < n:
+        raise ValueError(f"corrupt varbyte stream: {len(ends)} of {n} values")
     ends = ends[:n]
     starts = np.concatenate(([0], ends[:-1] + 1))
     out = np.zeros(n, dtype=np.uint64)

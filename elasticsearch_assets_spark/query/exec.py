@@ -28,9 +28,9 @@ count in the same groupBy, gated in one filter:
       -> WHERE _n_not = 0 AND _n_must = |must| ..
 
 _score_agg is the one builder of that aggregation for every scorer
-(match, terms, bool, boosting, dis_max, wildcard/fuzzy expansions and
-the packed-block decode in query/wand.py); it alone picks the fold
-form.
+(match, terms, bool, boosting, dis_max, the query_string planner's
+term clauses, wildcard/fuzzy expansions and the packed-block decode in
+query/wand.py); it alone picks the fold form.
 """
 
 from __future__ import annotations
@@ -659,12 +659,6 @@ def expanded_candidates(index: IndexTables, hits: DataFrame) -> DataFrame:
     return _candidates_semi(index, hits)
 
 
-def expand_wildcard(index: IndexTables, pattern: str) -> list[str]:
-    """Driver-side expansion (small patterns / tests): the scale path is
-    expanded_candidates(dict_hits(...))."""
-    return [r["term"] for r in dict_hits(index, pattern).selectExpr("term").collect()]
-
-
 def _glob_to_regex(glob: str) -> str:
     out = []
     for ch in glob:
@@ -683,13 +677,7 @@ def wildcard_query(index: IndexTables, pattern: str, k: int = 10) -> DataFrame:
     """ES `wildcard`: constant-score filter (score = 1.0 per doc, the ES
     constant_score semantics for multi-term queries), tie-break doc_id."""
     cand = expanded_candidates(index, dict_hits(index, pattern))
-    out = cand.selectExpr("doc_id", "1.0D AS score").distinct()
-    if k >= ALL_MATCHES:
-        # "every match" (the planner's docset composition): the
-        # ordering is destroyed downstream and the huge-k limit is a
-        # no-op — skip the global sort (see top_k)
-        return out
-    return out.orderBy(F.asc("doc_id")).limit(k)
+    return top_k(cand.selectExpr("doc_id", "1.0D AS score").distinct(), k)
 
 
 def term_filter_count(index: IndexTables, terms: list[str]) -> int:

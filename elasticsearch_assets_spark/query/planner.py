@@ -16,14 +16,15 @@ reference emits, documented deviations noted):
 - Boost                child score × factor
 - Exists               field IS NOT NULL, filter context
 - keyword Term/Wildcard/Regexp/Range/Fuzzy   filter context, score 1.0
-- Or                   union; scores of matching clauses SUM (ES should)
-- And                  intersection; scores SUM (ES must)
-- Not                  anti-join exclusion (score 0 contribution)
+- Or                   scores of matching clauses SUM (ES should)
+- And                  every clause matches; scores SUM (ES must)
+- Not                  exclusion (score 0 contribution)
 
-Every clause evaluates to (doc_id, score); combinators merge with one
-shuffle per level (union + groupBy), scores folded in clause order for
-deterministic float association. Final ordering: (score desc, doc_id
-asc) — the ES tie-break.
+Every clause evaluates to (doc_id, score), scores folded in clause order
+for deterministic float association: text Term clauses (bare, `+`, `-`)
+in ONE exec._scored_terms aggregation, any other combinator by union +
+groupBy with an anti-join per `-` clause. Final ordering: (score desc,
+doc_id asc) — the ES tie-break.
 """
 
 from __future__ import annotations
@@ -116,7 +117,7 @@ class QueryPlanner:
         if isinstance(node, And):
             return self._combine(list(node.children), require_all=True)
         if isinstance(node, Not):
-            return self._not(node)
+            return self._combine([node], require_all=False)
         if isinstance(node, Must):
             # a lone required clause is just the clause; the modifier
             # only changes semantics inside a combinator (see _combine)
@@ -201,6 +202,11 @@ class QueryPlanner:
 
     # -- combinators --------------------------------------------------------
     def _combine(self, children: list, require_all: bool) -> DataFrame:
+        clauses = [(type(c), c.child if isinstance(c, (Must, Not)) else c) for c in children]
+        if all(isinstance(t, Term) and self._is_text(t.field) for _, t in clauses) and any(
+            kind is not Not for kind, _ in clauses
+        ):
+            return self._term_clauses(clauses, require_all)
         positives: list[DataFrame] = []
         must_flags: list[bool] = []
         negatives: list[DataFrame] = []
@@ -255,10 +261,26 @@ class QueryPlanner:
             out = out.join(n, "doc_id", "left_anti")
         return out
 
-    def _not(self, node: Node) -> DataFrame:
-        base = self.attrs.selectExpr("doc_id", "0.0D AS score")
-        ex = self.plan(node.child).selectExpr("doc_id")
-        return base.join(ex, "doc_id", "left_anti")
+    def _term_clauses(self, clauses: list, require_all: bool) -> DataFrame:
+        """_combine's result for text Term clauses (kind Term, Must or
+        Not) from ONE scan: per clause i a fold _s{i} and a count _c{i}
+        of its analyzed parts, all of which must match (as in _term);
+        IF() drops an unmatched clause from the clause-order fold."""
+        folds, counts, required, optional, gates, score = {}, {}, [], [], [], []
+        for i, (kind, term) in enumerate(clauses):
+            parts = sorted(set(analyze_text(term.value)))
+            if parts:
+                counts[f"_c{i}"] = parts
+            matched = f"_c{i} = {len(parts)}" if parts else "FALSE"
+            if kind is Not:
+                gates.append(f"NOT ({matched})")
+                continue
+            folds[f"_s{i}"] = parts
+            score.append(f"IF({matched}, _s{i}, NULL)")
+            (required if require_all or kind is Must else optional).append(matched)
+        gates.append(" AND ".join(required) if required else f"({' OR '.join(optional)})")
+        s = qx._scored_terms(self.index, folds, counts).where(" AND ".join(gates))
+        return s.selectExpr("doc_id", f"{Q.fold(score)} AS score")
 
     # -- filter-context compilation (the spaces fast path) -----------------
     def compile_filter(self, node: Node) -> "F.Column":

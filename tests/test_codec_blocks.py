@@ -23,6 +23,13 @@ def test_varbyte_small_values_one_byte():
     assert len(codec.varbyte_encode(vals)) == 128
 
 
+def test_varbyte_decode_truncated_raises():
+    # a block cut short on disk fails loudly, also under python -O
+    buf = codec.varbyte_encode(np.array([1, 300, 2**20], dtype=np.uint64))
+    with pytest.raises(ValueError):
+        codec.varbyte_decode(buf[:-1], 3)
+
+
 def test_zigzag():
     v = np.array([0, -1, 1, -2, 2, -(2**62), 2**62], dtype=np.int64)
     assert (codec.zigzag_decode(codec.zigzag_encode(v)) == v).all()

@@ -508,13 +508,18 @@ def test_dis_max_single_posting_scan(disk_index):
     # dis_max over N subqueries = ONE posting scan of the term union
     # (per-term conditional sums), never a scan per subquery; bool's
     # must_not and boosting's negatives ride that same scan as per-doc
-    # counts, so no query of the three plans a join
+    # counts, and so do a query string's term clauses, so no query here
+    # plans a join or a union
     from elasticsearch_assets_spark.query import compound as qc
+    from elasticsearch_assets_spark.query.planner import PlannerConfig, QueryPlanner
 
+    qp = QueryPlanner(disk_index, config=PlannerConfig(default_field="content", text_fields=("content",)))
     queries = {
         "dis_max": qc.dis_max_query(disk_index, [["merge", "batch"], ["parse", "date"]], 0.3, k=5),
         "bool": qx.bool_query(disk_index, must=["merge"], should=["batch"], must_not=["parse"], k=5),
         "boosting": qc.boosting_query(disk_index, ["merge", "batch"], ["parse"], k=5),
+        "qs_or_not": qp.query_string("merge batch -parse", k=5),
+        "qs_required": qp.query_string("+batch merge -stream", k=5),
     }
     for name, q in queries.items():
         scans = _postings_scans(q)
@@ -522,7 +527,7 @@ def test_dis_max_single_posting_scan(disk_index):
         s = scans[0]
         assert "PushedFilters" in s and "In(term" in s, (name, s)
         assert "bucket" in s.split("PartitionFilters")[1].split("]")[0], (name, s)
-        assert "Join" not in _plan(q), (name, _plan(q))
+        assert "Join" not in _plan(q) and "Union" not in _plan(q), (name, _plan(q))
 
 
 def test_small_single_file_build_plans_no_round_robin(spark, tmp_path):

@@ -320,6 +320,54 @@ def test_qs_field_group_with_range(planner, corpus):
     assert got == exp
 
 
+@pytest.mark.parametrize(
+    "q",
+    [
+        "merge batch -parse",
+        "+batch merge -stream",
+        "merge AND batch",
+        "merge OR merge",
+        "uniq_7 OR NOT merge",
+        "parseDate AND merge",
+        "-parseDate merge",
+        "merge OR __",
+        "merge AND __",
+        "merge AND NOT merge",
+        None,  # an OR of 40 dictionary terms: the sorted-array fold
+    ],
+)
+def test_qs_term_clauses_equal_clause_fold(planner, corpus, q):
+    """A combinator of text term clauses scores exactly the clause-order
+    fold 0.0 + s_0 + s_1 + ... of its clauses' own scores: clause i
+    scores scored_terms over its analyzed parts, gated on all of them
+    matching (a clause with no parts matches nothing); + and every AND
+    child are required, a bare OR child is optional, - / NOT excludes."""
+    from elasticsearch_assets_spark.functions.analyzer import analyze_text
+    from elasticsearch_assets_spark.query import exec as qx
+
+    qp, oracle = planner
+    index, _ = corpus
+    if q is None:
+        q = " OR ".join(sorted(oracle.tf)[:40])
+    node = P.parse(q, default_field="content")
+    clauses = []
+    for c in node.children:
+        parts = sorted(set(analyze_text((c.child if isinstance(c, (P.Must, P.Not)) else c).value)))
+        s = qx.scored_terms(index, parts).where(f"n_matched = {len(parts)}")
+        clauses.append((type(c), dict(_ids(s)) if parts else {}))
+    pos = [(isinstance(node, P.And) or kind is P.Must, hits) for kind, hits in clauses if kind is not P.Not]
+    required = [set(h) for req, h in pos if req]
+    docs = set.intersection(*required) if required else set().union(*[h for _, h in pos])
+    docs -= set().union(*[h for kind, h in clauses if kind is P.Not])
+    exp = {}
+    for d in docs:
+        score = 0.0
+        for _, hits in pos:
+            score += hits.get(d, 0.0)
+        exp[d] = score
+    assert dict(_ids(qp.plan(node))) == exp
+
+
 def test_qs_count(planner, corpus):
     qp, oracle = planner
     assert qp.count("merge OR batch") == len(
