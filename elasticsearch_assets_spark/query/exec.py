@@ -136,16 +136,15 @@ def _scored_terms(
     # the running score bit-identical (x + 0.0 == x, IEEE-exact for the
     # non-negative contributions)
     folds = {name: [t for t in ts if t in dfs] for name, ts in folds.items()}
-    if not dfs:
+    if not dfs and not counts:
         return cand.selectExpr(
             "doc_id", "CAST(0 AS BIGINT) AS n_matched", "0 AS dl",
             *[f"0.0D AS {name}" for name in folds],
-            *[f"CAST(0 AS BIGINT) AS {name}" for name in counts],
         ).limit(0)
-    contrib = Q.contrib(
-        f"element_at({Q.idf_map(index.n_docs, dfs)}, term)", "tf", "dl", index.avg_dl, k1, b
-    )
-    return _score_agg(cand, contrib, folds, counts)
+    # no scoring term in the dictionary: the counted terms' rows still
+    # aggregate (a query_string exclusion beside other clauses)
+    idf = f"element_at({Q.idf_map(index.n_docs, dfs)}, term)" if dfs else "CAST(NULL AS DOUBLE)"
+    return _score_agg(cand, Q.contrib(idf, "tf", "dl", index.avg_dl, k1, b), folds, counts)
 
 
 # up to this many distinct fold terms, folds are per-term conditional

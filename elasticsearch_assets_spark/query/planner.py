@@ -21,10 +21,11 @@ reference emits, documented deviations noted):
 - Not                  exclusion (score 0 contribution)
 
 Every clause evaluates to (doc_id, score), scores folded in clause order
-for deterministic float association: text Term clauses (bare, `+`, `-`)
-in ONE exec._scored_terms aggregation, any other combinator by union +
-groupBy with an anti-join per `-` clause. Final ordering: (score desc,
-doc_id asc) — the ES tie-break.
+for deterministic float association. A combinator scores all its text
+Term clauses (bare, `+`, `-`) in ONE exec._scored_terms aggregation and
+merges any other clause into it with one union + groupBy, exclusions
+included (no anti-join). Final ordering: (score desc, doc_id asc) — the
+ES tie-break.
 """
 
 from __future__ import annotations
@@ -202,85 +203,62 @@ class QueryPlanner:
 
     # -- combinators --------------------------------------------------------
     def _combine(self, children: list, require_all: bool) -> DataFrame:
-        clauses = [(type(c), c.child if isinstance(c, (Must, Not)) else c) for c in children]
-        if all(isinstance(t, Term) and self._is_text(t.field) for _, t in clauses) and any(
-            kind is not Not for kind, _ in clauses
-        ):
-            return self._term_clauses(clauses, require_all)
-        positives: list[DataFrame] = []
-        must_flags: list[bool] = []
-        negatives: list[DataFrame] = []
-        for child in children:
-            if isinstance(child, Not):
+        """And/Or as one row per doc with a column per clause: `_s{i}`
+        holds positive clause i's score when it matched (else NULL), and
+        `_x` is true when a `-`/NOT clause matched. Every text Term clause
+        (bare, `+`, `-`) rides ONE exec._scored_terms aggregation, with a
+        fold _s{i} and a count _c{i} of its analyzed parts (it matches
+        when all parts do, as in _term); any other clause is its own
+        (doc_id, score) frame. More than one frame: a union, each frame
+        filling its own columns, and one groupBy(doc_id) — each frame has
+        one row per doc, so max() is a clause's one value. The score folds
+        the positive columns in clause order, which keeps float
+        association deterministic."""
+        folds, counts, tcols, texcl, frames, pos, req = {}, {}, [], [], [], [], []
+        for i, c in enumerate(children):
+            node = c.child if isinstance(c, (Must, Not)) else c
+            if isinstance(node, Term) and self._is_text(node.field):
+                parts = sorted(set(analyze_text(node.value)))
+                if parts:
+                    counts[f"_c{i}"] = parts
+                matched = f"_c{i} = {len(parts)}" if parts else "FALSE"
+                if isinstance(c, Not):
+                    texcl.append(matched)
+                else:
+                    folds[f"_s{i}"] = parts
+                    tcols.append(f"IF({matched}, _s{i}, NULL) AS _s{i}")
+            elif isinstance(c, Not):
                 # ES/Lucene query_string semantics: NOT inside either
                 # combinator is a bool-level MUST_NOT clause — `a OR NOT b`
                 # matches docs matching a and excluding b (Lucene parses
                 # the NOT as a top-level exclusion, not a complement
                 # union operand)
-                negatives.append(self.plan(child.child).selectExpr("doc_id"))
-            elif isinstance(child, Must):
+                frames.append(self.plan(node).selectExpr("doc_id", "TRUE AS _x"))
+            else:
+                frames.append(self.plan(node).selectExpr("doc_id", f"score AS _s{i}", "FALSE AS _x"))
+            if not isinstance(c, Not):
+                pos.append(f"_s{i}")
                 # Lucene `+clause`: gates matching; the sibling should
                 # clauses become optional score-adders (classic
                 # `+required optional -prohibited` form)
-                positives.append(self.plan(child.child))
-                must_flags.append(True)
-            else:
-                positives.append(self.plan(child))
-                must_flags.append(False)
-
-        if not positives:
+                if require_all or isinstance(c, Must):
+                    req.append(f"_s{i} IS NOT NULL")
+        if folds or counts:
+            x = " OR ".join(texcl) or "FALSE"
+            frames.append(qx._scored_terms(self.index, folds, counts).selectExpr("doc_id", *tcols, f"{x} AS _x"))
+        if not pos:
             # pure-negative query: all docs minus exclusions, score 0
-            base = self.attrs.selectExpr("doc_id", "0.0D AS score")
-            for n in negatives:
-                base = base.join(n, "doc_id", "left_anti")
-            return base
-
-        n_must = sum(must_flags)
-        u = None
-        for i, p in enumerate(positives):
-            t = p.selectExpr("doc_id", "score", f"{i} AS _c", f"{int(must_flags[i])} AS _m")
-            u = t if u is None else u.unionByName(t)
-        # deterministic clause-order fold as a chain of conditional
-        # sums — each (doc, clause) contributes exactly one row, so
-        # sum(CASE WHEN _c = i) is that clause's score and the chain
-        # reproduces the sorted fold bit-for-bit in whole-stage codegen
-        # (same rewrite as exec.scored_terms, ~2x on big unions)
-        agg = u.groupBy("doc_id").agg(
-            F.expr(f"{Q.term_fold(list(range(len(positives))), 'score', key='_c')} AS score"),
-            F.expr("count(1) AS _n"),
-            F.expr("sum(_m) AS _nm"),
-        )
-        if require_all:
-            agg = agg.where(f"_n = {len(positives)}")
-        elif n_must:
-            # every required clause must match; non-must siblings only
-            # add score
-            agg = agg.where(f"_nm = {n_must}")
-        out = agg.selectExpr("doc_id", "score")
-        for n in negatives:
-            out = out.join(n, "doc_id", "left_anti")
-        return out
-
-    def _term_clauses(self, clauses: list, require_all: bool) -> DataFrame:
-        """_combine's result for text Term clauses (kind Term, Must or
-        Not) from ONE scan: per clause i a fold _s{i} and a count _c{i}
-        of its analyzed parts, all of which must match (as in _term);
-        IF() drops an unmatched clause from the clause-order fold."""
-        folds, counts, required, optional, gates, score = {}, {}, [], [], [], []
-        for i, (kind, term) in enumerate(clauses):
-            parts = sorted(set(analyze_text(term.value)))
-            if parts:
-                counts[f"_c{i}"] = parts
-            matched = f"_c{i} = {len(parts)}" if parts else "FALSE"
-            if kind is Not:
-                gates.append(f"NOT ({matched})")
-                continue
-            folds[f"_s{i}"] = parts
-            score.append(f"IF({matched}, _s{i}, NULL)")
-            (required if require_all or kind is Must else optional).append(matched)
-        gates.append(" AND ".join(required) if required else f"({' OR '.join(optional)})")
-        s = qx._scored_terms(self.index, folds, counts).where(" AND ".join(gates))
-        return s.selectExpr("doc_id", f"{Q.fold(score)} AS score")
+            frames.append(self.attrs.selectExpr("doc_id", "FALSE AS _x"))
+        u = frames[0]
+        for f in frames[1:]:
+            u = u.unionByName(f, allowMissingColumns=True)
+        if len(frames) > 1:
+            u = u.groupBy("doc_id").agg(*[F.expr(f"max({c}) AS {c}") for c in [*pos, "_x"]])
+        if req:
+            gate = " AND ".join(req)
+        else:
+            gate = " OR ".join(f"{c} IS NOT NULL" for c in pos) or "TRUE"
+        return u.where(f"({gate}) AND NOT _x").selectExpr("doc_id", f"{Q.fold(pos)} AS score")
 
     # -- filter-context compilation (the spaces fast path) -----------------
     def compile_filter(self, node: Node) -> "F.Column":
@@ -292,9 +270,10 @@ class QueryPlanner:
         Match-set parity with plan(): combinator semantics mirror
         _combine exactly (Must gates an OR; NOT inside either
         combinator is a bool-level exclusion), and every negation is
-        null-safe (`NOT coalesce(cond, false)`) because the join path's
-        anti-join keeps null-attribute docs that a raw three-valued
-        `NOT col = x` would drop. Raises on text-field clauses — those
+        null-safe (`NOT coalesce(cond, false)`) because plan()'s
+        exclusion keeps null-attribute docs (they never enter the
+        excluded clause's frame) that a raw three-valued `NOT col = x`
+        would drop. Raises on text-field clauses — those
         need the scored index plan."""
         return F.expr(self._filter_sql(node))
 

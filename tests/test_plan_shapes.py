@@ -528,6 +528,10 @@ def test_dis_max_single_posting_scan(disk_index):
         assert "PushedFilters" in s and "In(term" in s, (name, s)
         assert "bucket" in s.split("PartitionFilters")[1].split("]")[0], (name, s)
         assert "Join" not in _plan(q) and "Union" not in _plan(q), (name, _plan(q))
+    # beside a keyword clause the term clauses still take one scan, and
+    # the exclusion is a column of the one union's groupBy, not a join
+    q = qp.query_string("merge OR lang:py -batch", k=5)
+    assert len(_postings_scans(q)) == 1 and "Join" not in _plan(q), _plan(q)
 
 
 def test_small_single_file_build_plans_no_round_robin(spark, tmp_path):

@@ -334,38 +334,56 @@ def test_qs_field_group_with_range(planner, corpus):
         "merge AND __",
         "merge AND NOT merge",
         None,  # an OR of 40 dictionary terms: the sorted-array fold
+        "merge OR lang:py -batch",
+        "+lang:py merge -parseDate",
+        "lang:py -merge",
+        '"load config" OR zz_nope -merge',
+        "-merge -batch",
     ],
 )
-def test_qs_term_clauses_equal_clause_fold(planner, corpus, q):
-    """A combinator of text term clauses scores exactly the clause-order
-    fold 0.0 + s_0 + s_1 + ... of its clauses' own scores: clause i
-    scores scored_terms over its analyzed parts, gated on all of them
-    matching (a clause with no parts matches nothing); + and every AND
-    child are required, a bare OR child is optional, - / NOT excludes."""
+def test_qs_clauses_equal_clause_fold(planner, corpus, q):
+    """A combinator scores the clause-order fold 0.0 + s_0 + s_1 + ...
+    of its clauses' own scores, each from the oracle: a text term clause
+    scores its analyzed parts and matches only when all of them do (a
+    clause with no parts matches nothing), lang:x is 1.0, a phrase its
+    BM25. + and every AND child are required, a bare OR child is
+    optional, - / NOT excludes; with no positive clause every doc
+    scores 0.0."""
     from elasticsearch_assets_spark.functions.analyzer import analyze_text
-    from elasticsearch_assets_spark.query import exec as qx
 
     qp, oracle = planner
     index, _ = corpus
+    langs = {r["doc_id"]: r["lang"] for r in index.doc_norms.select("doc_id", "lang").collect()}
     if q is None:
         q = " OR ".join(sorted(oracle.tf)[:40])
+
+    def hits(node):
+        if isinstance(node, P.Phrase):
+            return dict(oracle.phrase(node.text, k=10**6))
+        if node.field == "lang":
+            return {d: 1.0 for d, lang in langs.items() if lang == node.value}
+        parts = sorted(set(analyze_text(node.value)))
+        return {d: s for d, (s, n) in oracle.score_terms(parts).items() if n == len(parts)} if parts else {}
+
     node = P.parse(q, default_field="content")
-    clauses = []
-    for c in node.children:
-        parts = sorted(set(analyze_text((c.child if isinstance(c, (P.Must, P.Not)) else c).value)))
-        s = qx.scored_terms(index, parts).where(f"n_matched = {len(parts)}")
-        clauses.append((type(c), dict(_ids(s)) if parts else {}))
-    pos = [(isinstance(node, P.And) or kind is P.Must, hits) for kind, hits in clauses if kind is not P.Not]
+    clauses = [(type(c), hits(c.child if isinstance(c, (P.Must, P.Not)) else c)) for c in node.children]
+    pos = [(isinstance(node, P.And) or kind is P.Must, h) for kind, h in clauses if kind is not P.Not]
     required = [set(h) for req, h in pos if req]
-    docs = set.intersection(*required) if required else set().union(*[h for _, h in pos])
+    if required:
+        docs = set.intersection(*required)
+    else:
+        docs = set().union(*[h for _, h in pos]) if pos else set(langs)
     docs -= set().union(*[h for kind, h in clauses if kind is P.Not])
     exp = {}
     for d in docs:
         score = 0.0
-        for _, hits in pos:
-            score += hits.get(d, 0.0)
+        for _, h in pos:
+            score += h.get(d, 0.0)
         exp[d] = score
-    assert dict(_ids(qp.plan(node))) == exp
+    got = dict(_ids(qp.plan(node)))
+    assert got.keys() == exp.keys()
+    for d, s in exp.items():
+        assert abs(got[d] - s) <= 1e-9 * max(1.0, s), (d, got[d], s)
 
 
 def test_qs_count(planner, corpus):
