@@ -1,10 +1,15 @@
-"""Hot-bucket capping with OBSERVABLE drops.
+"""Banded candidate pairs and hot-bucket capping with OBSERVABLE drops.
 
-Every banded/bucketed pair generator in this engine bounds its
-quadratic term by dropping buckets larger than `max_bucket` (a
-degenerate bucket of near-identical content at 10^9 rows would
-otherwise explode to ~10^15 candidate pairs). A silent drop is
-wrong-by-omission at 100 TB — the hottest buckets are exactly the
+`banded_pairs` is the one pair generator of every near-dup family
+(minhash LSH, simhash Hamming bands, banded and single-bucket
+embedding sign buckets): one band explode, one hot-bucket cap, one
+keyed self-join. Callers only supply the per-band keys and verify the
+pairs it returns.
+
+It bounds the quadratic term by dropping buckets larger than
+`max_bucket` (a degenerate bucket of near-identical content at 10^9
+rows would otherwise explode to ~10^15 candidate pairs). A silent drop
+is wrong-by-omission at 100 TB — the hottest buckets are exactly the
 most-duplicated documents a dedup run exists to find — so the cap is
 centralized here with an optional `DropCounter` that reports exactly
 what was dropped.
@@ -17,8 +22,8 @@ throws on a schema-less row), and even with AQE off the doubly-
 referenced subtree can report metrics from the wrong traversal. The
 counter instead holds a tiny one-row aggregate DataFrame over the SAME
 sized frame the cap filtered; reading it is a second, explicitly
-lazy pass (operators that persist their banded frame — e.g.
-minhash_lsh_candidates — serve it from cache).
+lazy pass (an operator that persists the frame it bands — e.g.
+minhash_lsh_candidates, its signatures — serves that pass from cache).
 
 Usage:
     ctr = DropCounter()
@@ -30,7 +35,7 @@ Usage:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -99,6 +104,54 @@ def cap_buckets(
     if drop_obs is not None:
         drop_obs._attach(sized, max_bucket, size_col)
     return sized.where(F.col(size_col) <= max_bucket)
+
+
+def banded_pairs(
+    rows: DataFrame,
+    id_col: str,
+    keys: list[Column],
+    max_bucket: int | None,
+    drop_obs: DropCounter | None = None,
+) -> DataFrame:
+    """Candidate pairs of rows that share the key of any band.
+
+    `keys` holds one Column per band, evaluated over `rows`. Every band
+    is built in ONE projection, posexplode(array(*keys)) AS (band, key),
+    so the source is scanned and encoded once however many bands there
+    are (a per-band union re-runs the whole lineage per band). Buckets
+    of (band, key) above `max_bucket` are dropped by cap_buckets unless
+    it is None. The self-join on (band, key) is a sort-merge join: the
+    cap window already hash-partitions and sorts by (band, key), and
+    over an uncached source both join sides reuse that one exchange (a
+    broadcast side would rebuild the frame per side). Over a persisted
+    `rows`, AQE reuses no exchange between the two sides, so each side
+    re-reads the cache and shuffles it once.
+
+    Returns id_a < id_b plus each other column of `rows` once per side,
+    suffixed _a and _b; columns the caller never reads are pruned
+    before the join, so `rows` may carry the columns the keys are
+    computed from. A pair appears once for each band it shares. Nothing
+    is persisted here."""
+    other = [c for c in rows.columns if c != id_col]
+    banded = rows.select("*", F.posexplode(F.array(*keys)).alias("band", "key"))
+    if max_bucket is not None:
+        banded = cap_buckets(banded, ["band", "key"], max_bucket, drop_obs)
+
+    def side(s: str) -> DataFrame:
+        return banded.select(
+            "band",
+            "key",
+            F.col(id_col).alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in other],
+        )
+
+    return (
+        side("a")
+        .hint("merge")
+        .join(side("b"), ["band", "key"])
+        .where(F.col("id_a") < F.col("id_b"))
+        .drop("band", "key")
+    )
 
 
 def drop_stats(obs: DropCounter) -> dict[str, int]:

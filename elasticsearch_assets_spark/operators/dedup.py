@@ -10,10 +10,10 @@ Scale notes (these run over 10^12 docs):
   big shuffle — LSH banding exists precisely to avoid the all-pairs
   join, and `jaccard_pairs` (exact) is only for candidate verification
   or small inputs.
-- minhash: k hash functions as k column expressions (no UDF); band
-  buckets via groupBy(band_signature) keeps the join keyed, and a
-  band-bucket size cap (`max_bucket`) defuses degenerate buckets
-  (all-identical docs) — the hot-key defense.
+- minhash/simhash: band keys feed caps.banded_pairs — one band
+  explode and one self-join keyed on (band, key), and a band-bucket
+  size cap (`max_bucket`) defuses degenerate buckets (all-identical
+  docs) — the hot-key defense.
 """
 
 from __future__ import annotations
@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from elasticsearch_assets_spark.operators.caps import banded_pairs
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -75,9 +76,8 @@ def jaccard_pairs(
     at scale, run minhash_lsh_candidates first and this only on the
     candidate pairs.
     """
-    # persist: consumed three times below (sizes + both join sides)
+    # persist: consumed three times (both join sides + _jaccard_of's sizes)
     sh = shingles(df, text_col, id_col, n).persist()
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
     b = sh.select(F.col(id_col).alias("id_b"), "shingle")
     inter = (
@@ -86,6 +86,16 @@ def jaccard_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("inter"))
     )
+    return _jaccard_of(inter, sh, id_col, threshold)
+
+
+def _jaccard_of(
+    inter: DataFrame, sh: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, jaccard) ≥ threshold from the shared-shingle counts
+    `inter` (id_a, id_b, inter) and the (<id>, shingle) rows they were
+    counted over: jaccard = inter / (|a| + |b| - inter)."""
+    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
     out = (
         inter.join(sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a")), "id_a")
         .join(sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b")), "id_b")
@@ -115,7 +125,7 @@ def minhash_signatures(
     #    window build (slice-in-lambda) ran interpreted with the whole
     #    pipeline duplicated into a pushed-down Filter, on a 1-core
     #    few-file scan: COLD >400 s at the 100x probe (warm bench reps
-    #    hid it behind the band-frame persist below).
+    #    hid it behind minhash_lsh_candidates' persist).
     # 2. r7 first pass: zero-shuffle array folds (array_min over
     #    transform(md5) per-doc arrays). Won at sf0.1 (0.69→0.45 s)
     #    but the lambda transforms evaluate INTERPRETED — at the 100x
@@ -169,66 +179,17 @@ def minhash_lsh_candidates(
     if k % bands:
         raise ValueError(f"k={k} must be a multiple of bands={bands}")
     rows = k // bands
-    sig = minhash_signatures(df, text_col, id_col, n, k)
-    # one pass: band signatures as an array column + posexplode (a
-    # per-band union would recompute the shingle+signature lineage
-    # `bands` times — 4x the work for the default config)
-    band_arr = F.array(
-        *[
-            F.concat_ws(
-                "|", *[F.col(f"mh_{bnd * rows + j}") for j in range(rows)]
-            )
-            for bnd in range(bands)
-        ]
-    )
-    allb = sig.select(
-        F.col(id_col), F.posexplode(band_arr).alias("band", "band_sig")
-    )
-    # persist: the self-join below would otherwise recompute the whole
-    # shingle->signature lineage for both sides (evicted LRU; small —
-    # k short hashes per doc)
-    allb = allb.persist()
-    # bucket-size cap via window count: the hot-bucket defense, no join
-    from elasticsearch_assets_spark.operators.caps import cap_buckets
-
-    sized = cap_buckets(allb, ["band", "band_sig"], max_bucket, drop_obs)
-    # Pair generation from GROUPED buckets (r7): the window in
-    # cap_buckets leaves `sized` hash-partitioned by (band, band_sig),
-    # so the collect_list groupBy adds NO exchange — and generating
-    # i<j combinations from the sorted id array directly replaces the
-    # former self-join (a broadcast build per invocation) and its
-    # id_a<id_b filter over the full cross-product (half the
-    # intermediate rows never exist). Array size is bounded by
-    # max_bucket, so the per-bucket pair array stays small. Measured
-    # 0.48s→0.39s on the sf0.1 pipeline with identical pair sets.
-    grp = sized.groupBy("band", "band_sig").agg(
-        F.sort_array(F.collect_list(id_col)).alias("_ids")
-    )
-    ids = F.col("_ids")
-    sz = F.size(ids)
-
-    def _tail(i):
-        return lambda b: F.struct(
-            F.element_at(ids, i + 1).alias("id_a"), b.alias("id_b")
-        )
-
-    pairs = grp.where(sz >= 2).select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(0), sz - 2),
-                    lambda i: F.transform(
-                        F.slice(ids, i + 2, sz - i - 1), _tail(i)
-                    ),
-                )
-            )
-        ).alias("p")
-    )
-    return (
-        pairs.select(
-            F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b")
-        ).distinct()
-    )
+    # persist: a DropCounter's stats pass bands these signatures again,
+    # which would otherwise recompute the whole shingle->signature
+    # lineage (evicted LRU; small — k short hashes per doc). The mh_*
+    # columns ride into banded_pairs only to build the band keys.
+    sig = minhash_signatures(df, text_col, id_col, n, k).persist()
+    band_sigs = [
+        F.concat_ws("|", *[F.col(f"mh_{bnd * rows + j}") for j in range(rows)])
+        for bnd in range(bands)
+    ]
+    pairs = banded_pairs(sig, id_col, band_sigs, max_bucket, drop_obs)
+    return pairs.select("id_a", "id_b").distinct()
 
 
 def jaccard_pairs_verified(
@@ -254,7 +215,6 @@ def jaccard_pairs_verified(
         df, text_col, id_col, n, k, bands, max_bucket, drop_obs
     )
     sh = shingles(df, text_col, id_col, n).persist()
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
     b = sh.select(F.col(id_col).alias("id_b"), "shingle")
     # PAIR-FIRST verification: expand each candidate pair by id_a's
@@ -271,16 +231,7 @@ def jaccard_pairs_verified(
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("inter"))
     )
-    out = (
-        inter.join(sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b")), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-    return out.select("id_a", "id_b", "jaccard")
+    return _jaccard_of(inter, sh, id_col, threshold)
 
 
 def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 16) -> DataFrame:
@@ -339,54 +290,46 @@ def simhash_near_dups(
     s = simhash(df, text_col, id_col, bits)
     n_bands = max_hamming + 1
     w = bits // n_bands
-    per = []
-    for bnd in range(n_bands):
-        start = bnd * w + 1
-        width = w if bnd < n_bands - 1 else bits - (n_bands - 1) * w
-        per.append(
-            s.select(
-                F.col(id_col),
-                "simhash",
-                F.lit(bnd).alias("band"),
-                F.substring("simhash", start, width).alias("band_bits"),
-            )
+    band_bits = [
+        F.substring(
+            "simhash",
+            bnd * w + 1,
+            w if bnd < n_bands - 1 else bits - (n_bands - 1) * w,
         )
-    allb = per[0]
-    for p in per[1:]:
-        allb = allb.unionByName(p)
-    # hot-bucket cap via window count — no join, one extra shuffle key
-    from elasticsearch_assets_spark.operators.caps import cap_buckets
-
-    allb = cap_buckets(allb, ["band", "band_bits"], max_bucket, drop_obs)
-    # r7: (a) the fingerprint crosses the join as a LONG (bit-parsed
-    # once per banded row, 8 B) instead of a 16-char bitstring, and
-    # hamming = bit_count(a XOR b) — the former split + zip_with
-    # allocated two 16-element string arrays PER CANDIDATE PAIR;
-    # (b) the hamming filter runs BEFORE the distinct, so the distinct
-    # shuffles only actual near-dup pairs (a pair can reach it from at
-    # most n_bands bands) instead of every banded candidate with two
-    # fingerprint strings in tow — at sf0.1 that distinct was shuffling
-    # the full multi-million-row candidate set: 6.5 s -> ~1 s.
-    allb = allb.withColumn(
-        "sh_long", F.conv("simhash", 2, 10).cast("long")
+        for bnd in range(n_bands)
+    ]
+    # The fingerprint crosses the join as a LONG (bit-parsed once per
+    # doc, 8 B) and hamming = bit_count(a XOR b): a split + zip_with
+    # over the bitstrings allocated two 16-element string arrays PER
+    # CANDIDATE PAIR. The hamming filter runs BEFORE the distinct, so
+    # the distinct shuffles only actual near-dup pairs (a pair can
+    # reach it from at most n_bands bands), not every banded candidate.
+    rows = s.select(
+        id_col, "simhash", F.conv("simhash", 2, 10).cast("long").alias("h")
     )
-    l = allb.select(
-        "band", "band_bits",
-        F.col(id_col).alias("id_a"), F.col("sh_long").alias("ha"),
-    )
-    r = allb.select(
-        "band", "band_bits",
-        F.col(id_col).alias("id_b"), F.col("sh_long").alias("hb"),
-    )
-    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
+    pairs = banded_pairs(rows, id_col, band_bits, max_bucket, drop_obs)
+    ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
     return (
-        l.join(r, ["band", "band_bits"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", ham)
+        pairs.withColumn("hamming", ham)
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
         .distinct()
     )
+
+
+def _free_checkpoint(df: DataFrame) -> None:
+    """Release a localCheckpoint's block-manager storage now.
+
+    It is otherwise only reclaimed by the ContextCleaner after JVM GC
+    notices the DataFrame is unreachable — on a long-lived session the
+    per-round checkpoints of the connected-components loops pile up
+    linearly. Called once a round's convergence compare is done (the
+    analyzed plan of a checkpointed frame is a LogicalRDD; best-effort —
+    a miss just defers to the cleaner)."""
+    try:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception:
+        pass
 
 
 def connected_components(
@@ -442,19 +385,6 @@ def connected_components(
     # a flat scan. (On a cluster prefer sc.setCheckpointDir +
     # .checkpoint() for executor-loss resilience; localCheckpoint is the
     # single-process form.)
-    def _free_checkpoint(df: DataFrame) -> None:
-        # A localCheckpoint's block-manager storage is only reclaimed by
-        # the ContextCleaner after JVM GC notices the DataFrame is
-        # unreachable — on a long-lived session the per-round
-        # checkpoints pile up linearly. Release the backing RDD
-        # deterministically once the round's convergence compare is
-        # done (the analyzed plan of a checkpointed frame is a
-        # LogicalRDD; best-effort — a miss just defers to the cleaner).
-        try:
-            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass
-
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
@@ -535,12 +465,6 @@ def _connected_components_star(
         .distinct()
         .persist()
     )
-
-    def _free_checkpoint(df: DataFrame) -> None:
-        try:
-            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass
 
     # undirected edge list, kept as (u, v) with u != v
     edges = (

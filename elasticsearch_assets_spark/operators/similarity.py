@@ -6,8 +6,9 @@
   path: only the query's bucket (+ optional neighbor buckets by probe)
   is scanned. Hyperplanes are fixed coordinate subsets so the bucketing
   is reproducible in SQL for the oracle.
-- near_dup_pairs: cosine ≥ threshold pairs within sign buckets (the
-  default); the exact all-pairs crossJoin is gated behind
+- near_dup_pairs / near_dup_pairs_banded: cosine ≥ threshold pairs
+  within one sign bucket or any of several sign bands, generated by
+  caps.banded_pairs; the exact all-pairs crossJoin is gated behind
   all_pairs=True for small-input verification only.
 
 All dot products run as JVM array expressions (zip_with + aggregate) in
@@ -19,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from elasticsearch_assets_spark.operators.caps import banded_pairs
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -438,33 +441,22 @@ def near_dup_pairs_banded(
     quadratic term under degenerate skew."""
     if band_dims is None:
         band_dims = [[0, 1, 2, 3, 4, 5, 6, 7], [8, 9, 10, 11, 12, 13, 14, 15]]
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    bands = None
-    for i, dims in enumerate(band_dims):
-        part = a.select(
-            "id_a",
-            "va",
-            F.lit(i).alias("_band"),
-            sign_bucket(F.col("va"), dims).alias("_bk"),
-        )
-        bands = part if bands is None else bands.unionByName(part)
-    if max_bucket is not None:
-        from elasticsearch_assets_spark.operators.caps import cap_buckets
+    keys = [sign_bucket(F.col(vec_col), dims) for dims in band_dims]
+    # The cosine is filtered BEFORE the distinct: it is a function of
+    # the pair, so the distinct shuffles (id_a, id_b, cosine) per
+    # near-dup pair instead of two vectors per banded candidate.
+    pairs = banded_pairs(
+        emb.select(id_col, vec_col), id_col, keys, max_bucket, drop_obs
+    )
+    return _cosine_pairs(pairs, vec_col, threshold).distinct()
 
-        bands = cap_buckets(bands, ["_band", "_bk"], max_bucket, drop_obs).drop(
-            "_bs"
-        )
-    other = bands.select(
-        F.col("id_a").alias("id_b"), F.col("va").alias("vb"), "_band", "_bk"
-    )
-    cand = (
-        bands.join(other, ["_band", "_bk"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "va", "vb")
-        .distinct()
-    )
+
+def _cosine_pairs(pairs: DataFrame, vec_col: str, threshold: float) -> DataFrame:
+    """(id_a, id_b, cosine) ≥ threshold over pairs carrying both sides'
+    vectors as <vec_col>_a / <vec_col>_b."""
+    cos = cosine_col(F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b"))
     return (
-        cand.withColumn("cosine", cosine_col(F.col("va"), F.col("vb")))
+        pairs.withColumn("cosine", cos)
         .where(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
@@ -500,26 +492,16 @@ def near_dup_pairs(
     and near_dup_pairs_banded (OR-of-bands) recovers recall."""
     if all_pairs and bucket_dims is not None:
         raise ValueError("all_pairs=True is the exact path; drop bucket_dims")
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    if not all_pairs:
+    if all_pairs:
+        # explicit small-input exact path (recall oracles, tests)
+        a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias(f"{vec_col}_a"))
+        b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias(f"{vec_col}_b"))
+        pairs = a.crossJoin(b).where(F.col("id_a") < F.col("id_b"))
+    else:
         if bucket_dims is None:
             bucket_dims = DEFAULT_BUCKET_DIMS
-        a = a.withColumn("_bk", sign_bucket(F.col("va"), bucket_dims))
-        if max_bucket is not None:
-            from elasticsearch_assets_spark.operators.caps import cap_buckets
-
-            a = cap_buckets(a, ["_bk"], max_bucket, drop_obs).drop("_bs")
-        b = a.select(
-            F.col("id_a").alias("id_b"), F.col("va").alias("vb"), "_bk"
+        key = sign_bucket(F.col(vec_col), bucket_dims)
+        pairs = banded_pairs(
+            emb.select(id_col, vec_col), id_col, [key], max_bucket, drop_obs
         )
-        joined = a.join(b, "_bk")
-    else:
-        # explicit small-input exact path (recall oracles, tests)
-        b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-        joined = a.crossJoin(b)
-    return (
-        joined.where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", cosine_col(F.col("va"), F.col("vb")))
-        .where(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
+    return _cosine_pairs(pairs, vec_col, threshold)

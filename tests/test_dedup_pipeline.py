@@ -212,3 +212,131 @@ def test_dedup_apply_keeps_canonical_and_unpaired(spark):
     kept = {r["doc_id"] for r in dedup.dedup_apply(docs, clusters).collect()}
     # component {1,2,5} -> keep 1; docs 0,3,4,6 unpaired -> keep
     assert kept == {0, 1, 3, 4, 6}
+
+
+def _capped_buckets(keyed: dict, max_bucket: int):
+    """{(band, key): [ids]} -> (kept buckets, DropCounter-style stats)."""
+    dropped = [ids for ids in keyed.values() if len(ids) > max_bucket]
+    kept = [sorted(ids) for ids in keyed.values() if len(ids) <= max_bucket]
+    stats = {
+        "dropped_rows": sum(len(ids) for ids in dropped),
+        "dropped_buckets": len(dropped),
+        "largest_dropped_bucket": max((len(ids) for ids in dropped), default=0),
+    }
+    return kept, stats
+
+
+def _bucket_pairs(kept):
+    """Every id_a < id_b pair sharing a kept bucket."""
+    from itertools import combinations
+
+    return {p for ids in kept for p in combinations(ids, 2)}
+
+
+def test_banded_builders_match_python_reference(spark, dup_corpus):
+    """Each near-dup builder's exact pair set and drop counts against a
+    plain-Python reference that bands, caps and enumerates pairs on its
+    own from the builder's per-doc inputs (simhash fingerprints, minhash
+    signatures, raw vectors). Twelve identical docs and ten near-
+    identical vectors make one bucket per band above max_bucket."""
+    import numpy as np
+
+    from elasticsearch_assets_spark.operators import similarity
+    from elasticsearch_assets_spark.operators.caps import drop_observation
+
+    same = spark.createDataFrame(
+        [(i, "one boilerplate header copied verbatim into every doc") for i in range(12)],
+        "doc_id long, content string",
+    )
+    docs = dup_corpus.select("doc_id", "content").unionByName(same)
+
+    # simhash: 3 bands of 5, 5 and 6 bits, Hamming <= 2
+    obs = drop_observation()
+    got = {
+        (r["id_a"], r["id_b"], r["hamming"])
+        for r in dedup.simhash_near_dups(
+            docs, "content", "doc_id", bits=16, max_hamming=2, max_bucket=10,
+            drop_obs=obs,
+        ).collect()
+    }
+    fp = {r["doc_id"]: r["simhash"] for r in dedup.simhash(docs, "content", "doc_id").collect()}
+    keyed = {}
+    for d, h in fp.items():
+        for band, (lo, hi) in enumerate([(0, 5), (5, 10), (10, 16)]):
+            keyed.setdefault((band, h[lo:hi]), []).append(d)
+    kept, stats = _capped_buckets(keyed, 10)
+    want = set()
+    for a, b in _bucket_pairs(kept):
+        ham = sum(x != y for x, y in zip(fp[a], fp[b]))
+        if ham <= 2:
+            want.add((a, b, ham))
+    assert stats["largest_dropped_bucket"] >= 12 and want
+    assert got == want
+    assert obs.stats() == stats
+
+    # minhash: k=8 in 4 bands of 2 slices
+    obs = drop_observation()
+    got = {
+        (r["id_a"], r["id_b"])
+        for r in dedup.minhash_lsh_candidates(
+            docs, "content", "doc_id", k=8, bands=4, max_bucket=10, drop_obs=obs
+        ).collect()
+    }
+    keyed = {}
+    for r in dedup.minhash_signatures(docs, "content", "doc_id", k=8).collect():
+        for band in range(4):
+            key = (r[f"mh_{2 * band}"], r[f"mh_{2 * band + 1}"])
+            keyed.setdefault((band, key), []).append(r["doc_id"])
+    kept, stats = _capped_buckets(keyed, 10)
+    assert stats == {"dropped_rows": 48, "dropped_buckets": 4, "largest_dropped_bucket": 12}
+    assert got == _bucket_pairs(kept) and got
+    assert obs.stats() == stats
+
+    # embeddings: 10 near-identical vectors, 40 random ones and a
+    # perturbed copy of each of the first 12 random ones
+    rng = np.random.default_rng(3)
+    base = rng.normal(size=(40, 16))
+    hot = np.abs(rng.normal(size=16)) + 1.0
+    vecs = [hot + 1e-3 * i for i in range(10)]
+    vecs += list(base) + [v + 0.05 * rng.normal(size=16) for v in base[:12]]
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+    signs = ["".join("1" if x >= 0 else "0" for x in v) for v in vecs]
+
+    def cosine(a, b):
+        return float(vecs[a] @ vecs[b] / (np.linalg.norm(vecs[a]) * np.linalg.norm(vecs[b])))
+
+    threshold = 0.9
+    for name, bands in (
+        ("near_dup_pairs", [list(range(8))]),
+        ("near_dup_pairs_banded", [list(range(8)), list(range(8, 16))]),
+    ):
+        keyed = {}
+        for i, s in enumerate(signs):
+            for band, dims in enumerate(bands):
+                keyed.setdefault((band, "".join(s[d] for d in dims)), []).append(i)
+        kept, stats = _capped_buckets(keyed, 6)
+        want = {
+            p: cosine(*p) for p in _bucket_pairs(kept) if cosine(*p) >= threshold
+        }
+        # no pair sits within rounding of the threshold
+        assert all(abs(cosine(*p) - threshold) > 1e-9 for p in _bucket_pairs(kept))
+        assert stats["largest_dropped_bucket"] >= 10 and want
+        obs = drop_observation()
+        if name == "near_dup_pairs":
+            out = similarity.near_dup_pairs(
+                emb, threshold, bucket_dims=bands[0], max_bucket=6, drop_obs=obs
+            )
+        else:
+            out = similarity.near_dup_pairs_banded(
+                emb, threshold, band_dims=bands, max_bucket=6, drop_obs=obs
+            )
+        rows = out.collect()
+        assert len(rows) == len(want), name
+        got = {(r["id_a"], r["id_b"]): r["cosine"] for r in rows}
+        assert got.keys() == want.keys(), name
+        for p, c in want.items():
+            assert got[p] == pytest.approx(c, rel=1e-12), (name, p)
+        assert obs.stats() == stats, name

@@ -40,28 +40,53 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _postings_scans(df) -> list[str]:
-    """One-line strings of the parquet scans of a `postings` table in
-    df's physical plan. The scan is found by its relation's root paths:
-    the printed plan truncates a scan's Location, so a long index path
-    would not show "postings" there."""
+def _scans_path(node, part: str) -> bool:
+    """Whether a plan node is a file scan with `part` as a component of
+    one of its relation's root paths. The printed plan truncates a
+    scan's Location, so a long path would not show `part` there."""
     from pathlib import PurePath
 
+    if node.getClass().getSimpleName() != "FileSourceScanExec":
+        return False
+    roots = node.relation().location().rootPaths()
+    return any(
+        part in PurePath(roots.apply(j).toUri().getPath()).parts
+        for j in range(roots.size())
+    )
+
+
+def _postings_scans(df) -> list[str]:
+    """One-line strings of the parquet scans of a `postings` table in
+    df's physical plan."""
     plan = df._jdf.queryExecution().executedPlan()
     if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
         plan = plan.executedPlan()
     leaves = plan.collectLeaves()
-    out = []
-    for i in range(leaves.size()):
-        node = leaves.apply(i)
-        if node.getClass().getSimpleName() != "FileSourceScanExec":
-            continue
-        roots = node.relation().location().rootPaths()
-        if any(
-            "postings" in PurePath(roots.apply(j).toUri().getPath()).parts
-            for j in range(roots.size())
-        ):
-            out.append(node.simpleString(100))
+    return [
+        leaves.apply(i).simpleString(100)
+        for i in range(leaves.size())
+        if _scans_path(leaves.apply(i), "postings")
+    ]
+
+
+def _executed_scans(df, part: str) -> int:
+    """Runs df, then counts the scans of the file `part` in its final
+    adaptive plan, descending into query stages. A reused exchange
+    serves output that already ran, so nothing under it is counted."""
+    df.collect()
+    out = 0
+    todo = [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        elif name != "ReusedExchangeExec":
+            out += _scans_path(node, part)
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
     return out
 
 
@@ -229,6 +254,33 @@ def test_near_dup_hot_bucket_cap(spark, sf_dir):
     }
     for r in capped.limit(2000).collect():
         assert bmap[r["id_a"]] not in dropped
+
+
+def test_banded_pairs_read_their_source_once(spark, sf_dir, tmp_path):
+    # caps.banded_pairs builds every band in one posexplode and both
+    # self-join sides reuse the cap window's one exchange, so a banded
+    # builder scans (and Arrow-encodes) its source once and has no
+    # per-band Union: a per-band union re-ran the band lineage (a scan
+    # per band, or a re-read of the encoder's reused shuffle) per band.
+    # The inputs are copied to a fresh path so that no frame another
+    # test persisted over the same files stands in for the scan.
+    import os
+    import shutil
+
+    from elasticsearch_assets_spark.operators import dedup, similarity
+
+    for name in ("documents.parquet", "embeddings.parquet"):
+        src = f"{sf_dir}/{name}"
+        (shutil.copytree if os.path.isdir(src) else shutil.copy)(src, tmp_path / name)
+    docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
+    emb = spark.read.parquet(str(tmp_path / "embeddings.parquet"))
+    for pairs, part in (
+        (dedup.simhash_near_dups(docs, "text", "doc_id", bits=16, max_hamming=3),
+         "documents.parquet"),
+        (similarity.near_dup_pairs_banded(emb, threshold=0.35), "embeddings.parquet"),
+    ):
+        assert _executed_scans(pairs, part) == 1, _plan(pairs)
+        assert "Union" not in _plan(pairs), _plan(pairs)
 
 
 def test_single_term_phase1_collect_is_bounded(packed_corpus):
