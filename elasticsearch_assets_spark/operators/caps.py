@@ -3,8 +3,9 @@
 `banded_pairs` is the one pair generator of every near-dup family
 (minhash LSH, simhash Hamming bands, banded and single-bucket
 embedding sign buckets): one band explode, one hot-bucket cap, one
-keyed self-join. Callers only supply the per-band keys and verify the
-pairs it returns.
+(band, key) grouping whose member lists are exploded into pairs.
+Callers only supply the per-band keys and verify the pairs it
+returns.
 
 It bounds the quadratic term by dropping buckets larger than
 `max_bucket` (a degenerate bucket of near-identical content at 10^9
@@ -37,6 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from elasticsearch_assets_spark.query.sql import ident
 
 
 class DropCounter:
@@ -120,37 +123,46 @@ def banded_pairs(
     so the source is scanned and encoded once however many bands there
     are (a per-band union re-runs the whole lineage per band). Buckets
     of (band, key) above `max_bucket` are dropped by cap_buckets unless
-    it is None. The self-join on (band, key) is a sort-merge join: the
-    cap window already hash-partitions and sorts by (band, key), and
-    over an uncached source both join sides reuse that one exchange (a
-    broadcast side would rebuild the frame per side). Over a persisted
-    `rows`, AQE reuses no exchange between the two sides, so each side
-    re-reads the cache and shuffles it once.
+    it is None. Each bucket is then collected into one member list, and
+    its pairs are the two-fold explode of that list with id_a < id_b.
+    The collect groups on the cap window's (band, key) partitioning, so
+    one exchange serves the cap and the pairs, and the lineage under it
+    runs once whether or not `rows` is cached. A keyed self-join needs
+    a reused exchange for that, and AQE reuses none over a cached
+    source: each join side re-reads the cache and banded and shuffled
+    it again (measured on minhash_lsh_candidates under
+    dedup.jaccard_pairs_verified, whose persisted shingles are
+    substituted into the signature lineage).
 
     Returns id_a < id_b plus each other column of `rows` once per side,
-    suffixed _a and _b; columns the caller never reads are pruned
-    before the join, so `rows` may carry the columns the keys are
-    computed from. A pair appears once for each band it shares. Nothing
-    is persisted here."""
-    other = [c for c in rows.columns if c != id_col]
+    suffixed _a and _b. A pair appears once for each band it shares.
+    Every column of `rows` rides in the member lists (nothing is pruned
+    inside a collect_list), so `rows` should hold only the id, the
+    columns the keys read and the columns the caller reads. Nothing is
+    persisted here."""
+    cols = [id_col, *[c for c in rows.columns if c != id_col]]
     banded = rows.select("*", F.posexplode(F.array(*keys)).alias("band", "key"))
     if max_bucket is not None:
         banded = cap_buckets(banded, ["band", "key"], max_bucket, drop_obs)
-
-    def side(s: str) -> DataFrame:
-        return banded.select(
-            "band",
-            "key",
-            F.col(id_col).alias(f"id_{s}"),
-            *[F.col(c).alias(f"{c}_{s}") for c in other],
-        )
-
+    # SQL text, not Column ops: one py4j call per DataFrame op instead
+    # of ~15 per Column op, and this builds 2 x len(cols) projections
+    # per call.
+    members = banded.groupBy("band", "key").agg(
+        F.expr(f"collect_list(struct({', '.join(map(ident, cols))}))").alias("_m")
+    )
+    i = ident(id_col)
     return (
-        side("a")
-        .hint("merge")
-        .join(side("b"), ["band", "key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .drop("band", "key")
+        members.where("size(_m) > 1")
+        .selectExpr("_m", "explode(_m) AS _a")
+        .selectExpr("_a", "explode(_m) AS _b")
+        .where(f"_a.{i} < _b.{i}")
+        .selectExpr(
+            *[
+                f"_{s}.{ident(c)} AS {ident(('id' if c == id_col else c) + '_' + s)}"
+                for s in "ab"
+                for c in cols
+            ]
+        )
     )
 
 

@@ -11,9 +11,9 @@ Scale notes (these run over 10^12 docs):
   join, and `jaccard_pairs` (exact) is only for candidate verification
   or small inputs.
 - minhash/simhash: band keys feed caps.banded_pairs — one band
-  explode and one self-join keyed on (band, key), and a band-bucket
-  size cap (`max_bucket`) defuses degenerate buckets (all-identical
-  docs) — the hot-key defense.
+  explode and one grouping on (band, key) that pairs each bucket's
+  members, and a band-bucket size cap (`max_bucket`) defuses
+  degenerate buckets (all-identical docs) — the hot-key defense.
 """
 
 from __future__ import annotations
@@ -180,9 +180,11 @@ def minhash_lsh_candidates(
         raise ValueError(f"k={k} must be a multiple of bands={bands}")
     rows = k // bands
     # persist: a DropCounter's stats pass bands these signatures again,
-    # which would otherwise recompute the whole shingle->signature
-    # lineage (evicted LRU; small — k short hashes per doc). The mh_*
-    # columns ride into banded_pairs only to build the band keys.
+    # and a later call over the same frame (a dedup loop, the near_dup
+    # benchmark) finds them cached instead of re-hashing every shingle
+    # (evicted LRU; small — k short hashes per doc). banded_pairs reads
+    # it once. The mh_* columns ride into banded_pairs to build the
+    # band keys; the pairs never read them.
     sig = minhash_signatures(df, text_col, id_col, n, k).persist()
     band_sigs = [
         F.concat_ws("|", *[F.col(f"mh_{bnd * rows + j}") for j in range(rows)])
@@ -298,8 +300,8 @@ def simhash_near_dups(
         )
         for bnd in range(n_bands)
     ]
-    # The fingerprint crosses the join as a LONG (bit-parsed once per
-    # doc, 8 B) and hamming = bit_count(a XOR b): a split + zip_with
+    # The fingerprint rides into each pair as a LONG (bit-parsed once
+    # per doc, 8 B) and hamming = bit_count(a XOR b): a split + zip_with
     # over the bitstrings allocated two 16-element string arrays PER
     # CANDIDATE PAIR. The hamming filter runs BEFORE the distinct, so
     # the distinct shuffles only actual near-dup pairs (a pair can

@@ -69,10 +69,11 @@ def _postings_scans(df) -> list[str]:
     ]
 
 
-def _executed_scans(df, part: str) -> int:
-    """Runs df, then counts the scans of the file `part` in its final
-    adaptive plan, descending into query stages. A reused exchange
-    serves output that already ran, so nothing under it is counted."""
+def _executed_scans(df, part: str | None) -> int:
+    """Runs df, then counts the scans of the file `part` (with None, the
+    in-memory scans of cached frames) in its final adaptive plan,
+    descending into query stages. A reused exchange serves output that
+    already ran, so nothing under it is counted."""
     df.collect()
     out = 0
     todo = [df._jdf.queryExecution().executedPlan()]
@@ -84,7 +85,10 @@ def _executed_scans(df, part: str) -> int:
         elif name.endswith("QueryStageExec"):
             todo.append(node.plan())
         elif name != "ReusedExchangeExec":
-            out += _scans_path(node, part)
+            if part is None:
+                out += name == "InMemoryTableScanExec"
+            else:
+                out += _scans_path(node, part)
             kids = node.children()
             todo.extend(kids.apply(i) for i in range(kids.size()))
     return out
@@ -257,13 +261,16 @@ def test_near_dup_hot_bucket_cap(spark, sf_dir):
 
 
 def test_banded_pairs_read_their_source_once(spark, sf_dir, tmp_path):
-    # caps.banded_pairs builds every band in one posexplode and both
-    # self-join sides reuse the cap window's one exchange, so a banded
-    # builder scans (and Arrow-encodes) its source once and has no
-    # per-band Union: a per-band union re-ran the band lineage (a scan
-    # per band, or a re-read of the encoder's reused shuffle) per band.
-    # The inputs are copied to a fresh path so that no frame another
-    # test persisted over the same files stands in for the scan.
+    # caps.banded_pairs builds every band in one posexplode and forms
+    # each bucket's pairs from one collected member list, so a banded
+    # builder reads its source once and has no per-band Union: a
+    # per-band union re-ran the band lineage per band, and a keyed
+    # self-join re-reads a cached source once per side (AQE reuses no
+    # exchange over a cache read). minhash_lsh_candidates persists its
+    # signatures, so its one read is one in-memory scan; the others
+    # scan their parquet once. The inputs are copied to a fresh path so
+    # that no frame another test persisted over the same files stands
+    # in for the scan.
     import os
     import shutil
 
@@ -278,6 +285,8 @@ def test_banded_pairs_read_their_source_once(spark, sf_dir, tmp_path):
         (dedup.simhash_near_dups(docs, "text", "doc_id", bits=16, max_hamming=3),
          "documents.parquet"),
         (similarity.near_dup_pairs_banded(emb, threshold=0.35), "embeddings.parquet"),
+        (similarity.near_dup_pairs(emb, threshold=0.35), "embeddings.parquet"),
+        (dedup.minhash_lsh_candidates(docs, "text", "doc_id"), None),
     ):
         assert _executed_scans(pairs, part) == 1, _plan(pairs)
         assert "Union" not in _plan(pairs), _plan(pairs)
