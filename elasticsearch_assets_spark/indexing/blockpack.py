@@ -38,11 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from elasticsearch_assets_spark.indexing import codec
-from elasticsearch_assets_spark.indexing.build import (
-    IndexTables,
-    ROW_GROUP_BYTES,
-    _bucketed_sorted,
-)
+from elasticsearch_assets_spark.indexing.build import IndexTables, _write_bucketed
 from elasticsearch_assets_spark.query.bm25 import K1, B
 
 BLOCK_SCHEMA = T.StructType(
@@ -188,67 +184,36 @@ def pack_blocks(
     block_size: int = 128,
     k1: float = K1,
     b: float = B,
-    write_layout: bool = False,
 ) -> DataFrame:
-    """postings + term dictionary → packed block rows.
-
-    write_layout=False (default): shuffle keyed (term, block) at the
-    session's shuffle parallelism — the in-memory serving shape.
-    write_layout=True: shuffle into the postings write layout of
-    build._bucketed_sorted — the SAME keying write_blocks needs, so
-    pack→write is ONE shuffle of posting rows total (the blocks
-    themselves never reshuffle; see pack_and_write_blocks).
-    Either way each (term, block) group lands in exactly one partition,
-    sorted contiguous with doc_id ascending, which is the encoder's
-    input contract.
+    """postings + term dictionary → packed block rows, shuffled keyed
+    (term, block) at the session's shuffle parallelism — the in-memory
+    serving shape. Each (term, block) group lands in exactly one
+    partition, sorted contiguous with doc_id ascending, which is the
+    encoder's input contract.
     """
-    wb = _assign_blocks(index, block_size)
-    if write_layout:
-        part = _bucketed_sorted(wb, index.n_buckets, sort_cols=("term", "block", "doc_id"))
-    else:
-        part = wb.repartition("term", "block").sortWithinPartitions(
-            "term", "block", "doc_id"
-        )
-    return part.mapInPandas(_pack_gen(index.avg_dl, k1, b), schema=BLOCK_SCHEMA)
-
-
-def write_blocks(blocks: DataFrame, path: str, n_buckets: int) -> None:
-    """Persist packed blocks partitioned by bucket.
-
-    Routed through the SAME fanout-keyed, partition-column-leading sort
-    as the postings write (indexing/build._bucketed_sorted): a plain
-    repartition(n_buckets, "bucket") suffers Poisson bucket collisions +
-    Zipf skew (BASELINE §e defect 1), and a sort that does not LEAD with
-    the partition column makes FileFormatWriter insert its own UNSTABLE
-    sort-by-bucket, scrambling the file-internal (term, block) order the
-    packed path's row-group pruning depends on (commits c720c7c/90b3095
-    pinned this for postings; same pitfall verbatim here).
-    """
-    (
-        _bucketed_sorted(blocks, n_buckets, sort_cols=("term", "block"))
-        .write.mode("overwrite")
-        .option("parquet.block.size", ROW_GROUP_BYTES)
-        .partitionBy("bucket")
-        .parquet(os.path.join(path, "blocks"))
+    part = (
+        _assign_blocks(index, block_size)
+        .repartition("term", "block")
+        .sortWithinPartitions("term", "block", "doc_id")
     )
+    return part.mapInPandas(_pack_gen(index.avg_dl, k1, b), schema=BLOCK_SCHEMA)
 
 
 def pack_and_write_blocks(
     index: IndexTables, path: str, block_size: int = 128
 ) -> None:
-    """Single-shuffle pack→write: postings shuffle ONCE into the write's
-    (bucket, sub-hash(term)) fanout layout, blocks are encoded in place,
-    then a shuffle-free in-partition sort restores the (bucket, term,
-    block) lead ordering (mapInPandas erases the ordering property from
-    the plan, so without this the writer would insert its unstable
-    sort-by-bucket)."""
-    packed = pack_blocks(index, block_size, write_layout=True)
-    (
-        packed.sortWithinPartitions("bucket", "term", "block")
-        .write.mode("overwrite")
-        .option("parquet.block.size", ROW_GROUP_BYTES)
-        .partitionBy("bucket")
-        .parquet(os.path.join(path, "blocks"))
+    """Single-shuffle pack→write: postings shuffle ONCE into the bucketed
+    write layout (build._write_bucketed), sorted (term, block, doc_id) —
+    which also meets the encoder's input contract — and blocks are
+    encoded in place, so the blocks themselves never reshuffle."""
+    _write_bucketed(
+        _assign_blocks(index, block_size),
+        os.path.join(path, "blocks"),
+        index.n_buckets,
+        sort_cols=("term", "block", "doc_id"),
+        encode=lambda rows: rows.mapInPandas(
+            _pack_gen(index.avg_dl, K1, B), schema=BLOCK_SCHEMA
+        ),
     )
 
 

@@ -39,6 +39,12 @@ Design notes for 10^12-file scale:
   runs JVM built-ins only — tokenize/posexplode/groupBy, whole-stage
   codegen; build_and_write_index (tf only) runs the analyzer and per-doc
   tf in one pyarrow mapInArrow stage (indexing/arrowtf.py).
+- One writer: every bucket-partitioned table (postings here, packed
+  blocks in indexing/blockpack.py) is written by _write_bucketed, and
+  both batch writers (write_index, build_and_write_index) end in the
+  one _write_tail: the dictionary aggregation persisted once, then
+  terms/, terms_rev/ and doc_norms/ written concurrently, then
+  stats.json.
 
 Reference parity anchors:
 - record-with-_key model: asset/src/elasticsearch_bulk docs; metadata
@@ -51,7 +57,9 @@ from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -223,7 +231,7 @@ def build_index(
     )
 
 
-# The bucketed tables shuffle into n_buckets * WRITE_FANOUT partitions
+# A bucketed table shuffles into n_buckets * WRITE_FANOUT partitions
 # keyed (bucket, sub-hash(term)) before the partitionBy(bucket) write.
 # Why not plain repartition(n_buckets, "bucket"): (a) 32 keys hashed
 # into 32 partitions collide (Poisson: ~1/e partitions empty, others
@@ -231,17 +239,17 @@ def build_index(
 # term mass, so the one hot bucket gates the whole write stage. The
 # sub-key is a DIFFERENT hash of term (seeded by a literal — pmod of
 # the same xxhash64 would be fully determined by the bucket and split
-# nothing), so each bucket splits into `fanout` term-disjoint chunks:
-# measured 1.9x faster and run-to-run stable at 5x bench scale. Each
-# chunk keeps whole terms and stays (term, doc_id)-sorted, so per-file
-# row-group pruning and sequential posting reads are unchanged; a
-# bucket directory just holds `fanout` files instead of one.
-# Default 8 (r7, was 4): with the single-shuffle arrow build the
+# nothing), so each bucket splits into WRITE_FANOUT term-disjoint
+# chunks: measured 1.9x faster and run-to-run stable at 5x bench scale.
+# Each chunk keeps whole terms and stays (term, doc_id)-sorted, so
+# per-file row-group pruning and sequential posting reads are
+# unchanged; a bucket directory just holds WRITE_FANOUT files instead
+# of one. 8 (r7, was 4): with the single-shuffle arrow build the
 # sort+write stage became straggler-bound (task_max 2.6 s vs 0.3 s
 # mean at 240k); fanout 8 halved the stage wall (3.1 -> 1.9 s,
 # task_max 1.4 s) while fanout 16 gained nothing further and doubles
-# the file count. Env-overridable for cluster layouts.
-WRITE_FANOUT = int(os.environ.get("SPARK_GRAFT_WRITE_FANOUT", "8"))
+# the file count.
+WRITE_FANOUT = 8
 
 # Parquet row-group size for index tables. Default 128MB row groups make
 # a bucket file ONE unsplittable scan unit (parquet can't split below
@@ -253,19 +261,26 @@ WRITE_FANOUT = int(os.environ.get("SPARK_GRAFT_WRITE_FANOUT", "8"))
 ROW_GROUP_BYTES = 8 * 1024 * 1024
 
 
-def _bucketed_sorted(
+def _write_bucketed(
     df: DataFrame,
+    path: str,
     n_buckets: int,
-    fanout: int = WRITE_FANOUT,
     sort_cols: tuple[str, ...] = ("term", "doc_id"),
-):
-    if fanout <= 1:
-        part = df.repartition(n_buckets, "bucket")
-    else:
-        sub = F.pmod(
-            F.xxhash64(F.lit("fanout"), F.col("term")), F.lit(fanout)
-        ).cast("int")
-        part = df.repartition(n_buckets * fanout, F.col("bucket"), sub)
+    encode: Callable[[DataFrame], DataFrame] | None = None,
+) -> None:
+    """The one writer of a bucket-partitioned table (postings, packed
+    blocks): the fanout shuffle above, a sort within each partition,
+    ROW_GROUP_BYTES row groups, partitionBy(bucket).
+
+    ``encode`` maps the sorted partitions to the rows written (block
+    packing encodes in place, so pack→write is one shuffle of posting
+    rows). Its output is re-sorted within each partition on the sort
+    columns it kept — no shuffle — because mapInPandas erases the
+    ordering from the plan."""
+    sub = F.pmod(
+        F.xxhash64(F.lit("fanout"), F.col("term")), F.lit(WRITE_FANOUT)
+    ).cast("int")
+    rows = df.repartition(n_buckets * WRITE_FANOUT, F.col("bucket"), sub)
     # bucket FIRST: FileFormatWriter requires task rows ordered by the
     # partition columns and inserts its own sort-by-(bucket) when the
     # ordering doesn't already lead with them — and that inserted sort
@@ -274,7 +289,18 @@ def _bucketed_sorted(
     # tests/test_build_paths.py::test_fanout_write_layout_invariants).
     # Leading with bucket satisfies the requirement, so the writer adds
     # nothing and files keep exact (term, doc_id) order per bucket.
-    return part.sortWithinPartitions("bucket", *sort_cols)
+    rows = rows.sortWithinPartitions("bucket", *sort_cols)
+    if encode is not None:
+        rows = encode(rows)
+        rows = rows.sortWithinPartitions(
+            "bucket", *[c for c in sort_cols if c in rows.columns]
+        )
+    (
+        rows.write.mode("overwrite")
+        .option("parquet.block.size", ROW_GROUP_BYTES)
+        .partitionBy("bucket")
+        .parquet(path)
+    )
 
 
 def terms_rev_frame(terms: DataFrame) -> DataFrame:
@@ -299,31 +325,76 @@ def write_terms_rev(terms: DataFrame, path: str) -> None:
     )
 
 
+def _write_tail(
+    path: str,
+    terms: DataFrame,
+    doc_norms: DataFrame,
+    n_buckets: int,
+    stats: tuple[int, float] | None = None,
+) -> None:
+    """What every written index ends in: terms/, terms_rev/, doc_norms/
+    and stats.json.
+
+    The dictionary aggregation is persisted ONCE and feeds both
+    dictionary writes, and the three table writes run CONCURRENTLY: the
+    serial tail is pure Amdahl loss — it costs the same wall time at
+    every cluster size and so caps scaling efficiency. ``stats`` is the
+    (n_docs, avg_dl) the caller already knows; without it both ride the
+    doc_norms WRITE as an Observation (query-metric accumulators), so
+    no job of its own computes them."""
+    from pyspark import inheritable_thread_target
+    from pyspark.sql import Observation
+
+    obs = Observation("index_stats")
+    # coalesce(32): 192 scan-split tasks each wrote a ~100 KB file —
+    # small-files on every downstream doc_norms scan (guide §6)
+    norms = doc_norms.coalesce(32)
+    if stats is None:
+        norms = norms.observe(
+            obs, F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avg_dl")
+        )
+    # a dictionary the caller persisted stays persisted
+    owned = not terms.is_cached
+    terms.persist()
+    writes = (
+        lambda: terms.coalesce(8)
+        .write.mode("overwrite")
+        .parquet(os.path.join(path, "terms")),
+        lambda: write_terms_rev(terms, path),
+        lambda: norms.write.mode("overwrite").parquet(os.path.join(path, "doc_norms")),
+    )
+    try:
+        with ThreadPoolExecutor(len(writes)) as pool:
+            # the wrapper hands each thread the caller's job group and tags
+            inherit = inheritable_thread_target(terms.sparkSession)
+            futures = [pool.submit(inherit(w)) for w in writes]
+            for fut in futures:
+                fut.result()
+    finally:
+        if owned:
+            terms.unpersist()
+    if stats is None:
+        stats = (int(obs.get["n"]), float(obs.get["avg_dl"] or 0.0))
+    with open(os.path.join(path, "stats.json"), "w") as f:
+        json.dump(
+            {"n_docs": stats[0], "avg_dl": stats[1], "n_buckets": n_buckets}, f
+        )
+
+
 def write_index(tables: IndexTables, path: str) -> None:
     """Persist the index. postings (positions column included, when
     present) partitioned by term bucket so query-time term lookups prune
     to single directories; rows sorted by (term, doc_id) within files
     for row-group min/max pruning and for sequential posting-list
-    reads."""
-    (
-        _bucketed_sorted(tables.postings, tables.n_buckets)
-        .write.mode("overwrite")
-        .option("parquet.block.size", ROW_GROUP_BYTES)
-        .partitionBy("bucket")
-        .parquet(os.path.join(path, "postings"))
+    reads. stats.json carries the handle's n_docs/avg_dl."""
+    _write_bucketed(tables.postings, os.path.join(path, "postings"), tables.n_buckets)
+    _write_tail(
+        path,
+        tables.terms,
+        tables.doc_norms,
+        tables.n_buckets,
+        (tables.n_docs, tables.avg_dl),
     )
-    tables.terms.coalesce(8).write.mode("overwrite").parquet(
-        os.path.join(path, "terms")
-    )
-    write_terms_rev(tables.terms, path)
-    tables.doc_norms.write.mode("overwrite").parquet(os.path.join(path, "doc_norms"))
-    stats = {
-        "n_docs": tables.n_docs,
-        "avg_dl": tables.avg_dl,
-        "n_buckets": tables.n_buckets,
-    }
-    with open(os.path.join(path, "stats.json"), "w") as f:
-        json.dump(stats, f)
 
 
 def build_and_write_index(
@@ -334,28 +405,24 @@ def build_and_write_index(
     doc_id_col: str | None = None,
     n_buckets: int = DEFAULT_BUCKETS,
     source_cols: tuple[str, ...] = (),
-    cache_tokens: bool = True,
 ) -> IndexTables:
     """Single-pass build-to-disk: the heavy tokenize→tf→dl pipeline runs
     ONCE, writing postings directly; terms / doc_norms / stats then
-    derive from the WRITTEN postings parquet (cheap column-pruned
-    re-reads) instead of recomputing the analyzer chain.
-
-    cache_tokens=True persists the encoded doc projection
-    (doc_id, content_sha, sources, dl, terms, tfs) DURING pass 1, so the
-    doc_norms derivation is a cache scan instead of a postings
-    groupBy(doc_id) — that groupBy gets no map-side reduction (a doc's
-    terms spread over every partition, so partial agg emits ~P copies
-    of each doc row) plus a corpus re-scan with a second sha256 pass.
-    MEMORY_AND_DISK: at cluster scale the cache spills to executor-local
-    SSD (cost ≈ one extra local write of the tokenized corpus); set
-    cache_tokens=False on memory/disk-constrained clusters to fall back
-    to the postings-derived path.
+    derive from the encoded doc projection (doc_id, content_sha,
+    sources, dl, terms, tfs) persisted DURING pass 1, so the tail
+    re-runs neither the analyzer nor a postings groupBy(doc_id) — that
+    groupBy gets no map-side reduction (a doc's terms spread over every
+    partition, so partial agg emits ~P copies of each doc row) and
+    needs a corpus re-scan with a second sha256 pass. MEMORY_AND_DISK:
+    at cluster scale the cache spills to executor-local SSD (cost ≈ one
+    extra local write of the tokenized corpus).
 
     This is the cluster-scale shape (tf may exceed cluster memory; the
     written table IS the checkpoint) and minimizes serial job count —
     the bench path. Returns the same IndexTables as read_index(path).
     """
+    from pyspark import StorageLevel
+
     spark = docs.sparkSession
     base = _keyed(docs, text_col, id_cols, doc_id_col)
 
@@ -380,21 +447,15 @@ def build_and_write_index(
     enc_in = base.select(
         "doc_id", "content_sha", *source_cols, F.col(text_col)
     )
-    enc_schema = (
-        "doc_id bigint, content_sha string"
-        + "".join(
-            f", {c} {base.schema[c].dataType.simpleString()}"
-            for c in source_cols
-        )
-        + ", dl int, terms array<string>, tfs array<int>"
+    src_fields = "".join(
+        f", {c} {base.schema[c].dataType.simpleString()}" for c in source_cols
     )
-    enc = enc_in.mapInArrow(tf_encoder(text_col), enc_schema)
-    cached_src = None
-    if cache_tokens:
-        from pyspark import StorageLevel
-
-        cached_src = enc.persist(StorageLevel.MEMORY_AND_DISK)
-        enc = cached_src
+    enc = enc_in.mapInArrow(
+        tf_encoder(text_col),
+        "doc_id bigint, content_sha string"
+        + src_fields
+        + ", dl int, terms array<string>, tfs array<int>",
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     tfd = (
         enc.select(
             "doc_id", "dl", F.explode(F.arrays_zip("terms", "tfs")).alias("_p")
@@ -411,135 +472,23 @@ def build_and_write_index(
     )
 
     # pass 1 (the only heavy one): postings straight to disk, hot
-    # buckets split by the term-sub-hash fanout (see _bucketed_sorted)
-    (
-        _bucketed_sorted(tfd, n_buckets)
-        .write.mode("overwrite")
-        .option("parquet.block.size", ROW_GROUP_BYTES)
-        .partitionBy("bucket")
-        .parquet(os.path.join(path, "postings"))
+    # buckets split by the term-sub-hash fanout (see _write_bucketed)
+    _write_bucketed(tfd, os.path.join(path, "postings"), n_buckets)
+
+    # the tail scans the cache pass 1 filled: df counts one row per
+    # (doc, term) of the exploded terms column — identical to a count
+    # of postings rows — and doc_norms is a projection of it
+    terms = (
+        enc.select(F.explode("terms").alias("term"))
+        .groupBy("term")
+        .agg(F.count("*").cast("long").alias("df"))
     )
-
-    # derivations read back only the columns they need; terms and
-    # doc_norms are independent, so their jobs run CONCURRENTLY (the
-    # serial tail is pure Amdahl loss — it costs the same wall time at
-    # every cluster size and so caps scaling efficiency). n_docs/avg_dl
-    # ride the doc_norms WRITE as an Observation (query-metric
-    # accumulators): the former separate stats job is gone entirely.
-    import threading
-
-    from pyspark.sql import Observation
-
-    postings = spark.read.schema(
-        "term string, doc_id bigint, tf int, dl int, bucket int"
-    ).parquet(os.path.join(path, "postings"))
-    obs = Observation("index_stats")
-
-    def _write_terms():
-        # ONE dictionary aggregation persisted, then the forward and
-        # reversed writes run CONCURRENTLY from the cache (serializing
-        # terms_rev behind a re-read of the written terms measured
-        # +0.3s on the 240k bench build — pure fixed overhead this
-        # nested fan-out removes). df aggregates from the encoded-doc
-        # CACHE when present (one row per (doc, term) after explode —
-        # identical counts): the cache scan prunes to the terms column
-        # and skips re-reading the just-written postings parquet (r7).
-        if cached_src is not None:
-            term_src = cached_src.select(F.explode("terms").alias("term"))
-        else:
-            term_src = postings.select("term")
-        tdf = (
-            term_src.groupBy("term")
-            .agg(F.count("*").cast("long").alias("df"))
-            .persist()
-        )
-        inner_errs: list[BaseException] = []
-
-        def _guard(fn):
-            def run():
-                try:
-                    fn()
-                except BaseException as e:  # re-raised below
-                    inner_errs.append(e)
-
-            return run
-
-        try:
-            threads2 = [
-                threading.Thread(
-                    target=_guard(
-                        lambda: tdf.coalesce(8)
-                        .write.mode("overwrite")
-                        .parquet(os.path.join(path, "terms"))
-                    )
-                ),
-                threading.Thread(
-                    target=_guard(lambda: write_terms_rev(tdf, path))
-                ),
-            ]
-            for t in threads2:
-                t.start()
-            for t in threads2:
-                t.join()
-            if inner_errs:
-                raise inner_errs[0]
-        finally:
-            tdf.unpersist()
-
-    def _write_doc_norms():
-        keep = ["doc_id", "dl", "content_sha", *source_cols]
-        if cached_src is not None:
-            # cache scan (populated by pass 1): no postings groupBy, no
-            # corpus re-scan, no second sha256 pass
-            doc_norms = cached_src.select(*keep)
-        else:
-            dl = postings.groupBy("doc_id").agg(F.first("dl").alias("dl"))
-            doc_norms = (
-                base.join(dl, "doc_id", "left").na.fill({"dl": 0}).select(*keep)
-            )
-        # coalesce(32): 192 scan-split tasks each wrote a ~100 KB file —
-        # small-files on every downstream doc_norms scan (guide §6);
-        # the cache scan feeding this is trivial so wider parallelism
-        # buys nothing
-        doc_norms.coalesce(32).observe(
-            obs, F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avg_dl")
-        ).write.mode("overwrite").parquet(os.path.join(path, "doc_norms"))
-
-    errs: list[BaseException] = []
-
-    def _run(fn):
-        try:
-            fn()
-        except BaseException as e:  # surfaced after join
-            errs.append(e)
-
-    threads = [
-        threading.Thread(target=_run, args=(f,))
-        for f in (_write_terms, _write_doc_norms)
-    ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    if errs:
-        raise errs[0]
-
-    agg = obs.get
-    stats = {
-        "n_docs": int(agg["n"]),
-        "avg_dl": float(agg["avg_dl"] or 0.0),
-        "n_buckets": n_buckets,
-    }
-    with open(os.path.join(path, "stats.json"), "w") as f:
-        json.dump(stats, f)
-    if cached_src is not None:
-        cached_src.unpersist()
+    doc_norms = enc.select("doc_id", "dl", "content_sha", *source_cols)
+    _write_tail(path, terms, doc_norms, n_buckets)
+    enc.unpersist()
     # the writer knows every table's schema — passing them to the
     # read-back skips one footer schema-inference job per table (4
     # driver-side jobs of pure fixed cost per build, r7)
-    src_fields = "".join(
-        f", {c} {base.schema[c].dataType.simpleString()}" for c in source_cols
-    )
     return read_index(
         spark,
         path,

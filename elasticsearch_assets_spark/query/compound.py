@@ -107,6 +107,9 @@ def boosting_query(
     neg = sorted(set(negative))
     if not neg:
         return top_k(scored_terms(index, pos).selectExpr("doc_id", "score"), k)
+    if not term_dfs(index, pos):
+        # no positive term in the dictionary: the negatives need no scan
+        return phrase_empty(index)
     out = (
         _scored_terms(index, {"score": pos}, {"_n_pos": pos, "_n_neg": neg})
         .where("_n_pos > 0")

@@ -308,6 +308,10 @@ def bool_query(
     must_not = sorted(set(must_not or []))
 
     all_scoring = sorted(set(must) | set(should))
+    if not term_dfs(index, all_scoring):
+        # no scoring term in the dictionary: no doc can score, so the
+        # counted terms need no scan
+        return phrase_empty(index)
     counts, gates = {}, []
     if must_not:
         # must_not rows are counted in n_matched too: the n_matched

@@ -1,8 +1,8 @@
-"""build_and_write_index path parity: the cache_tokens=True fast path
-and the postings-derived fallback must produce IDENTICAL doc_norms and
-stats — including on corpora containing null-text docs, where ANSI
-Spark 4 makes size(NULL) NULL (ADVICE r3: dl must coalesce to 0 so
-avg_dl and the per-doc dl agree between the two paths)."""
+"""The two batch writers and their one bucketed layout: write_index and
+build_and_write_index must produce IDENTICAL doc_norms and stats —
+including on corpora containing null-text docs, where ANSI Spark 4
+makes size(NULL) NULL (ADVICE r3: dl must coalesce to 0 so avg_dl and
+the per-doc dl agree between the two paths)."""
 
 from __future__ import annotations
 
@@ -24,74 +24,82 @@ def null_text_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, content string")
 
 
-def _build(docs, tmp_path, name, cache_tokens):
-    from elasticsearch_assets_spark.indexing.build import build_and_write_index
+def _write(docs, path, writer, **kw):
+    """Write docs with one of the two batch writers, kw passed to the
+    build."""
+    from elasticsearch_assets_spark.indexing.build import (
+        build_and_write_index,
+        build_index,
+        write_index,
+    )
 
-    path = os.path.join(str(tmp_path), name)
-    idx = build_and_write_index(
-        docs, path, doc_id_col="doc_id", n_buckets=4, cache_tokens=cache_tokens
-    )
-    with open(os.path.join(path, "stats.json")) as f:
-        stats = json.load(f)
-    norms = sorted(
-        (r["doc_id"], r["dl"]) for r in idx.doc_norms.select("doc_id", "dl").collect()
-    )
-    return stats, norms
+    if writer == "build_and_write_index":
+        build_and_write_index(docs, path, **kw)
+    else:
+        index = build_index(docs, keep_positions=True, **kw)
+        write_index(index, path)
+        index.unpersist()
 
 
 def test_fanout_write_layout_invariants(spark, tmp_path):
     """The skew-splitting write (bucket, reseeded-hash(term)) must keep
     the layout contracts consumers rely on: every row of a term in ONE
     bucket directory, at most WRITE_FANOUT files per bucket, each file
-    internally (term, doc_id)-sorted, and no term split across files."""
+    internally (term, doc_id)-sorted, and no term split across files.
+    Checked for both batch writers."""
     import glob
 
     import pyarrow.parquet as pq
 
     from elasticsearch_assets_spark.corpus import generate_corpus
-    from elasticsearch_assets_spark.indexing.build import (
-        WRITE_FANOUT,
-        build_and_write_index,
-    )
+    from elasticsearch_assets_spark.indexing.build import WRITE_FANOUT
 
     docs = generate_corpus(spark, 3000, seed=11)
-    path = str(tmp_path / "fan")
-    build_and_write_index(docs, path, n_buckets=4)
-    buckets = sorted(glob.glob(f"{path}/postings/bucket=*"))
-    assert len(buckets) == 4
-    term_home: dict[str, str] = {}
-    for b in buckets:
-        files = glob.glob(f"{b}/*.parquet")
-        assert 1 <= len(files) <= WRITE_FANOUT, (b, len(files))
-        for f in files:
-            t = pq.read_table(f, columns=["term", "doc_id"])
-            rows = list(zip(t["term"].to_pylist(), t["doc_id"].to_pylist()))
-            assert rows == sorted(rows), f  # within-file sort
-            for term, _ in rows:
-                home = term_home.setdefault(term, f)
-                assert home == f, (term, home, f)  # whole terms per file
+    for writer in ("build_and_write_index", "write_index"):
+        path = str(tmp_path / writer)
+        _write(docs, path, writer, n_buckets=4)
+        buckets = sorted(glob.glob(f"{path}/postings/bucket=*"))
+        assert len(buckets) == 4, (writer, buckets)
+        term_home: dict[str, str] = {}
+        for b in buckets:
+            files = glob.glob(f"{b}/*.parquet")
+            assert 1 <= len(files) <= WRITE_FANOUT, (writer, b, len(files))
+            for f in files:
+                t = pq.read_table(f, columns=["term", "doc_id"])
+                rows = list(zip(t["term"].to_pylist(), t["doc_id"].to_pylist()))
+                assert rows == sorted(rows), (writer, f)  # within-file sort
+                for term, _ in rows:
+                    home = term_home.setdefault(term, f)
+                    assert home == f, (writer, term, home, f)  # whole terms per file
 
 
-def test_cached_and_fallback_doc_norms_identical(spark, null_text_docs, tmp_path):
-    s_cached, n_cached = _build(null_text_docs, tmp_path, "cached", True)
-    s_fallback, n_fallback = _build(null_text_docs, tmp_path, "fallback", False)
-    assert n_cached == n_fallback
-    assert s_cached == s_fallback
+def test_writers_doc_norms_and_stats_identical(spark, null_text_docs, tmp_path):
+    from elasticsearch_assets_spark.indexing.build import read_index
+
+    out = {}
+    for writer in ("build_and_write_index", "write_index"):
+        path = str(tmp_path / writer)
+        _write(null_text_docs, path, writer, doc_id_col="doc_id", n_buckets=4)
+        with open(os.path.join(path, "stats.json")) as f:
+            stats = json.load(f)
+        norms = read_index(spark, path).doc_norms.select("doc_id", "dl").collect()
+        out[writer] = stats, sorted((r["doc_id"], r["dl"]) for r in norms)
+    assert out["build_and_write_index"] == out["write_index"]
+    stats, norms = out["write_index"]
     # null/empty text docs present with dl=0 (NOT dropped, NOT null)
-    dls = dict(n_cached)
+    dls = dict(norms)
     assert dls[2] == 0 and dls[4] == 0
-    assert s_cached["n_docs"] == 5
+    assert stats["n_docs"] == 5
     # avg over ALL docs incl. the zero-length ones: (3+0+3+0+1)/5
-    assert abs(s_cached["avg_dl"] - 7 / 5) < 1e-9
+    assert abs(stats["avg_dl"] - 7 / 5) < 1e-9
 
 
 def test_blocks_write_layout_invariants(spark, tmp_path):
-    """write_blocks must honor the SAME contracts as the postings write
-    (VERDICT r4 defect 1): ≤ WRITE_FANOUT files per bucket directory,
-    file-internal (term, block) order preserved (no unstable
-    writer-inserted sort), and whole terms per file. Checked for BOTH
-    the two-step pack→write_blocks path and the single-shuffle
-    pack_and_write_blocks path."""
+    """pack_and_write_blocks must honor the SAME contracts as the
+    postings write (VERDICT r4 defect 1): ≤ WRITE_FANOUT files per
+    bucket directory, file-internal (term, block) order preserved (no
+    unstable writer-inserted sort), and whole terms per file; and its
+    blocks must equal the in-memory pack_blocks rows."""
     import glob
 
     import pyarrow.parquet as pq
@@ -101,45 +109,35 @@ def test_blocks_write_layout_invariants(spark, tmp_path):
         pack_and_write_blocks,
         pack_blocks,
         read_blocks,
-        write_blocks,
     )
     from elasticsearch_assets_spark.indexing.build import WRITE_FANOUT, build_index
 
     docs = generate_corpus(spark, 2000, seed=13)
     index = build_index(docs, n_buckets=4, keep_positions=False)
 
-    paths = {}
-    p1 = str(tmp_path / "two_step")
-    write_blocks(pack_blocks(index, block_size=8), p1, n_buckets=4)
-    paths["two_step"] = p1
-    p2 = str(tmp_path / "one_shuffle")
-    pack_and_write_blocks(index, p2, block_size=8)
-    paths["one_shuffle"] = p2
+    p = str(tmp_path / "one_shuffle")
+    pack_and_write_blocks(index, p, block_size=8)
+    buckets = sorted(glob.glob(f"{p}/blocks/bucket=*"))
+    assert len(buckets) == 4, buckets
+    term_home: dict[str, str] = {}
+    for b in buckets:
+        files = glob.glob(f"{b}/*.parquet")
+        assert 1 <= len(files) <= WRITE_FANOUT, (b, len(files))
+        for f in files:
+            t = pq.read_table(f, columns=["term", "block"])
+            rows = list(zip(t["term"].to_pylist(), t["block"].to_pylist()))
+            assert rows == sorted(rows), f  # file-internal order
+            for term, _ in rows:
+                home = term_home.setdefault(term, f)
+                assert home == f, (term, home, f)  # whole terms/file
 
-    contents = {}
-    for name, p in paths.items():
-        buckets = sorted(glob.glob(f"{p}/blocks/bucket=*"))
-        assert len(buckets) == 4, (name, buckets)
-        term_home: dict[str, str] = {}
-        rows_all = []
-        for b in buckets:
-            files = glob.glob(f"{b}/*.parquet")
-            assert 1 <= len(files) <= WRITE_FANOUT, (name, b, len(files))
-            for f in files:
-                t = pq.read_table(f, columns=["term", "block"])
-                rows = list(zip(t["term"].to_pylist(), t["block"].to_pylist()))
-                assert rows == sorted(rows), (name, f)  # file-internal order
-                for term, _ in rows:
-                    home = term_home.setdefault(term, f)
-                    assert home == f, (name, term, home, f)  # whole terms/file
-            rows_all.append(b)
-        # decoded content identical between the two write paths
-        blk = read_blocks(spark, p)
-        contents[name] = sorted(
+    def content(blk):
+        return sorted(
             (r["term"], r["block"], r["n"], bytes(r["docs_vb"]))
             for r in blk.select("term", "block", "n", "docs_vb").collect()
         )
-    assert contents["two_step"] == contents["one_shuffle"]
+
+    assert content(read_blocks(spark, p)) == content(pack_blocks(index, block_size=8))
     index.unpersist()
 
 

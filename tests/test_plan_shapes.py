@@ -595,6 +595,22 @@ def test_dis_max_single_posting_scan(disk_index):
     assert len(_postings_scans(q)) == 1 and "Join" not in _plan(q), _plan(q)
 
 
+def test_no_scoring_term_plans_no_scan(disk_index):
+    # with no scoring term in the dictionary nothing can match, so the
+    # counted terms (must_not, negatives) are not scanned either
+    from elasticsearch_assets_spark.query import compound as qc
+
+    absent = "zzqxabsent"
+    assert not qx.term_dfs(disk_index, [absent, "parse"]).get(absent)
+    queries = {
+        "bool": qx.bool_query(disk_index, must=[absent], must_not=["parse"], k=5),
+        "boosting": qc.boosting_query(disk_index, [absent], ["parse"], k=5),
+    }
+    for name, q in queries.items():
+        assert _postings_scans(q) == [], (name, _plan(q))
+        assert q.count() == 0, name
+
+
 def test_small_single_file_build_plans_no_round_robin(spark, tmp_path):
     # a one-file input under the 2 MB floor of
     # arrowtf.ensure_scan_parallelism is not repartitioned by the build:
