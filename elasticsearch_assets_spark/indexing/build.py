@@ -43,8 +43,8 @@ Design notes for 10^12-file scale:
   blocks in indexing/blockpack.py) is written by _write_bucketed, and
   both batch writers (write_index, build_and_write_index) end in the
   one _write_tail: the dictionary aggregation persisted once, then
-  terms/, terms_rev/ and doc_norms/ written concurrently, then
-  stats.json.
+  terms/ followed by terms_rev/ on one thread while doc_norms/ writes
+  on another, then stats.json.
 
 Reference parity anchors:
 - record-with-_key model: asset/src/elasticsearch_bulk docs; metadata
@@ -69,6 +69,25 @@ from elasticsearch_assets_spark.functions.analyzer import analyze_col
 DEFAULT_BUCKETS = 64
 
 
+class _BuiltOnFirstRead:
+    """A DataFrame field that also takes a zero-argument builder, called
+    on the field's first read and kept."""
+
+    def __set_name__(self, owner, name):
+        self.key = "_" + name
+
+    def __get__(self, obj, owner=None):
+        if obj is None:
+            raise AttributeError(self.key)  # a dataclass field with no default
+        value = obj.__dict__[self.key]
+        if callable(value):
+            value = obj.__dict__[self.key] = value()
+        return value
+
+    def __set__(self, obj, value):
+        obj.__dict__[self.key] = value
+
+
 @dataclass
 class IndexTables:
     # term, doc_id, tf, dl, bucket — plus positions (array<int>) when the
@@ -76,8 +95,12 @@ class IndexTables:
     # that column; every scoring scan prunes it, so parquet never reads
     # the arrays (Lucene's separate prox file, as one columnar table).
     postings: DataFrame
-    terms: DataFrame  # term, df
-    doc_norms: DataFrame  # doc_id, dl, content_sha + source cols
+    # term, df and doc_id, dl (+ content_sha and source cols). A served
+    # segment index passes builders: only multi-term expansion (wildcard,
+    # fuzzy) reads the whole dictionary, and only the planner's filters
+    # and negations read doc_norms, so a reopen builds neither frame
+    terms: DataFrame = _BuiltOnFirstRead()
+    doc_norms: DataFrame = _BuiltOnFirstRead()
     n_docs: int
     avg_dl: float
     n_buckets: int = DEFAULT_BUCKETS
@@ -94,6 +117,10 @@ class IndexTables:
     # lazily by query.exec.term_dfs with only the QUERIED terms
     # (bounded there), so it never materializes the full dictionary.
     _df_cache: dict = field(default_factory=dict)
+    # driver-side df source (a served segment index: the sum of its
+    # segments' dictionaries): terms -> {term: df} for the present ones.
+    # With it, term_dfs runs no Spark job and leaves _df_cache empty.
+    df_lookup: Callable[[list[str]], dict[str, int]] | None = None
 
     def unpersist(self) -> None:
         for df in self._cached:
@@ -336,9 +363,12 @@ def _write_tail(
     and stats.json.
 
     The dictionary aggregation is persisted ONCE and feeds both
-    dictionary writes, and the three table writes run CONCURRENTLY: the
-    serial tail is pure Amdahl loss — it costs the same wall time at
-    every cluster size and so caps scaling efficiency. ``stats`` is the
+    dictionary writes, chained on one thread so the first materializes
+    the cache and the second reads it (started together, each would
+    compute the aggregation in a job of its own); doc_norms/ writes
+    CONCURRENTLY with them: the serial tail is pure Amdahl loss — it
+    costs the same wall time at every cluster size and so caps scaling
+    efficiency. ``stats`` is the
     (n_docs, avg_dl) the caller already knows; without it both ride the
     doc_norms WRITE as an Observation (query-metric accumulators), so
     no job of its own computes them."""
@@ -356,11 +386,13 @@ def _write_tail(
     # a dictionary the caller persisted stays persisted
     owned = not terms.is_cached
     terms.persist()
+
+    def dictionaries():
+        terms.coalesce(8).write.mode("overwrite").parquet(os.path.join(path, "terms"))
+        write_terms_rev(terms, path)
+
     writes = (
-        lambda: terms.coalesce(8)
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "terms")),
-        lambda: write_terms_rev(terms, path),
+        dictionaries,
         lambda: norms.write.mode("overwrite").parquet(os.path.join(path, "doc_norms")),
     )
     try:

@@ -12,12 +12,16 @@ commit is a list of actions:
 - ``meta``: ``keep_positions`` and ``n_buckets``, recorded with the
   index's first segment
 - ``add``: one segment — ``id``, ``run_id``, ``input_fingerprint``,
-  ``rows``, ``bytes``, ``duration_ms`` and ``sum_dl`` (Σ dl over its
-  docs). An add for an id that is already live replaces it, which is
-  how refresh_index rebuilds a drifted part
+  ``rows``, ``bytes``, ``duration_ms``, ``sum_dl`` (Σ dl over its
+  docs) and ``dict``, the segment's term dictionary: a term-sorted
+  ``(term, df)`` parquet file ``dicts/<version>-<id>.parquet`` that the
+  driver counts from the segment's written ``term`` column (pyarrow, no
+  Spark job) before the add commits. An add for an id that is already
+  live replaces it, which is how refresh_index rebuilds a drifted part
 - ``remove``: the segment ids a compaction merged (same commit as the
   merged segment's add)
-- ``delete``: a tombstone parquet dir and its ``applies_below`` scope
+- ``delete``: a tombstone parquet dir, its ``applies_below`` scope and
+  ``rows``, the batch's distinct doc id count
 - ``retire``: the tombstone dirs a full purging merge applied
 
 Commit rule: data files land first; the commit is then an exclusive
@@ -27,16 +31,24 @@ readers, overwritten by a retry (the one exception is refresh_index,
 see there). Readers replay the log on the driver
 into a snapshot (live segments, every id ever used, live tombstone
 dirs, meta), once per public call, so knowing what is committed costs
-no Spark job; serve_resumable_index takes n_docs and avg_dl straight
-from the live adds. gc_replaced_segments deletes merged-away segment
-data and never rewrites the log. Single writer: a second writer that
-races for a version gets an error, never a lost commit.
+no Spark job. gc_replaced_segments deletes merged-away segment data
+and dictionaries and never rewrites the log. Single writer: a second
+writer that races for a version gets an error, never a lost commit.
+
+Serving (serve_resumable_index) plans a query with no Spark job, the
+way a Lucene reader reopens after a refresh: n_docs and avg_dl come
+from the live adds; df is the sum of the live segments' dictionaries,
+each loaded on the driver once per process (dictionary files are
+immutable), so a reopen loads only the segments committed since; and
+when the live tombstones hold at most _TOMB_LITERAL_MAX rows (known
+from the delete actions alone) the dead rows drop through one literal
+predicate instead of a read + groupBy + anti-join per query.
 
 Segment data is ``<index>/postings/part=<id>``: one parquet dir per
 segment, rows (term, doc_id, tf, dl, bucket, orig_part) plus a
 ``positions`` column exactly when the meta says ``keep_positions``.
 There is no second per-segment stream: writes, compaction, GC and the
-tombstone anti-join each handle this one table.
+tombstone filter each handle this one table.
 
 Segments are input partitions: pmod(xxhash64(doc_id), n_parts) for
 batch builds (stable across runs because doc_id is content-derived,
@@ -55,15 +67,21 @@ import json
 import os
 import re
 import shutil
+import threading
 import time
+from collections import OrderedDict
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from elasticsearch_assets_spark.functions.analyzer import analyze_col
 from elasticsearch_assets_spark.indexing.build import posting_rows, with_doc_id
+from elasticsearch_assets_spark.query import sql as Q
 from elasticsearch_assets_spark.sources.state_storage import write_exclusive
 
 MANIFEST_SCHEMA = (
@@ -87,6 +105,7 @@ def _segment_schema(keep_positions: bool) -> str:
 
 
 _DELETES_SCHEMA = "doc_id bigint, applies_below bigint"
+_DICT_SCHEMA = "term string, df bigint"
 
 _FP_MOD = 1_000_003
 _NO_BOUND = (1 << 63) - 1  # tombstone applies to every segment
@@ -111,13 +130,15 @@ class _Snapshot:
     """The replayed log. ``segments`` holds every id ever added (its
     current add) — the resume skip-set and the id-reuse guard, since a
     merged-away id must never be rebuilt or reissued; ``live`` subtracts
-    the compaction-removed ids."""
+    the compaction-removed ids. ``superseded`` lists the dictionaries of
+    adds that a later add for the same id replaced."""
 
     version: int = -1
     segments: dict = field(default_factory=dict)
     removed: set = field(default_factory=set)
     tombs: list = field(default_factory=list)
     meta: dict = field(default_factory=dict)
+    superseded: list = field(default_factory=list)
 
     def live(self) -> dict:
         return {i: a for i, a in self.segments.items() if i not in self.removed}
@@ -129,6 +150,8 @@ class _Snapshot:
             if kind == "meta":
                 self.meta = body
             elif kind == "add":
+                if body["id"] in self.segments:
+                    self.superseded.append(self.segments[body["id"]]["dict"])
                 self.segments[body["id"]] = dict(body, replaces=merged or None)
             elif kind == "remove":
                 self.removed.update(body)
@@ -274,16 +297,43 @@ def _fresh_fingerprints(base: DataFrame) -> dict[int, str]:
     }
 
 
+def _read_parquet(path: str, columns: list[str] | None = None) -> pa.Table:
+    """A parquet file, or a Spark-written dir of them, read on the
+    driver file by file: pq.read_table would import pyarrow.dataset,
+    ~0.2 s the first time in a process."""
+    files = [path] if os.path.isfile(path) else [
+        os.path.join(path, f)
+        for f in sorted(os.listdir(path))
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    ]
+    return pa.concat_tables(pq.ParquetFile(f).read(columns=columns) for f in files)
+
+
+def _write_dict(path: str, snap: _Snapshot, part: int) -> str:
+    """Count the just-written segment's ``term`` column on the driver
+    (pyarrow, no Spark job) into a term-sorted (term, df) file under
+    ``dicts/``, named after the version that will publish it, so a retry
+    after a crash overwrites its own orphan. Returns its path relative
+    to the index, for the segment's add."""
+    counts = pc.value_counts(_read_parquet(_part_dir(path, part), ["term"])["term"])
+    table = pa.table({"term": counts.field("values"), "df": counts.field("counts")})
+    rel = os.path.join("dicts", f"{snap.version + 1:020d}-{part}.parquet")
+    os.makedirs(os.path.join(path, "dicts"), exist_ok=True)
+    pq.write_table(table.sort_by("term"), os.path.join(path, rel))
+    return rel
+
+
 def _build_part(
     base: DataFrame, path: str, snap: _Snapshot, part: int, n_buckets: int,
     text_col: str, run_id: str, keep_positions: bool = False,
 ) -> None:
     """Build one partition's postings (with a positions column when
-    keep_positions) in ONE write, then commit its ``add`` (with the
-    index ``meta`` when it is the first segment). The same token groupBy
-    as indexing/build (posting_rows); dl is computed MAP-SIDE as
-    size(analyzed tokens). The add's rows/bytes/fingerprint/sum_dl ride
-    the data write as an Observation — no separate stats job."""
+    keep_positions) in ONE write and count its dictionary, then commit
+    its ``add`` (with the index ``meta`` when it is the first segment).
+    The same token groupBy as indexing/build (posting_rows); dl is
+    computed MAP-SIDE as size(analyzed tokens). The add's
+    rows/bytes/fingerprint/sum_dl ride the data write as an Observation
+    — no separate stats job."""
     t0 = time.time()
     obs = Observation()
     toks = (
@@ -311,6 +361,7 @@ def _build_part(
         "bytes": m.get("bytes", 0),
         "duration_ms": int((time.time() - t0) * 1000),
         "sum_dl": m.get("sum_dl", 0),
+        "dict": _write_dict(path, snap, part),
     }
     meta = {"keep_positions": keep_positions, "n_buckets": n_buckets}
     _commit(path, snap, ([] if snap.meta else [{"meta": meta}]) + [{"add": add}])
@@ -457,6 +508,82 @@ def read_resumable_postings(spark: SparkSession, path: str) -> DataFrame:
     return _read_segments(spark, path, snap, snap.live())
 
 
+# Segment dictionaries and tombstone ids read on the driver, keyed by
+# (path, mtime, size). Committed files never change, so a reopen reads
+# only what was committed since; the stat in the key keeps an index
+# rebuilt at the same path from hitting a stale entry. Bounded by the
+# total entry count (~100 B each); least recently used go first.
+_READS: OrderedDict = OrderedDict()
+_READS_MAX_ENTRIES = 1 << 20
+_READS_LOCK = threading.Lock()
+
+
+def _cached_read(path: str, read):
+    st = os.stat(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    with _READS_LOCK:
+        value = _READS.pop(key, None)
+        if value is None:
+            value = read(path)
+        _READS[key] = value
+        while len(_READS) > 1 and sum(map(len, _READS.values())) > _READS_MAX_ENTRIES:
+            _READS.popitem(last=False)
+    return value
+
+
+def _read_dict(file: str) -> dict:
+    t = _read_parquet(file)
+    return dict(zip(t["term"].to_pylist(), t["df"].to_pylist()))
+
+
+def _read_ids(tomb_dir: str) -> list:
+    return _read_parquet(tomb_dir, ["doc_id"])["doc_id"].to_pylist()
+
+
+def _load_dict(file: str) -> dict:
+    """A segment dictionary as {term: df}, through the driver cache."""
+    return _cached_read(file, _read_dict)
+
+
+def _df_lookup(dicts: list[dict]):
+    """term_dfs for a served handle: each term's df summed over the
+    segments' dictionaries; absent terms are left out (df 0)."""
+
+    def lookup(terms: list[str]) -> dict[str, int]:
+        dfs = {t: sum(d.get(t, 0) for d in dicts) for t in terms}
+        return {t: df for t, df in dfs.items() if df}
+
+    return lookup
+
+
+# Up to this many live tombstone rows (Σ rows over the delete actions),
+# serving drops dead rows with one literal predicate built on the
+# driver; above it, with a broadcast anti-join. The literal saves the
+# join's tombstone read and broadcast in every query but is parsed and
+# analyzed in every query, ~0.12 ms per row: on a 400-doc index (4
+# cores) it won by ~100 ms per query at 16-256 rows and broke even
+# between ~700 and ~1500 rows.
+_TOMB_LITERAL_MAX = 1024
+
+
+def _drop_dead(spark: SparkSession, path: str, snap: _Snapshot, post: DataFrame) -> DataFrame:
+    """Postings minus the rows the live tombstones kill (see
+    _dead_row_cond); a tombstone set small enough by the log's own
+    counts becomes a literal: each doc's widest applies_below, read on
+    the driver with pyarrow."""
+    if sum(t["rows"] for t in snap.tombs) > _TOMB_LITERAL_MAX:
+        # Spark picks a broadcast anti-join from the parquet size stats
+        # — no forced broadcast of an unbounded frame. The scope
+        # predicate rides the doc_id hash join as a residual filter.
+        tomb = _tombstones(spark, path, snap)
+        return post.join(tomb, _dead_row_cond(post, tomb), "left_anti")
+    dead: dict[int, int] = {}
+    for t in snap.tombs:
+        for d in _cached_read(os.path.join(path, t["dir"]), _read_ids):
+            dead[d] = max(dead.get(d, t["applies_below"]), t["applies_below"])
+    return post.where(Q.live_rows(dead)) if dead else post
+
+
 def serve_resumable_index(
     spark: SparkSession,
     path: str,
@@ -468,7 +595,10 @@ def serve_resumable_index(
     - postings (with the positions column, when built with
       keep_positions) read through the log: live segments only,
       compaction-removed ids excluded
-    - terms (df) from one postings aggregation
+    - df from the live segments' dictionaries: ``df_lookup`` sums them
+      on the driver for a query's terms (no Spark job), and ``terms``
+      (wildcard and fuzzy expansion) reads the dictionary files summed
+      by term
     - n_docs = Σ rows and avg_dl = Σ sum_dl / n_docs over the live
       adds — no Spark job. Every live copy of a doc counts (an
       unpurged upsert's old and new copy are two docs to the stats, as
@@ -476,9 +606,9 @@ def serve_resumable_index(
       batch builder's coalesced dl=0 semantics
     - n_buckets from the log's meta (bucket pruning needs the exact
       build-side value)
-    - tombstoned docs (delete_docs) are anti-joined out of postings,
-      but ONLY after the corpus stats (df, n_docs, avg_dl)
-      are derived — Lucene liveDocs semantics: a deleted doc stops
+    - tombstoned docs (delete_docs) are filtered out of postings and
+      doc_norms, but the corpus stats (df, n_docs, avg_dl) keep
+      counting them — Lucene liveDocs semantics: a deleted doc stops
       matching immediately, while docFreq/maxDoc keep counting it until
       a purging merge rewrites the segments (compact_segments
       purge_deletes=True). apply_deletes=False serves the raw segments.
@@ -494,25 +624,19 @@ def serve_resumable_index(
     n_docs = sum(a["rows"] for a in live.values())
     sum_dl = sum(a["sum_dl"] for a in live.values())
     avg_dl = sum_dl / n_docs if n_docs else 0.0
-    # df from the FULL committed postings (pre-tombstone), per Lucene
-    terms = post.groupBy("term").agg(F.count("*").cast("long").alias("df"))
-    doc_dl = post.select("doc_id", "dl").distinct()
-    tomb = _tombstones(spark, path, snap) if apply_deletes else None
-    if tomb is not None:
-        # tombstone sets are small relative to the corpus (a large
-        # backlog is what purge_deletes compactions are for), so Spark
-        # picks a broadcast anti-join from the parquet size stats — no
-        # forced broadcast of an unbounded frame. The scope predicate
-        # (orig_part < applies_below) rides the doc_id hash join as a
-        # residual filter.
-        post = post.join(tomb, _dead_row_cond(post, tomb), "left_anti")
+    dicts = [os.path.join(path, a["dict"]) for _, a in sorted(live.items())]
+    if apply_deletes and snap.tombs:
+        post = _drop_dead(spark, path, snap, post)
     return IndexTables(
         postings=post,
-        terms=terms,
-        doc_norms=doc_dl,
+        terms=lambda: (
+            spark.read.schema(_DICT_SCHEMA).parquet(*dicts).groupBy("term").agg(F.expr("sum(df) AS df"))
+        ),
+        doc_norms=lambda: post.select("doc_id", "dl").distinct(),
         n_docs=n_docs,
         avg_dl=avg_dl,
         n_buckets=int(snap.meta["n_buckets"]),
+        df_lookup=_df_lookup([_load_dict(f) for f in dicts]),
     )
 
 
@@ -697,6 +821,8 @@ def _compact(
     merged.drop("part").observe(obs, F.sum("tf").alias("sum_dl")).write.mode(
         "overwrite"
     ).parquet(_part_dir(path, new_part))
+    # counted from the merged rows: df drops deleted docs only at a purge
+    dict_rel = _write_dict(path, snap, new_part)
 
     add = {
         "id": new_part,
@@ -706,6 +832,7 @@ def _compact(
         "bytes": sum(live[p]["bytes"] for p in parts),
         "duration_ms": int((time.time() - t0) * 1000),
         "sum_dl": _metrics(obs).get("sum_dl", 0),
+        "dict": dict_rel,
     }
     actions = [{"add": add}, {"remove": sorted(parts)}]
     retired = []
@@ -761,13 +888,18 @@ def auto_compact(
 
 
 def gc_replaced_segments(spark: SparkSession, path: str) -> list[int]:
-    """Remove the data dirs of compaction-removed segments. Safe any
+    """Remove the data dirs and dictionaries of compaction-removed
+    segments, and the dictionaries of adds a refresh replaced. Safe any
     time after the compaction committed (readers already exclude
     them); the log is never rewritten, so this is idempotent and
     returns every removed id."""
-    replaced = sorted(_snapshot(path).removed)
+    snap = _snapshot(path)
+    replaced = sorted(snap.removed)
     for p in replaced:
         shutil.rmtree(_part_dir(path, p), ignore_errors=True)
+    for rel in [snap.segments[p]["dict"] for p in replaced] + snap.superseded:
+        if os.path.exists(os.path.join(path, rel)):
+            os.remove(os.path.join(path, rel))
     return replaced
 
 
@@ -788,8 +920,9 @@ def gc_replaced_segments(spark: SparkSession, path: str) -> list[int]:
 #   `delete` action naming it with its applies_below scope; the dir is
 #   named after the version that publishes it, so a retry after a crash
 #   overwrites its own orphan
-# - serve_resumable_index anti-joins the live tombstones out of
-#   postings (stats untouched)
+# - serve_resumable_index filters the live tombstones out of postings
+#   (stats untouched): a literal predicate while their recorded row
+#   count is small, a broadcast anti-join above it
 # - compact_segments(purge_deletes=True) is the purging merge; a FULL
 #   one commits a `retire` of every live tombstone dir in the same
 #   commit as the merged segment, then deletes those dirs
@@ -831,8 +964,9 @@ def _delete(
     ).observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(
         os.path.join(path, rel)
     )
-    _commit(path, snap, [{"delete": {"dir": rel, "applies_below": bound}}])
-    return _metrics(obs).get("n", 0)
+    n = _metrics(obs).get("n", 0)
+    _commit(path, snap, [{"delete": {"dir": rel, "applies_below": bound, "rows": n}}])
+    return n
 
 
 def _tombstones(spark: SparkSession, path: str, snap: _Snapshot) -> DataFrame | None:

@@ -83,7 +83,11 @@ def term_dfs(index: IndexTables, terms: list[str]) -> dict[str, int]:
     (r7: one tiny dictionary job per FIRST sighting of a term instead of
     a broadcast-build job in every query). Returns entries only for
     dictionary-PRESENT terms; absent terms are cached as 0 so repeated
-    queries for them stay job-free."""
+    queries for them stay job-free. An index with a ``df_lookup`` (a
+    served segment index) answers from it instead, with no job and no
+    cache."""
+    if index.df_lookup is not None:
+        return index.df_lookup(terms)
     cache = index._df_cache
     missing = [t for t in terms if t not in cache]
     if missing:

@@ -111,6 +111,17 @@ def candidates(buckets: list[int], terms: list[str]) -> str:
     return f"{in_list('bucket', buckets)} AND {in_list('term', terms)}"
 
 
+def live_rows(dead: dict[int, int]) -> str:
+    """Segment rows no tombstone kills, given ``dead`` = doc_id -> the
+    widest ``applies_below`` of its live tombstones: a row is dead iff
+    its doc_id is listed and its ``orig_part`` is below that bound. The
+    IN list becomes a hash-set probe, so a live row costs one lookup;
+    only a listed doc reads its bound from the map literal."""
+    ids = sorted(dead)
+    bounds = ", ".join(f"{lit(d)}, {lit(dead[d])}" for d in ids)
+    return f"NOT ({in_list('doc_id', ids)} AND orig_part < element_at(map({bounds}), doc_id))"
+
+
 def positions_score(cols: dict[str, str], dfs: dict[str, int], n_docs: int, avg_dl: float) -> str:
     """BM25 over per-term positions columns (phrase rows: one positions
     array per term, tf = its size, dl a column), summed from 0.0 in the

@@ -94,6 +94,28 @@ def test_writers_doc_norms_and_stats_identical(spark, null_text_docs, tmp_path):
     assert abs(stats["avg_dl"] - 7 / 5) < 1e-9
 
 
+def test_write_index_job_count(spark, tmp_path):
+    """A small write_index submits 12 jobs. The tail persists the
+    dictionary aggregation once and writes terms/ before terms_rev/ on
+    one thread, so the aggregation is computed by one job; started
+    together, the two dictionary writes each computed it (13 jobs)."""
+    import uuid
+
+    from elasticsearch_assets_spark.corpus import generate_corpus
+    from elasticsearch_assets_spark.indexing.build import build_index, write_index
+
+    index = build_index(generate_corpus(spark, 360, seed=5), keep_positions=True, n_buckets=4)
+    sc = spark.sparkContext
+    group = f"write-index-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "write_index job count")
+    try:
+        write_index(index, str(tmp_path / "idx"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        index.unpersist()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 12
+
+
 def test_blocks_write_layout_invariants(spark, tmp_path):
     """pack_and_write_blocks must honor the SAME contracts as the
     postings write (VERDICT r4 defect 1): ≤ WRITE_FANOUT files per

@@ -8,6 +8,9 @@
   a purging merge, the served ``terms`` and the query path's df lookup
   equal a fresh aggregation over the committed postings, and after the
   purge a two-term match equals the BM25 oracle over the live docs
+- the same holds after every other kind of commit (build, in-place
+  refresh, ingest, partial merge, GC, a crashed ingest), and serving
+  reads the dictionaries of the live adds only
 """
 
 from __future__ import annotations
@@ -241,3 +244,142 @@ def test_reopen_never_serves_stale_df(spark, tmp_path):
         for r in qx.match_query(ix, text, k=1000).collect()
     ]
     assert got and canon(got) == canon(oracle.match(text, k=1000))
+
+
+def test_served_df_through_lifecycle(spark, tmp_path, monkeypatch):
+    """After each kind of commit the served df (``terms`` and
+    ``term_dfs``) equals a fresh aggregation over the committed
+    postings, an absent term reads 0, and serving reads exactly the
+    dictionaries the live adds name: never one of a merged-away,
+    refresh-replaced or uncommitted segment."""
+    from urllib.parse import urlparse
+
+    pdf = generate_corpus_pandas(60, seed=29)
+    idx = str(tmp_path / "idx")
+    dict_dir = os.path.join(idx, "dicts")
+    loaded, never = [], set()
+    real_load = M._load_dict
+
+    def load(file):
+        loaded.append(file)
+        return real_load(file)
+
+    monkeypatch.setattr(M, "_load_dict", load)
+
+    def dicts_of(adds):
+        return {os.path.join(idx, a["dict"]) for a in adds}
+
+    def check():
+        loaded.clear()
+        ix = M.serve_resumable_index(spark, idx)
+        fresh = {
+            r["term"]: r["df"]
+            for r in M.read_resumable_postings(spark, idx)
+            .groupBy("term")
+            .agg(F.count("*").alias("df"))
+            .collect()
+        }
+        assert {r["term"]: r["df"] for r in ix.terms.collect()} == fresh
+        assert qx.term_dfs(ix, sorted(fresh)) == fresh
+        some = min(fresh)
+        assert qx.term_dfs(ix, ["zzzabsent", some]) == {some: fresh[some]}
+        assert not ix._df_cache
+        live = dicts_of(M._snapshot(idx).live().values())
+        assert set(loaded) == live
+        assert {urlparse(f).path for f in ix.terms.inputFiles()} == live
+        assert not live & never
+
+    docs = spark.createDataFrame(pdf.iloc[:40])
+    M.build_index_resumable(docs, idx, n_parts=4, n_buckets=8)
+    check()
+
+    edited = pdf.iloc[:40].copy()
+    edited.iloc[0, edited.columns.get_loc("content")] += " zzzrefreshed"
+    before = M._snapshot(idx).segments
+    rebuilt = M.refresh_index(spark.createDataFrame(edited), idx, n_parts=4, n_buckets=8)
+    assert len(rebuilt) == 1
+    never |= dicts_of(before[p] for p in rebuilt)
+    check()
+
+    upd = pdf.iloc[1:4].copy()
+    upd["content"] = upd["content"] + " zzzupserted"
+    M.upsert_segment_batch(spark.createDataFrame(upd), idx, batch_id=4, n_parts=1, n_buckets=8)
+    check()
+    M.ingest_segment_batch(spark.createDataFrame(pdf.iloc[40:]), idx, batch_id=5, n_parts=1, n_buckets=8)
+    check()
+    dead = [r["doc_id"] for r in with_doc_id(spark.createDataFrame(pdf.iloc[40:43])).collect()]
+    M.delete_docs(spark, idx, dead)
+    check()
+
+    M.compact_segments(spark, idx, [0, 1], new_part=M.next_compact_id(spark, idx))
+    snap = M._snapshot(idx)
+    never |= dicts_of(snap.segments[p] for p in (0, 1))
+    check()
+    M.compact_segments(
+        spark, idx, sorted(M.done_parts(spark, idx)),
+        new_part=M.next_compact_id(spark, idx), purge_deletes=True,
+    )
+    snap = M._snapshot(idx)
+    never |= dicts_of(snap.segments[p] for p in snap.removed)
+    check()
+    assert M.gc_replaced_segments(spark, idx)
+    assert not any(os.path.exists(f) for f in never)
+    check()
+
+    def crash(target, obj):
+        raise RuntimeError("injected commit crash")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(M, "write_exclusive", crash)
+        with pytest.raises(RuntimeError, match="injected commit crash"):
+            M.ingest_segment_batch(
+                spark.createDataFrame(upd), idx, batch_id=6, n_parts=1, n_buckets=8
+            )
+    orphans = {os.path.join(dict_dir, f) for f in os.listdir(dict_dir)} - dicts_of(
+        M._snapshot(idx).segments.values()
+    )
+    assert orphans
+    never |= orphans
+    check()
+
+
+def test_driver_read_cache_is_bounded_and_thread_safe(tmp_path, monkeypatch):
+    """The driver-side cache of dictionary and tombstone reads, hit from
+    many threads at once: every read returns its own file's contents and
+    the cache never holds more than its entry bound."""
+    import sys
+    import threading
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files = []
+    for i in range(12):
+        f = str(tmp_path / f"d{i}.parquet")
+        pq.write_table(pa.table({"term": [f"t{i}", f"u{i}"], "df": [i, i + 1]}), f)
+        files.append(f)
+    monkeypatch.setattr(M, "_READS", type(M._READS)())
+    monkeypatch.setattr(M, "_READS_MAX_ENTRIES", 9)
+    wrong, sizes = [], []
+
+    def reader(k):
+        for j in range(60):
+            i = (k * 7 + j) % len(files)
+            if M._load_dict(files[i]) != {f"t{i}": i, f"u{i}": i + 1}:
+                wrong.append(i)
+            with M._READS_LOCK:
+                sizes.append(sum(map(len, M._READS.values())))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=reader, args=(k,)) for k in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not wrong
+    assert len(sizes) == 16 * 60 and max(sizes) <= 9

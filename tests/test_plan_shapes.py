@@ -715,3 +715,85 @@ def test_same_shape_queries_reuse_compiled_code(spark, disk_index):
         shape(*words[3:6]).collect()
         shape(*words[6:9]).collect()
         assert compiles.getCount() == before, name
+
+
+@pytest.fixture(scope="module")
+def segment_index(spark, tmp_path_factory):
+    """A served segment index whose tombstones are scoped and outlive a
+    merge: two batches, an upsert of 8 batch-0 docs (applies_below=4),
+    3 unscoped deletes, then a merge of the old copies' segments with
+    the new copies' (rows keep their orig_part)."""
+    from elasticsearch_assets_spark.corpus import generate_corpus_pandas
+    from elasticsearch_assets_spark.plans import manifest as M
+
+    pdf = generate_corpus_pandas(80, seed=13)
+    idx = str(tmp_path_factory.mktemp("seg") / "idx")
+    for b in (0, 1):
+        M.ingest_segment_batch(
+            spark.createDataFrame(pdf.iloc[b * 40:(b + 1) * 40]), idx,
+            batch_id=b, n_parts=2, n_buckets=8, keep_positions=True,
+        )
+    upd = pdf.iloc[:8].copy()
+    upd["content"] = upd["content"] + " zzzupserted"
+    M.upsert_segment_batch(
+        spark.createDataFrame(upd), idx, batch_id=2, n_parts=2, n_buckets=8,
+        keep_positions=True,
+    )
+    dead = M.read_resumable_postings(spark, idx).where("part = 3").select("doc_id").distinct()
+    M.delete_docs(spark, idx, dead.orderBy("doc_id").limit(3))
+    M.compact_segments(spark, idx, [0, 1, 4, 5], new_part=M.next_compact_id(spark, idx))
+    return idx
+
+
+def _jobs_of(spark, fn):
+    """fn's result and the number of Spark jobs it submitted."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_served_segment_index_plans_with_no_job(spark, segment_index):
+    """Reopening a segment index and planning a match query run no
+    Spark job: df is summed from the segments' dictionaries on the
+    driver, and the small tombstone set is a literal predicate."""
+    from elasticsearch_assets_spark.plans import manifest as M
+
+    ix, jobs = _jobs_of(spark, lambda: M.serve_resumable_index(spark, segment_index))
+    assert jobs == 0
+    _, jobs = _jobs_of(spark, lambda: qx.match_query(ix, "zzzupserted load config zzzabsent", k=10))
+    assert jobs == 0
+
+
+def test_tombstone_literal_and_anti_join_agree(spark, segment_index, monkeypatch):
+    """Under _TOMB_LITERAL_MAX the tombstones are a literal predicate:
+    the executed plan reads no deletes dir and has no join. Above it
+    the broadcast anti-join stays. Both serve row-identical scores,
+    with the upsert's scope kept through the merge."""
+    from elasticsearch_assets_spark.plans import manifest as M
+
+    texts = ["zzzupserted", "load config value", "return data error"]
+
+    def served():
+        ix = M.serve_resumable_index(spark, segment_index)
+        qs = [qx.match_query(ix, t, k=1000) for t in texts]
+        rows = [sorted((r["doc_id"], repr(r["score"])) for r in q.collect()) for q in qs]
+        return qs, rows
+
+    literal, want = served()
+    assert want[0] and len(want[0]) == 8
+    for q in literal:
+        assert _executed_scans(q, "deletes") == 0
+        assert "Join" not in _plan(q)
+    monkeypatch.setattr(M, "_TOMB_LITERAL_MAX", 0)
+    joined, got = served()
+    for q in joined:
+        assert _executed_scans(q, "deletes") >= 1
+        assert "LeftAnti" in _plan(q)
+    assert got == want

@@ -184,3 +184,25 @@ def test_full_purge_retires_tombstones_and_matches_batch_build(
     ref = M.serve_resumable_index(spark, surv_idx)
     assert served.n_docs == ref.n_docs
     assert served.avg_dl == ref.avg_dl
+
+
+def test_negation_and_count_skip_deleted_docs(spark, tmp_path):
+    """A served index's doc universe (doc_norms, what a pure NOT query
+    and the planner's filters range over) holds live docs only: 40
+    docs, 3 deleted and 2 upserted leave 37, each once."""
+    from elasticsearch_assets_spark.indexing.build import with_doc_id
+    from elasticsearch_assets_spark.query.planner import QueryPlanner
+
+    pdf = generate_corpus_pandas(40, seed=3)
+    idx = str(tmp_path / "idx")
+    M.ingest_segment_batch(spark.createDataFrame(pdf), idx, batch_id=0, n_parts=2, n_buckets=8)
+    ids = [r["doc_id"] for r in with_doc_id(spark.createDataFrame(pdf)).collect()]
+    M.delete_docs(spark, idx, ids[:3])
+    upd = pdf.iloc[3:5].copy()
+    upd["content"] = upd["content"] + " zzzupserted extra words"
+    M.upsert_segment_batch(spark.createDataFrame(upd), idx, batch_id=1, n_parts=2, n_buckets=8)
+
+    planner = QueryPlanner(M.serve_resumable_index(spark, idx))
+    got = [r["doc_id"] for r in planner.query_string("NOT zzzabsent", k=1000).collect()]
+    assert sorted(got) == sorted(ids[3:])
+    assert planner.count("NOT zzzabsent") == 37
